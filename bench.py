@@ -15,6 +15,11 @@ output columns below a count, so scan→select shapes were timed without
 computing their projections (round-2 judge finding #2). A warmup pass
 on the smallest table absorbs JVM/codegen startup so the numbers
 measure the plans, not session bring-up.
+
+Each query's time is its min over two interleaved passes, for reading
+one tree's per-query costs. Speed changes are judged on interleaved
+parent/change pairs of ``perfbench/run.py`` (BENCHMARK.json), not by
+comparing this script's totals across runs.
 """
 
 from __future__ import annotations
@@ -402,124 +407,6 @@ BENCH_EXCLUDED = {
 }
 
 
-# Pinned drift-calibration set (round-7 judge item #3): a fixed,
-# plan-diverse probe timed FIRST every run and stamped into the output
-# as calibration_sec. Round-over-round comparisons normalize by the
-# calibration ratio instead of an ad-hoc same-code rerun (ROUND7_NOTES
-# §7 did that by hand; this makes it structural).
-#
-# Membership policy (revised round 10, judge item #7): probes must be
-# PLAN-STABLE — drawn only from queries whose implementation closure
-# (plans/fingerprint.py) lives in modules not under active development,
-# so a probe's own plan change can never masquerade as machine drift
-# (round 9: dedup_minhash_lsh gained the shingle kernel and had to be
-# median-ed out). tests/test_bench_policy.py asserts every probe's
-# fingerprint matches the frozen QUERY_FPRINTS_HEAD.json snapshot — a
-# same-round probe-plan change fails CI instead of contaminating the
-# ratio. The round-10 swap (dedup_minhash_lsh, pack_sequences →
-# q5_region_revenue, pandas_mad_by_type) degrades one round of deltas
-# gracefully: _normalized_delta ratios are computed over the probes
-# COMMON to both rounds (3 survivors for r10-vs-r9), full 5 from r11.
-CALIBRATION_QUERIES = [
-    "q1_pricing_summary",   # scan-heavy agg, whole-stage codegen
-    # round 12 (r11 verdict item #1): knn_topk's plan changed mid-round-11
-    # (the vector.py cosine nullif rewrite reached it), breaking the probe
-    # freeze — tests caught it, the swap didn't happen, and the r11
-    # normalization chain ran with one contaminated probe (conservative
-    # direction: a faster probe understates the normalized improvement).
-    # Swapped for q9_product_profit: 5-table join + agg, whole-stage
-    # codegen, closure = {plans.catalog} only (no operator/function
-    # modules), so future kernel work cannot drift it. r12-vs-r11 deltas
-    # normalize over the 5 surviving common probes.
-    "q9_product_profit",    # 5-table join chain + agg, codegen JVM path
-    "q5_region_revenue",    # multi-table join chain, shuffle path
-    "events_hourly",        # timestamp bucketing window agg
-    "pandas_mad_by_type",   # GROUPED_AGG pandas UDF, Python workers
-    # round 11 (judge task #2): second Python-worker-path probe so that
-    # class has in-run redundancy — r10's drift hit Python workers
-    # 1.7-2.5x while JVM queries ran flat, and the 3 surviving probes
-    # were all JVM-path, so the normalization could not see it.
-    # functions/sentences.py is not under active development (probe
-    # plan-stability policy above).
-    "sentence_split_udtf",  # Arrow Python UDTF, Python workers
-]
-
-# Execution-path class per probe (round-11 judge task #2): machine
-# drift is not uniform across paths — contention hits the Python
-# worker pool (mapInPandas / GROUPED_AGG / UDTF, Arrow IPC + pickled
-# control plane) disproportionately vs whole-stage-codegen JVM stages.
-# _normalized_delta normalizes each benched query by the probe ratios
-# of ITS OWN path class (benched queries are classified at run time
-# from their physical plan, see _exec_path).
-CALIBRATION_PATHS = {
-    "q1_pricing_summary": "jvm",
-    "q9_product_profit": "jvm",
-    "q5_region_revenue": "jvm",
-    "events_hourly": "jvm",
-    "pandas_mad_by_type": "python",
-    "sentence_split_udtf": "python",
-}
-
-# Quiet-floor set (round-11 judge task #1): the ~20 most expensive
-# headline entries by the r10 driver table — together ≈33% of raw
-# common-209 wall time, and the entire population in which the r10
-# driver-vs-builder discrepancy (+7.16% vs −3.0% normalized)
-# concentrated. tools/heavy_quiet.py --tier headline times these on a
-# quiet box (min-of-N, probe-bracketed, cross-run min-merged at the
-# same commit) into QUIET_r{N}.json; _floor_cross_check stamps the
-# driver's per-query reading against that committed floor so a
-# contended driver run is adjudicated per query instead of argued
-# about per round.
-QUIET_FLOOR_QUERIES = [
-    "unigram_lm_em_round",
-    "winnowing_fingerprints",
-    "viterbi_segment_cost",
-    "winnow_dup_pairs",
-    "semantic_decontamination",
-    "knn_hubness_report",
-    "dedup_embedding_cosine",
-    "parallel_text_mining",
-    "doremi_mixture_update",
-    "unigram_lm_prune_round",
-    "viterbi_segment_chunked",
-    "ccnet_ppl_buckets",
-    "lm_bigram_xent_by_lang",
-    "orders_market_basket",
-    "pq_adc_knn_recall",
-    "table_checksum_audit",
-    "ingest_pipeline",
-    "embedding_quantize_int8",
-    "dedup_minhash_lsh",
-    "dedup_oph_pairs",
-]
-
-# physical-plan markers of Python-worker execution (Arrow-batched
-# pandas UDF / mapInPandas / applyInPandas / UDTF / row-pickling UDF)
-_PY_PLAN_MARKERS = (
-    "InPandas", "ArrowEvalPython", "BatchEvalPython", "PythonUDTF",
-    "MapInArrow", "EvalPythonUDTF",
-    # Spark 4.1 names the GROUPED_AGG pandas-UDF node ArrowAggregatePython
-    "AggregatePython",
-)
-
-
-def _exec_path(df) -> str:
-    """'python' if the query's physical plan runs any Python-worker
-    stage, else 'jvm'. Read from the executed plan of the DataFrame the
-    registry builder returns — for multi-job queries this sees the
-    final job's plan, which is the right label for the dominant serve
-    path (the heavy CC loops are normalized by their own tier anyway).
-    """
-    try:
-        plan = df._jdf.queryExecution().executedPlan().toString()
-    except Exception:
-        try:
-            plan = df._jdf.queryExecution().toString()
-        except Exception:
-            return "unknown"
-    return "python" if any(m in plan for m in _PY_PLAN_MARKERS) else "jvm"
-
-
 def _timed_min(spark, sf_dir: str, names: list[str],
                passes: int = 2) -> dict[str, float]:
     """Per-query min-of-N wall time through the noop sink (full
@@ -533,30 +420,6 @@ def _timed_min(spark, sf_dir: str, names: list[str],
             dt = time.perf_counter() - t0
             out[name] = round(min(out.get(name, dt), dt), 3)
     return out
-
-
-def _timed_probes(spark, sf_dir: str) -> dict[str, float]:
-    """Calibration probes timed with the catalog plan cache OFF.
-
-    Round 12 memoized per-session scan-plan construction
-    (catalog.load_table / films_view), which removes ~20-50 ms of py4j
-    construction from every builder call INCLUDING the probes'. The
-    probes exist to measure MACHINE drift round-over-round; letting the
-    memo speed them up would launder an implementation win into the
-    drift ratio (exactly the knn_topk failure mode, in time instead of
-    plan shape). Fresh reads keep a probe's construction cost identical
-    to every prior round, so probe ratios stay a machine instrument.
-    This is a measurement-methodology fix, documented in
-    OPTIMIZATION_r12.md; the timed-query protocol (_timed_min through
-    the noop sink) is unchanged."""
-    import movievectorsearch_spark.catalog as _cat
-
-    prev = _cat.PLAN_CACHE_ENABLED
-    _cat.PLAN_CACHE_ENABLED = False
-    try:
-        return _timed_min(spark, sf_dir, CALIBRATION_QUERIES)
-    finally:
-        _cat.PLAN_CACHE_ENABLED = prev
 
 
 def _round_number() -> int:
@@ -573,225 +436,6 @@ def _round_number() -> int:
     return max(rounds, default=0) + 1
 
 
-def _normalized_delta(detail: dict, here: str, round_no: int) -> dict | None:
-    """Calibration-normalized round-over-round delta vs the previous
-    round's committed BENCH_DETAIL_r{N-1}.json (round-8 judge item #4:
-    the r8 run STARTED in a ~1.4x slow machine window and recovered,
-    inflating every early query; the head/mid/end calibration probes
-    caught it by hand — this makes the normalization automatic).
-
-    Per-query: cur_norm = cur / cal_ratio where cal_ratio is the MEDIAN
-    of the three segment ratios (head, mid, end) between runs — the
-    median resists a single contaminated probe window. Only queries
-    present in both rounds enter the common table."""
-    prev_path = os.path.join(here, f"BENCH_DETAIL_r{round_no - 1:02d}.json")
-    if not os.path.exists(prev_path):
-        return None
-    try:
-        with open(prev_path) as f:
-            prev = json.load(f)
-    except (OSError, ValueError):
-        return None
-    if prev.get("sf") != detail.get("sf"):
-        return None  # cross-sf deltas are meaningless
-    def _median(vals):
-        s = sorted(vals)
-        m = len(s) // 2
-        return s[m] if len(s) % 2 else (s[m - 1] + s[m]) / 2
-
-    # Per-PROBE ratios, not total/total: a calibration probe whose PLAN
-    # changed between rounds (round 9: dedup_minhash_lsh gained the
-    # shingle kernel) would otherwise launder its own speedup into the
-    # "machine" ratio and inflate every other query's normalized time.
-    # The per-segment median over the 5 probes is robust to 1-2 changed
-    # probes; probes deviating >15% from their segment median are
-    # reported as outliers so a changed-plan probe is visible.
-    seg_ratios, probe_ratios, outliers = {}, {}, {}
-    for seg, key in (("head", "calibration"),
-                     ("mid", "calibration_mid"),
-                     ("end", "calibration_end")):
-        cur_m, prev_m = detail.get(key) or {}, prev.get(key) or {}
-        common_p = [n for n in cur_m if prev_m.get(n)]
-        if common_p:
-            rs = {n: round(cur_m[n] / prev_m[n], 4) for n in common_p}
-            probe_ratios[seg] = rs
-            med = _median(rs.values())
-            seg_ratios[seg] = round(med, 4)
-            outliers[seg] = {
-                n: r for n, r in rs.items() if abs(r / med - 1) > 0.15
-            }
-        elif prev.get(key + "_sec"):
-            seg_ratios[seg] = round(
-                detail[key + "_sec"] / prev[key + "_sec"], 4
-            )
-    if not seg_ratios:
-        return None
-    cal_ratio = round(_median(seg_ratios.values()), 4)
-
-    # Tier-specific ratios (round-10 judge item #1): the headline tier
-    # executes between the head and mid probes, the heavy tier between
-    # the mid and end probes — normalizing the heavy tier by the
-    # headline-bracketing median left a late-run contention window
-    # invisible (r9's heavy "+28.2%" was unattributable: three
-    # same-tree runs spanned 60.5/75.6/95.9 s). Each tier's delta is
-    # normalized by the median of the per-probe ratios from ITS OWN
-    # bracketing probe pair; the overall 3-segment median is kept as
-    # calibration_ratio for the stdout line and cross-round context.
-    def _bracket_vals(segs: tuple[str, ...], path: str | None = None):
-        return [
-            r
-            for s in segs
-            for n, r in probe_ratios.get(s, {}).items()
-            if path is None or CALIBRATION_PATHS.get(n) == path
-        ]
-
-    def _bracket_ratio(segs: tuple[str, ...]) -> float | None:
-        vals = _bracket_vals(segs)
-        if not vals:
-            vals = [seg_ratios[s] for s in segs if s in seg_ratios]
-        return round(_median(vals), 4) if vals else None
-
-    tier_brackets = {"common": ("head", "mid"), "heavy": ("mid", "end")}
-    # execution-path class per benched query, recorded by main() from
-    # each query's physical plan (round-11 judge task #2): drift can be
-    # path-specific — r10's contention hit Python-worker queries
-    # 1.7-2.5x while JVM queries ran flat, and a single per-tier median
-    # under-corrects exactly that mode. Each query is normalized by the
-    # median of ITS path's probe ratios from the tier's bracketing pair;
-    # queries with no path label (older artifacts) fall back to the
-    # all-probe tier ratio, so pre-r11 comparisons are unchanged.
-    paths = detail.get("paths") or {}
-    out: dict = {"prev_round": round_no - 1, "segment_ratios": seg_ratios,
-                 "probe_ratios": probe_ratios,
-                 "probe_outliers": {k: v for k, v in outliers.items() if v},
-                 "calibration_ratio": cal_ratio}
-    for tier, cur_key, prev_key in (("common", "queries", "queries"),
-                                    ("heavy", "heavy", "heavy")):
-        cur_t, prev_t = detail.get(cur_key, {}), prev.get(prev_key, {})
-        common = sorted(set(cur_t) & set(prev_t))
-        if not common:
-            continue
-        ratio = _bracket_ratio(tier_brackets[tier]) or cal_ratio
-        path_ratios = {}
-        for p in ("jvm", "python"):
-            vals = _bracket_vals(tier_brackets[tier], p)
-            if vals:
-                path_ratios[p] = round(_median(vals), 4)
-
-        def _ratio_for(name: str) -> float:
-            return path_ratios.get(paths.get(name)) or ratio
-
-        deltas = {
-            n: round(cur_t[n] / _ratio_for(n) - prev_t[n], 3)
-            for n in common
-        }
-        raw = round(sum(cur_t[n] for n in common), 3)
-        norm = round(sum(cur_t[n] / _ratio_for(n) for n in common), 3)
-        was = round(sum(prev_t[n] for n in common), 3)
-        # per-path aggregates: the audit trail for path-specific drift
-        path_totals = {}
-        for p in ("jvm", "python", "unknown"):
-            ns = [n for n in common if paths.get(n) == p]
-            if not ns:
-                continue
-            p_raw = round(sum(cur_t[n] for n in ns), 3)
-            p_norm = round(sum(cur_t[n] / _ratio_for(n) for n in ns), 3)
-            p_was = round(sum(prev_t[n] for n in ns), 3)
-            path_totals[p] = {
-                "n": len(ns),
-                "ratio": path_ratios.get(p, ratio),
-                "prev_total_sec": p_was,
-                "cur_total_raw_sec": p_raw,
-                "cur_total_normalized_sec": p_norm,
-                "normalized_delta_pct": round(
-                    100 * (p_norm - p_was) / p_was, 2),
-            }
-        ranked = sorted(deltas.items(), key=lambda kv: kv[1])
-        # trim each list at the zero crossing: with a small tier every
-        # delta can share a sign, and ranked[:8] would list the smallest
-        # regressions as "improvements" (r9 heavy block did exactly that)
-        improvements = [(n, d) for n, d in ranked[:8] if d < 0]
-        regressions = [(n, d) for n, d in ranked[-8:][::-1] if d > 0]
-        out[tier] = {
-            "n_common": len(common),
-            "tier_ratio": ratio,
-            "tier_probe_pair": list(tier_brackets[tier]),
-            "path_ratios": path_ratios,
-            "path_totals": path_totals,
-            "n_path_classified": sum(1 for n in common if n in paths),
-            "prev_total_sec": was,
-            "cur_total_raw_sec": raw,
-            "cur_total_normalized_sec": norm,
-            "normalized_delta_sec": round(norm - was, 3),
-            "normalized_delta_pct": round(100 * (norm - was) / was, 2),
-            "top_improvements": dict(improvements),
-            "top_regressions": dict(regressions),
-        }
-    return out
-
-
-def _floor_cross_check(detail: dict, here: str, round_no: int) -> dict | None:
-    """Stamp the run's per-query readings against the committed
-    quiet-box floors (round-11 judge task #1): QUIET_r{N}.json for the
-    headline floor set, HEAVY_QUIET_r{N}.json for the heavy tier —
-    produced by tools/heavy_quiet.py (min-of-N, probe-bracketed,
-    cross-run min-merged). This is the instrument that settled the r9
-    heavy-tier "+28.2%" as drift: a driver reading far above a
-    committed same-tree floor on untouched queries is contention, not
-    regression; a reading above floor on a changed query is real. The
-    newest artifact at or before this round is used (floors are
-    committed at round end, so the driver's round-N run compares
-    against the round-N floor of the same tree)."""
-    import re
-
-    out = {}
-    for tier, prefix, cur_key in (("common", "QUIET", "queries"),
-                                  ("heavy", "HEAVY_QUIET", "heavy")):
-        best = None
-        for fn in os.listdir(here):
-            m = re.fullmatch(prefix + r"_r(\d+)\.json", fn)
-            if m and int(m.group(1)) <= round_no:
-                if best is None or int(m.group(1)) > best[0]:
-                    best = (int(m.group(1)), fn)
-        if best is None:
-            continue
-        try:
-            with open(os.path.join(here, best[1])) as f:
-                art = json.load(f)
-        except (OSError, ValueError):
-            continue
-        floor_sf = str(art.get("sf", "")).rstrip("/").rsplit("sf", 1)[-1]
-        if floor_sf and str(detail.get("sf")) != floor_sf:
-            continue  # cross-sf floors are meaningless
-        cur_t = detail.get(cur_key, {})
-        per_query = {}
-        for name, row in art.get("queries", {}).items():
-            if name in cur_t and isinstance(row, dict) and row.get("min"):
-                per_query[name] = {
-                    "floor": row["min"],
-                    "cur": cur_t[name],
-                    "ratio": round(cur_t[name] / row["min"], 3),
-                }
-        if not per_query:
-            continue
-        total_floor = round(sum(v["floor"] for v in per_query.values()), 3)
-        total_cur = round(sum(v["cur"] for v in per_query.values()), 3)
-        out[tier] = {
-            "artifact": best[1],
-            "floor_round": best[0],
-            "floor_commit": art.get("commit"),
-            "floor_runs": art.get("runs"),
-            "n": len(per_query),
-            "total_floor_sec": total_floor,
-            "total_cur_sec": total_cur,
-            "total_ratio": round(total_cur / total_floor, 3),
-            "above_1p5x": sorted(
-                n for n, v in per_query.items() if v["ratio"] >= 1.5),
-            "per_query": per_query,
-        }
-    return out or None
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -800,14 +444,6 @@ def main() -> None:
 
     # warmup: touch the session + codegen paths once
     Q.QUERIES["count_scan"]["spark"](spark, sf_dir).collect()
-
-    # drift calibration: pinned probe, timed first, own warmup pass
-    for name in CALIBRATION_QUERIES:
-        Q.QUERIES[name]["spark"](spark, sf_dir).count()
-    calibration = _timed_probes(spark, sf_dir)
-    calibration_sec = round(sum(calibration.values()), 3)
-    print(f"# calibration: {calibration_sec:.3f}s "
-          + json.dumps(calibration), file=sys.stderr)
 
     # two timed passes, min per query: the host shows intermittent
     # multi-second stalls (VM steal) — interleaving decorrelates the
@@ -822,40 +458,20 @@ def main() -> None:
     # projection through a noop write — every output column computed and
     # serialized executor-side, nothing driver-collected.
     rows: dict[str, int] = {}
-    paths: dict[str, str] = {}
     for name in BENCH_QUERIES:
-        df = Q.QUERIES[name]["spark"](spark, sf_dir)
-        rows[name] = df.count()
-        paths[name] = _exec_path(df)
+        rows[name] = Q.QUERIES[name]["spark"](spark, sf_dir).count()
     timings = _timed_min(spark, sf_dir, BENCH_QUERIES)
     for name in BENCH_QUERIES:
         print(f"# {name}: {timings[name]:.3f}s ({rows[name]} rows)", file=sys.stderr)
 
-    # mid-suite calibration re-probe (ROUND8_NOTES §9 found the box's
-    # steal windows move WITHIN a 20-minute run, which the run-head
-    # probe alone cannot capture): same frozen probe, timed again after
-    # the headline tier and once more after the heavy tier, so a reader
-    # can see whether the machine drifted DURING the measurement.
-    calibration_mid = _timed_probes(spark, sf_dir)
-    calibration_mid_sec = round(sum(calibration_mid.values()), 3)
-    print(f"# calibration (post-headline): {calibration_mid_sec:.3f}s",
-          file=sys.stderr)
-
     # heavy tier: same warmup + 2-pass-min protocol, separate total
     heavy_rows: dict[str, int] = {}
     for name in BENCH_HEAVY:
-        df = Q.QUERIES[name]["spark"](spark, sf_dir)
-        heavy_rows[name] = df.count()
-        paths[name] = _exec_path(df)
+        heavy_rows[name] = Q.QUERIES[name]["spark"](spark, sf_dir).count()
     heavy = _timed_min(spark, sf_dir, BENCH_HEAVY)
     for name in BENCH_HEAVY:
         print(f"# heavy {name}: {heavy[name]:.3f}s ({heavy_rows[name]} rows)",
               file=sys.stderr)
-
-    calibration_end = _timed_probes(spark, sf_dir)
-    calibration_end_sec = round(sum(calibration_end.values()), 3)
-    print(f"# calibration (post-heavy): {calibration_end_sec:.3f}s",
-          file=sys.stderr)
 
     total = round(sum(timings.values()), 3)
     heavy_total = round(sum(heavy.values()), 3)
@@ -870,32 +486,9 @@ def main() -> None:
     slow5 = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:5])
     detail = {"metric": "headline_query_wall_time", "value": total,
               "unit": "sec", "sf": sf_val, "queries": timings, "rows": rows,
-              "paths": paths,
               "slowest5": slow5, "heavy": heavy, "heavy_rows": heavy_rows,
               "heavy_total_sec": heavy_total,
-              "calibration_sec": calibration_sec,
-              "calibration": calibration,
-              "calibration_mid_sec": calibration_mid_sec,
-              "calibration_end_sec": calibration_end_sec,
-              "calibration_mid": calibration_mid,
-              "calibration_end": calibration_end,
               "excluded": BENCH_EXCLUDED}
-    round_no = _round_number()
-    norm = _normalized_delta(detail, os.path.dirname(os.path.abspath(__file__)),
-                             round_no)
-    if norm is not None:
-        detail["normalized_common_delta"] = norm
-        print("# normalized_common_delta: " + json.dumps(
-            {k: v for k, v in norm.items() if k != "common"}
-            | {"common": {k: v for k, v in norm.get("common", {}).items()
-                          if not k.startswith("top_")}}), file=sys.stderr)
-    floors = _floor_cross_check(
-        detail, os.path.dirname(os.path.abspath(__file__)), round_no)
-    if floors is not None:
-        detail["floor_cross_check"] = floors
-        print("# floor_cross_check: " + json.dumps(
-            {t: {k: v for k, v in blk.items() if k != "per_query"}
-             for t, blk in floors.items()}), file=sys.stderr)
     # fold in the latest scaling-probe table (tools/scaling_probe.py:
     # per-query exponent from an 8x blown-up copy of the big tables)
     scaling_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
@@ -912,7 +505,7 @@ def main() -> None:
     # overwritten each round, so a full round-over-round per-query delta
     # table needed git archaeology; stamp a committed copy per round.
     round_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                              f"BENCH_DETAIL_r{round_no:02d}.json")
+                              f"BENCH_DETAIL_r{_round_number():02d}.json")
     with open(round_path, "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)
     print(
@@ -926,29 +519,6 @@ def main() -> None:
                 "queries": slow5,
                 "heavy_total_sec": heavy_total,
                 "n_heavy": len(heavy),
-                "calibration_sec": calibration_sec,
-                "calibration_mid_sec": calibration_mid_sec,
-                "calibration_end_sec": calibration_end_sec,
-                **(
-                    {
-                        "calibration_ratio_vs_prev": norm["calibration_ratio"],
-                        "normalized_common_delta_pct": norm["common"][
-                            "normalized_delta_pct"
-                        ],
-                    }
-                    if norm is not None and "common" in norm
-                    else {}
-                ),
-                **(
-                    {
-                        "floor_total_ratio": {
-                            t: blk["total_ratio"]
-                            for t, blk in floors.items()
-                        }
-                    }
-                    if floors is not None
-                    else {}
-                ),
             }
         )
     )

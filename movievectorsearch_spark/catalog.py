@@ -60,15 +60,9 @@ def table_path(sf_dir: str, name: str) -> str:
 # write-once (driver fixtures and per-test tmp dirs), so a cached file
 # listing can never go stale. Keyed weakly on the session so a stopped
 # session's plans are not resurrected.
-#
-# ``PLAN_CACHE_ENABLED`` exists for the bench's drift-calibration probes:
-# they measure MACHINE drift round-over-round, so they are timed with
-# fresh reads (same construction cost as every previous round) — see
-# bench._timed_probes.
 _PLAN_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
-PLAN_CACHE_ENABLED = True
 
 
 def _session_cache(spark: SparkSession) -> dict:
@@ -94,8 +88,6 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if not PLAN_CACHE_ENABLED:
-        return _read_table(spark, sf_dir, name)
     cache = _session_cache(spark)
     key = ("table", sf_dir, name)
     df = cache.get(key)
@@ -158,14 +150,11 @@ def films_view(
     temp-view registration still happens on EVERY register=True call
     (callers — and the hermetic oracle gate, which drops views between
     queries — rely on it)."""
-    if PLAN_CACHE_ENABLED:
-        cache = _session_cache(spark)
-        key = ("films", sf_dir)
-        films = cache.get(key)
-        if films is None:
-            films = cache[key] = _build_films(spark, sf_dir)
-    else:
-        films = _build_films(spark, sf_dir)
+    cache = _session_cache(spark)
+    key = ("films", sf_dir)
+    films = cache.get(key)
+    if films is None:
+        films = cache[key] = _build_films(spark, sf_dir)
     if register:
         films.createOrReplaceTempView("films")
     return films

@@ -277,9 +277,9 @@ def bigram_counts_arrow(
 
     Round 12: the whole BATCH is reduced in one ``np.unique`` over the
     combined key ``row_index·2⁴¹ + bigram_key`` (bigram_key < 0x110000²
-    ≈ 2⁴⁰·² fits, row index per Arrow batch ≪ 2²¹, so the combined key
-    stays far inside int64) instead of one per-document unique plus
-    Python list appends, and the bg strings are decoded once per
+    ≈ 2⁴⁰·² fits, and a batch of 2²² rows or more raises ``ValueError``,
+    so the combined key stays inside int64) instead of one per-document
+    unique plus Python list appends, and the bg strings are decoded once per
     DISTINCT bigram value per batch (≤ |charset|², a few hundred)
     rather than once per (doc, bigram) row. The (doc, bg, cnt) row SET
     is identical — np.unique on the combined key groups exactly by
@@ -299,6 +299,14 @@ def bigram_counts_arrow(
         for pdf in batches:
             texts = pdf["text"]
             n_rows = len(texts)
+            if n_rows >= 1 << 22:
+                # the packed key below puts the row index above bit 41
+                raise ValueError(
+                    f"bigram_counts_arrow: Arrow batch of {n_rows} rows "
+                    "overflows the int64 (row << 41 | bigram) key; keep "
+                    "spark.sql.execution.arrow.maxRecordsPerBatch below "
+                    f"{1 << 22}"
+                )
             lens = np.fromiter(
                 (0 if t is None else len(t) for t in texts),
                 dtype=np.int64,

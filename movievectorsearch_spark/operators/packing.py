@@ -310,7 +310,8 @@ def gram_counts_arrow_multi(docs, ks: list[int]):
     ``np.unique`` per (batch, k), n-gram positions built per ROW so no
     gram ever crosses a document boundary. Keys pack as
     ``(c₁·K + c₂)·K + c₃`` with K = 0x110000: K³ ≈ 2⁶⁰·³ < 2⁶³, so
-    lengths up to 3 are exact in int64 (asserted). BIT-EQUAL counts to
+    lengths up to 3 are exact in int64; the ``ValueError`` for k outside
+    1..3 enforces that bound. BIT-EQUAL counts to
     gram_counts_arrow / the relational form per k
     (tests/test_packing.py)."""
     import numpy as np

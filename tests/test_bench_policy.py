@@ -60,183 +60,3 @@ def test_heavy_tier_is_the_iterative_family():
             "both bench tiers"
         )
 
-
-def test_calibration_probes_are_plan_stable():
-    """Round-10 judge item #7: no calibration probe's implementation
-    fingerprint may change within a round — a probe plan change would
-    launder its own speedup into the machine-drift ratio. Compares
-    against the frozen QUERY_FPRINTS_HEAD.json snapshot; if this fails,
-    either revert the probe's module edit or swap the probe for a
-    plan-stable query AND document the normalization-chain break in the
-    round notes."""
-    import json
-
-    import movievectorsearch_spark.plans.fingerprint as FP
-
-    with open(FP.HEAD_PATH) as f:
-        head = json.load(f)
-    cur = FP.query_fingerprints(Q.QUERIES)
-    drifted = [
-        n for n in bench.CALIBRATION_QUERIES
-        if n in head and head[n] != cur.get(n)
-    ]
-    assert drifted == [], (
-        f"calibration probes changed plan this round: {drifted} — "
-        "swap them for plan-stable queries or revert the module edit"
-    )
-    missing = [n for n in bench.CALIBRATION_QUERIES if n not in Q.QUERIES]
-    assert missing == []
-    # r10 ADVICE: a probe swapped in before the next freeze must fail
-    # loudly, not be silently skipped by the `if n in head` guard above
-    unfrozen = [n for n in bench.CALIBRATION_QUERIES if n not in head]
-    assert unfrozen == [], (
-        f"calibration probes missing from QUERY_FPRINTS_HEAD.json: "
-        f"{unfrozen} — run tools/update_fprints.py --freeze"
-    )
-
-
-def test_every_probe_has_a_path_class():
-    """Path-aware normalization (round-11 judge task #2) needs every
-    probe classified, and both classes represented with >=2 probes so
-    each has in-run redundancy against a single contaminated window."""
-    for n in bench.CALIBRATION_QUERIES:
-        assert n in bench.CALIBRATION_PATHS, n
-    from collections import Counter
-
-    c = Counter(bench.CALIBRATION_PATHS[n] for n in bench.CALIBRATION_QUERIES)
-    assert c["jvm"] >= 2 and c["python"] >= 2, dict(c)
-
-
-def test_quiet_floor_set_is_benched_headline():
-    """The quiet-floor set must be headline-tier queries (the floors
-    cross-check the common-tier readings) with no duplicates."""
-    assert len(bench.QUIET_FLOOR_QUERIES) == len(set(bench.QUIET_FLOOR_QUERIES))
-    stray = set(bench.QUIET_FLOOR_QUERIES) - set(bench.BENCH_QUERIES)
-    assert stray == set(), f"not in BENCH_QUERIES: {sorted(stray)}"
-
-
-def _detail(queries, heavy, cal, cal_mid, cal_end, sf=0.1):
-    return {
-        "sf": sf,
-        "queries": queries,
-        "heavy": heavy,
-        "calibration": cal,
-        "calibration_mid": cal_mid,
-        "calibration_end": cal_end,
-    }
-
-
-def test_normalized_delta_uses_bracketing_probe_pair(tmp_path):
-    """The heavy tier runs between the mid and end probes; its delta
-    must be normalized by THAT pair, not the headline median (round-10
-    judge item #1). Machine runs 2x slow from mid onward: headline
-    (head+mid bracket → median 1.5) and heavy (mid+end → 2.0) see
-    different ratios."""
-    import json
-
-    probes = {"p1": 1.0}
-    prev = _detail({"a": 10.0}, {"h": 10.0}, probes, probes, probes)
-    with open(tmp_path / "BENCH_DETAIL_r09.json", "w") as f:
-        json.dump(prev, f)
-    cur = _detail({"a": 15.0}, {"h": 20.0},
-                  {"p1": 1.0}, {"p1": 2.0}, {"p1": 2.0})
-    out = bench._normalized_delta(cur, str(tmp_path), 10)
-    assert out["common"]["tier_ratio"] == 1.5
-    assert out["common"]["tier_probe_pair"] == ["head", "mid"]
-    assert out["common"]["cur_total_normalized_sec"] == 10.0
-    assert out["common"]["normalized_delta_sec"] == 0.0
-    assert out["heavy"]["tier_ratio"] == 2.0
-    assert out["heavy"]["tier_probe_pair"] == ["mid", "end"]
-    assert out["heavy"]["cur_total_normalized_sec"] == 10.0
-    assert out["heavy"]["normalized_delta_sec"] == 0.0
-
-
-def test_normalized_delta_is_path_aware(tmp_path):
-    """Round-11 judge task #2: a 2x slowdown confined to the Python
-    worker path must be normalized out of python-path queries by the
-    python probes, while JVM queries keep the JVM ratio — a single
-    per-tier median under-corrects exactly this mode (r10: JVM flat,
-    Python workers 1.7-2.5x)."""
-    import json
-
-    jvm_probe, py_probe = "q1_pricing_summary", "pandas_mad_by_type"
-    assert bench.CALIBRATION_PATHS[jvm_probe] == "jvm"
-    assert bench.CALIBRATION_PATHS[py_probe] == "python"
-    probes_prev = {jvm_probe: 1.0, py_probe: 1.0}
-    prev = _detail({"a": 10.0, "b": 10.0}, {},
-                   probes_prev, probes_prev, probes_prev)
-    with open(tmp_path / "BENCH_DETAIL_r09.json", "w") as f:
-        json.dump(prev, f)
-    # current run: python path uniformly 2x slow (probe AND query),
-    # jvm flat; a=jvm unchanged, b=python raw 20 -> normalized 10
-    probes_cur = {jvm_probe: 1.0, py_probe: 2.0}
-    cur = _detail({"a": 10.0, "b": 20.0}, {},
-                  probes_cur, probes_cur, probes_cur)
-    cur["paths"] = {"a": "jvm", "b": "python"}
-    out = bench._normalized_delta(cur, str(tmp_path), 10)
-    c = out["common"]
-    assert c["path_ratios"] == {"jvm": 1.0, "python": 2.0}
-    assert c["cur_total_normalized_sec"] == 20.0
-    assert c["normalized_delta_sec"] == 0.0
-    assert c["path_totals"]["python"]["cur_total_normalized_sec"] == 10.0
-    assert c["path_totals"]["python"]["normalized_delta_pct"] == 0.0
-    assert c["path_totals"]["jvm"]["cur_total_normalized_sec"] == 10.0
-    assert c["n_path_classified"] == 2
-    # an unclassified query falls back to the all-probe tier ratio —
-    # pre-r11 artifacts (no paths map) reproduce the legacy numbers
-    cur2 = _detail({"a": 10.0, "b": 20.0}, {},
-                   probes_cur, probes_cur, probes_cur)
-    out2 = bench._normalized_delta(cur2, str(tmp_path), 10)
-    assert out2["common"]["tier_ratio"] == 1.5
-    assert out2["common"]["cur_total_normalized_sec"] == 20.0
-    assert out2["common"]["n_path_classified"] == 0
-
-
-def test_floor_cross_check_reads_latest_matching_artifact(tmp_path):
-    """Round-11 judge task #1: the driver reading is stamped against
-    the newest committed quiet floor at or before the round; cross-sf
-    floors are skipped; >=1.5x readings are listed by name."""
-    import json
-
-    with open(tmp_path / "QUIET_r10.json", "w") as f:
-        json.dump({"sf": "/root/testdata/sf0.1", "commit": "old", "runs": 1,
-                   "queries": {"a": {"min": 5.0}}}, f)
-    with open(tmp_path / "QUIET_r11.json", "w") as f:
-        json.dump({"sf": "/root/testdata/sf0.1", "commit": "new", "runs": 2,
-                   "queries": {"a": {"min": 4.0}, "b": {"min": 2.0},
-                               "absent": {"min": 9.9}}}, f)
-    with open(tmp_path / "HEAVY_QUIET_r11.json", "w") as f:
-        json.dump({"sf": "/root/testdata/sf0.001", "commit": "new", "runs": 1,
-                   "queries": {"h": {"min": 1.0}}}, f)
-    detail = {"sf": 0.1, "queries": {"a": 8.0, "b": 2.0, "c": 1.0},
-              "heavy": {"h": 3.0}}
-    out = bench._floor_cross_check(detail, str(tmp_path), 11)
-    assert set(out) == {"common"}  # heavy floor is cross-sf -> skipped
-    c = out["common"]
-    assert c["artifact"] == "QUIET_r11.json" and c["floor_commit"] == "new"
-    assert c["per_query"]["a"] == {"floor": 4.0, "cur": 8.0, "ratio": 2.0}
-    assert c["above_1p5x"] == ["a"]
-    assert "absent" not in c["per_query"] and "c" not in c["per_query"]
-    assert c["total_floor_sec"] == 6.0 and c["total_cur_sec"] == 10.0
-
-
-def test_top_lists_trim_at_zero_crossing(tmp_path):
-    """An all-regression tier must report NO improvements (round-9
-    heavy block listed +2.07 in both lists)."""
-    import json
-
-    probes = {"p1": 1.0}
-    prev = _detail({f"q{i}": 1.0 for i in range(3)},
-                   {"h1": 1.0, "h2": 1.0}, probes, probes, probes)
-    with open(tmp_path / "BENCH_DETAIL_r09.json", "w") as f:
-        json.dump(prev, f)
-    cur = _detail(
-        {"q0": 2.0, "q1": 3.0, "q2": 0.5},   # two regress, one improves
-        {"h1": 2.0, "h2": 4.0},               # all regress
-        probes, probes, probes,
-    )
-    out = bench._normalized_delta(cur, str(tmp_path), 10)
-    assert set(out["common"]["top_improvements"]) == {"q2"}
-    assert set(out["common"]["top_regressions"]) == {"q0", "q1"}
-    assert out["heavy"]["top_improvements"] == {}
-    assert set(out["heavy"]["top_regressions"]) == {"h1", "h2"}

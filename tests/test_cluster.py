@@ -4,6 +4,9 @@ separate, and the canonical id is the component minimum."""
 
 from __future__ import annotations
 
+import pytest
+
+from movievectorsearch_spark.operators import cluster
 from movievectorsearch_spark.operators.cluster import connected_components
 
 
@@ -17,6 +20,13 @@ def test_chain_collapses(spark):
     # 1-2, 2-3, 3-4, 4-5: diameter 4, needs multiple propagation rounds
     got = _cc(spark, [(1, 2), (2, 3), (3, 4), (4, 5)])
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1}
+
+
+def test_round_cap_raises_instead_of_returning_unconverged(spark, monkeypatch):
+    # the diameter-4 chain still changes labels in its first round
+    monkeypatch.setattr(cluster, "MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="still changing after 1 rounds"):
+        _cc(spark, [(1, 2), (2, 3), (3, 4), (4, 5)])
 
 
 def test_disjoint_components(spark):

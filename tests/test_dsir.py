@@ -160,6 +160,28 @@ def test_bigram_counts_arrow_bit_equal_on_corpus(spark, sf_dir):
     assert a == b
 
 
+def test_bigram_counts_arrow_rejects_oversized_batch(spark):
+    """A batch of 2²² rows would overflow the packed (row << 41 | bigram)
+    int64 key; the kernel must refuse it loudly, naming the conf."""
+    import pytest
+
+    from movievectorsearch_spark.operators.dsir import bigram_counts_arrow
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "0")  # no limit: the partition is one batch
+    try:
+        docs = spark.range(0, 1 << 22, 1, 1).select(
+            F.col("id").alias("doc_id"), F.lit("ab").alias("text")
+        )
+        with pytest.raises(Exception, match="maxRecordsPerBatch"):
+            bigram_counts_arrow(docs).write.format("noop").mode(
+                "overwrite"
+            ).save()
+    finally:
+        spark.conf.set(conf, prev)
+
+
 def test_bigram_counts_arrow_bit_equal_edges(spark):
     """Astral chars count as ONE code point per side of the bigram
     (Spark split('') semantics = Python UTF-32), null/len<2 docs emit

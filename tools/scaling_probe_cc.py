@@ -204,8 +204,7 @@ def main() -> None:
     # prior same-r/src rows min-merge with this run's timings before
     # fitting: the 3-point exact fit is fragile to a single steal-window
     # contamination (observed 2-3x rep swings on this box), so repeated
-    # invocations tighten the floor instead of replacing it — same
-    # protocol as tools/heavy_quiet.py. r10 ADVICE (medium): the merge
+    # invocations tighten the floor instead of replacing it. The merge
     # is additionally gated per query on an UNCHANGED implementation —
     # a stale faster floor from older code must not mask a scaling
     # regression. Each row records the git commit and the query's plan

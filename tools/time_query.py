@@ -1,136 +1,92 @@
-"""Time individual registry queries (noop write, warmup, min of N).
+"""Time registry queries, split into build / plan / exec per rep.
 
-Usage: python tools/time_query.py [--sf DIR] [--reps N] [--warm-registry]
-       [--bracket-probe NAME | --no-bracket] q1 q2 ...
-Prints one line per query: name, min, all reps, plus the bracketing
-calibration-probe timings taken immediately before and after the entry
-(round-11 judge task #5: a steal window hitting the timed reps is then
-VISIBLE in the output — a post/pre probe swing >30% vs the session's
-probe floor flags the entry's numbers as contaminated instead of
-leaving them to be mistaken for plan cost). Used for ad-hoc A/Bs;
-bench.py remains the committed contract.
+Usage: python tools/time_query.py [--sf DIR] [--reps N] [--out FILE]
+       [--tier headline|heavy] [name ...]
 
-NOTE on isolated vs suite-context numbers (round-9 judge finding #3):
-an isolated run times a query against a cold JVM — no JIT-compiled
-codegen stages, cold OS page cache for the parquet inputs, no live
-Python worker pool — and reads ~2x the suite-context number for
-persist-dependent queries (isolated dedup_clusters: 14.7 s min-of-2 vs
-5.3-9.3 s in-suite). ``--warm-registry`` closes most of that gap by
-running the bench calibration probes (plan-diverse: codegen scan-agg,
-join shuffle, window agg, vector kernel, pandas UDF, Python UDTF)
-through the same noop sink twice before any timing, which JIT-compiles
-the shared stage shapes, faults in the big tables, and spawns the
-Python worker pool.
+Each rep of each query is split three ways:
 
-FAMILY-PERSIST entries (round-10 judge finding #2): queries that share
-persisted intermediates with siblings through the persist registry —
-the unigram_lm_* / viterbi_* family, the dedup_clusters CC class —
-are warmed in-suite by their siblings' builds, which neither
---warm-registry nor this tool's own warmup pass reproduces: isolated
-minimums for these entries read ~2-3x their suite numbers even warm.
-Ad-hoc timings of family-persist entries are only meaningful against
-the committed quiet floor for the same entry (QUIET_r{N}.json /
-HEAVY_QUIET_r{N}.json from tools/heavy_quiet.py, measured with the
-full suite protocol), never as absolute numbers.
+* build — the registry's plan-building call: py4j plan construction,
+  plus any model-build collects it blocks on;
+* plan  — forcing queryExecution().executedPlan(): analysis, optimizer,
+  physical planning (single-threaded, before any task runs);
+* exec  — the noop write of the already-planned DataFrame. The noop
+  write re-plans the write query itself, so `exec` still carries one
+  planning pass; `plan` is a lower bound on planner cost, not its total.
+
+build + plan + exec is the same wall time bench.py's _timed_min reads.
+Every query first runs once untimed (row count + warmup), then the reps
+interleave across queries, as in bench.py. Used for ad-hoc reads of one
+tree; speed changes are judged on perfbench parent/change pairs.
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from movievectorsearch_spark.plans import queries as Q
-from movievectorsearch_spark.session import get_spark
+from bench import BENCH_HEAVY, BENCH_QUERIES  # noqa: E402
+from movievectorsearch_spark.catalog import DEFAULT_SF_DIR  # noqa: E402
+from movievectorsearch_spark.plans import queries as Q  # noqa: E402
+from movievectorsearch_spark.session import get_spark  # noqa: E402
 
 
-def _load_bench():
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "bench",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "bench.py",
-        ),
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-    return bench
-
-
-def warm_registry(spark, sf_dir: str) -> None:
-    """Suite-like warmth: the bench calibration probes, twice, through
-    the noop sink (JIT + page cache + Python workers)."""
-    bench = _load_bench()
-    for _ in range(2):
-        for name in bench.CALIBRATION_QUERIES:
-            Q.QUERIES[name]["spark"](spark, sf_dir).write.format(
-                "noop"
-            ).mode("overwrite").save()
-
-
-def _noop_time(spark, sf_dir: str, name: str) -> float:
+def split_times(spark, sf_dir: str, name: str) -> dict[str, float]:
     t0 = time.perf_counter()
-    Q.QUERIES[name]["spark"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    return round(time.perf_counter() - t0, 3)
+    df = Q.QUERIES[name]["spark"](spark, sf_dir)
+    t1 = time.perf_counter()
+    df._jdf.queryExecution().executedPlan()
+    t2 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    t3 = time.perf_counter()
+    return {"build": round(t1 - t0, 4), "plan": round(t2 - t1, 4),
+            "exec": round(t3 - t2, 4), "total": round(t3 - t0, 4)}
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    ap.add_argument("--sf", default=DEFAULT_SF_DIR)
     ap.add_argument("--reps", type=int, default=2)
-    ap.add_argument("--warm-registry", action="store_true",
-                    help="run the bench calibration probes twice first "
-                         "(suite-like JIT/page-cache/Python-pool warmth)")
-    ap.add_argument("--bracket-probe", default="events_hourly",
-                    help="calibration probe timed before/after each "
-                         "entry (steal-window visibility)")
-    ap.add_argument("--no-bracket", action="store_true",
-                    help="skip per-entry probe bracketing")
-    ap.add_argument("names", nargs="+")
+    ap.add_argument("--tier", default=None, choices=[None, "headline", "heavy"])
+    ap.add_argument("--out", default=None)
+    ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    spark = get_spark(app_name="mvs-time", cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    names = list(args.names)
+    if args.tier == "headline":
+        names = list(BENCH_QUERIES)
+    elif args.tier == "heavy":
+        names = list(BENCH_HEAVY)
+    if not names:
+        ap.error("give query names or --tier")
+
+    spark = get_spark(app_name="mvs-time",
+                      cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")
     Q.QUERIES["count_scan"]["spark"](spark, args.sf).collect()
-    if args.warm_registry:
-        t0 = time.perf_counter()
-        warm_registry(spark, args.sf)
-        print(f"# warm-registry: {time.perf_counter() - t0:.1f}s",
-              flush=True)
 
-    probe = None if args.no_bracket else args.bracket_probe
-    probe_floor = None
-    if probe is not None:
-        _noop_time(spark, args.sf, probe)  # probe's own warmup
-        probe_floor = _noop_time(spark, args.sf, probe)
-
-    for name in args.names:
-        fn = Q.QUERIES[name]["spark"]
-        n = fn(spark, args.sf).count()  # warmup
-        pre = _noop_time(spark, args.sf, probe) if probe else None
-        reps = []
-        for _ in range(args.reps):
-            t0 = time.perf_counter()
-            fn(spark, args.sf).write.format("noop").mode("overwrite").save()
-            reps.append(round(time.perf_counter() - t0, 3))
-        post = _noop_time(spark, args.sf, probe) if probe else None
-        drift = ""
-        if probe is not None:
-            probe_floor = min(probe_floor, pre, post)
-            worst = max(pre, post) / probe_floor
-            drift = (f" probe[{probe}] pre={pre:.3f}s post={post:.3f}s"
-                     f" floor={probe_floor:.3f}s")
-            if worst > 1.3:
-                drift += f" DRIFT x{worst:.2f} (reps contaminated)"
-        print(f"{name}: min={min(reps):.3f}s reps={reps} rows={n}{drift}",
-              flush=True)
+    out = {
+        name: {"rows": Q.QUERIES[name]["spark"](spark, args.sf).count(),
+               "reps": []}
+        for name in names
+    }
+    for rep in range(args.reps):
+        for name in names:
+            t = split_times(spark, args.sf, name)
+            out[name]["reps"].append(t)
+            print(f"{name} rep={rep} build={t['build']:.3f} "
+                  f"plan={t['plan']:.3f} exec={t['exec']:.3f} "
+                  f"total={t['total']:.3f}", flush=True)
+    for name, row in out.items():
+        best = min(r["total"] for r in row["reps"])
+        print(f"{name}: min={best:.3f}s rows={row['rows']}")
+    if args.out:
+        with open(args.out, "w") as f:
+            json.dump(out, f, indent=1, sort_keys=True)
     spark.stop()
 
 

@@ -81,8 +81,13 @@ def bpe_tokens(col: Column) -> Column:
 # ---- DuckDB mirrors --------------------------------------------------------
 
 def tokens_sql(expr: str) -> str:
+    """DuckDB mirror of :func:`tokens`. Java's ``\\s`` is the ASCII class
+    ``[ \\t\\n\\x0B\\f\\r]``; RE2's ``\\s`` omits VT, so the class is
+    spelled out. Spark's ``trim`` strips only ' ', where DuckDB's default
+    also strips NBSP and the other Unicode space separators."""
     return (
-        f"list_filter(string_split_regex(lower(trim({expr})), '\\s+'), t -> t <> '')"
+        f"list_filter(string_split_regex(lower(trim({expr}, ' ')), "
+        f"'[ \\t\\n\\v\\f\\r]+'), t -> t <> '')"
     )
 
 

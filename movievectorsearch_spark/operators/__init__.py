@@ -1,18 +1,1 @@
 """Relational + vector operators (SURVEY.md §2 inventory)."""
-
-_IMPLS = ("arrow", "relational")
-
-
-def check_impl(impl: str) -> str:
-    """Validate a twin-kernel ``impl`` selector.
-
-    Every twin-kernel operator (winnow, dedup, curation, dsir, packing)
-    accepts ``impl='arrow' | 'relational'``; an unrecognized value used
-    to fall through silently to the relational plan, changing the plan
-    shape with no error (ADVICE r9). Fail loudly instead.
-    """
-    if impl not in _IMPLS:
-        raise ValueError(
-            f"impl must be one of {_IMPLS}, got {impl!r}"
-        )
-    return impl

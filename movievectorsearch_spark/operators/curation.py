@@ -29,8 +29,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from movievectorsearch_spark.operators import check_impl
-
 from movievectorsearch_spark.functions.hashing import (
     P,
     minhash_permute,
@@ -49,7 +47,6 @@ def contamination_overlap(
     shingle_n: int = 5,
     frac_num: int = 5,
     frac_den: int = 100,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Per-corpus-doc overlap with a benchmark set, by distinct word
     ``shingle_n``-gram hashes. ``bench_pred`` is a boolean Column
@@ -57,46 +54,24 @@ def contamination_overlap(
     overlap/n_shingles >= frac_num/frac_den (compared by integer
     cross-multiplication — no float boundary).
 
-    Plan shape: both sides reduce to (id, shingle-hash) pairs —
-    ``impl="arrow"`` (default) via the doc-local prefix-hash kernel
-    (operators/shingle_arrow.py, bit-equal; the per-shingle interpreted
-    char fold was the stage's dominant cost), ``"relational"`` via the
-    explode + poly_hash oracle-mirror shape. The join key is the 8-byte
-    hash, so the shuffle carries hashes, not text. The benchmark side
-    is tiny (an eval set) → Catalyst broadcasts it and the corpus never
-    shuffles.
+    Plan shape: both sides reduce to (id, shingle-hash) pairs via the
+    doc-local prefix-hash kernel (operators/shingle_arrow.py). The join
+    key is the 8-byte hash, so the shuffle carries hashes, not text. The
+    benchmark side is tiny (an eval set) → Catalyst broadcasts it and
+    the corpus never shuffles.
     """
-    check_impl(impl)
-    if impl == "arrow":
-        from movievectorsearch_spark.operators.shingle_arrow import (
-            shingle_hash_rows,
-        )
+    from movievectorsearch_spark.operators.shingle_arrow import (
+        shingle_hash_rows,
+    )
 
-        corpus = shingle_hash_rows(
-            docs.filter(~bench_pred), "doc_id", "text", shingle_n
-        ).select(F.col("id").alias("doc_id"), "h")
-        bench = (
-            shingle_hash_rows(
-                docs.filter(bench_pred), "doc_id", "text", shingle_n
-            )
-            .select("h")
-            .distinct()
-        )
-    else:
-        sh = F.explode(
-            F.array_distinct(word_shingles(F.col("text"), shingle_n))
-        )
-        corpus = (
-            docs.filter(~bench_pred)
-            .select("doc_id", sh.alias("shingle"))
-            .select("doc_id", poly_hash(F.col("shingle")).alias("h"))
-        )
-        bench = (
-            docs.filter(bench_pred)
-            .select(sh.alias("shingle"))
-            .select(poly_hash(F.col("shingle")).alias("h"))
-            .distinct()
-        )
+    corpus = shingle_hash_rows(
+        docs.filter(~bench_pred), "doc_id", "text", shingle_n
+    ).select(F.col("id").alias("doc_id"), "h")
+    bench = (
+        shingle_hash_rows(docs.filter(bench_pred), "doc_id", "text", shingle_n)
+        .select("h")
+        .distinct()
+    )
     sizes = corpus.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
     overlap = (
         corpus.join(F.broadcast(bench), "h")

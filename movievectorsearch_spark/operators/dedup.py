@@ -34,8 +34,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from movievectorsearch_spark.operators import check_impl
-
 from movievectorsearch_spark.functions.hashing import (
     P,
     minhash_coeffs,
@@ -158,55 +156,36 @@ def minhash_signature(
     num_hashes: int = 16,
     shingle_n: int = 3,
     include_size: bool = False,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Per-doc MinHash signature: one groupBy with
     ``min((a_i*h + b_i) mod P)`` per permutation over the per-doc
     shingle hashes. All portable-hash values → bit-identical in the
     DuckDB oracle.
 
-    ``impl="arrow"`` (default) takes the hashes from the doc-local
-    prefix-hash kernel (operators/shingle_arrow.py) with
-    ``distinct=True`` — mins are duplicate-insensitive and the kernel
-    dedups by shingle STRING, so both the permutation minima and the
-    distinct count are exactly the relational form's values (even under
-    a within-doc hash collision). ``"relational"`` keeps the explode +
-    interpreted poly_hash fold — the oracle-mirror shape and the
-    bit-equality cross-check (tests/test_dedup.py).
+    The hashes come from the doc-local prefix-hash kernel
+    (operators/shingle_arrow.py) with ``distinct=True`` — mins are
+    duplicate-insensitive and the kernel dedups by shingle STRING, so
+    the distinct count is exact even under a within-doc hash collision.
 
     ``include_size=True`` adds ``n_shingles`` (exact distinct shingle
     count) in the SAME groupBy — the set cardinality the asymmetric
     containment estimator needs, at zero extra passes."""
-    coeffs = minhash_coeffs(num_hashes)
-    check_impl(impl)
-    if impl == "arrow":
-        from movievectorsearch_spark.operators.shingle_arrow import (
-            shingle_hash_rows,
-        )
+    from movievectorsearch_spark.operators.shingle_arrow import (
+        shingle_hash_rows,
+    )
 
-        sh = shingle_hash_rows(
-            df, id_col, text_col, shingle_n, distinct=True
-        ).select(F.col("id").alias(id_col), "h")
-        # count('h'), not count('*'): null text emits one (id, NULL) row
-        # in both forms, and countDistinct('shingle') ignores the NULL —
-        # the NULL-ignoring count keeps n_shingles bit-equal (0, not 1).
-        size_agg = F.count("h").cast("bigint").alias("n_shingles")
-    else:
-        sh = df.select(
-            F.col(id_col),
-            F.explode(word_shingles(F.col(text_col), shingle_n)).alias(
-                "shingle"
-            ),
-        ).withColumn("h", poly_hash(F.col("shingle")))
-        size_agg = F.countDistinct("shingle").cast("bigint").alias(
-            "n_shingles"
-        )
+    coeffs = minhash_coeffs(num_hashes)
+    sh = shingle_hash_rows(
+        df, id_col, text_col, shingle_n, distinct=True
+    ).select(F.col("id").alias(id_col), "h")
     aggs = [
         F.min(minhash_permute(F.col("h"), a, b)).alias(f"mh{i}")
         for i, (a, b) in enumerate(coeffs)
     ]
     if include_size:
-        aggs.append(size_agg)
+        # count('h'), not count('*'): null text emits one (id, NULL)
+        # row, and a doc with no text has 0 shingles, not 1
+        aggs.append(F.count("h").cast("bigint").alias("n_shingles"))
     return sh.groupBy(id_col).agg(*aggs)
 
 
@@ -1023,7 +1002,6 @@ def oph_signature(
     text_col: str,
     k: int = 16,
     shingle_n: int = 3,
-    impl: str = "arrow",
 ) -> DataFrame:
     """One-permutation MinHash with rotation densification
     (Shrivastava & Li's densified OPH): hash every shingle ONCE,
@@ -1043,33 +1021,19 @@ def oph_signature(
 
     Returns ``(id_col, slot, slot_val)`` — ``k`` rows per document.
     """
-    a0, b0 = minhash_coeffs(1, seed=97)[0]
-    check_impl(impl)
-    if impl == "arrow":
-        # per-bin minima are duplicate-insensitive, so the doc-local
-        # prefix-hash kernel feeds this with distinct=True — identical
-        # slots, no interpreted per-char fold (tests/test_dedup.py
-        # proves slot-for-slot equality against the explode form)
-        from movievectorsearch_spark.operators.shingle_arrow import (
-            shingle_hash_rows,
-        )
+    from movievectorsearch_spark.operators.shingle_arrow import (
+        shingle_hash_rows,
+    )
 
-        sh = shingle_hash_rows(
-            df, id_col, text_col, shingle_n, distinct=True
-        ).select(
-            F.col("id").alias(id_col),
-            minhash_permute(F.col("h"), a0, b0).alias("hp"),
-        )
-    else:
-        sh = df.select(
-            F.col(id_col),
-            F.explode(word_shingles(F.col(text_col), shingle_n)).alias(
-                "shingle"
-            ),
-        ).select(
-            id_col,
-            minhash_permute(poly_hash(F.col("shingle")), a0, b0).alias("hp"),
-        )
+    a0, b0 = minhash_coeffs(1, seed=97)[0]
+    # per-bin minima are duplicate-insensitive, so the doc-local
+    # prefix-hash kernel feeds this with distinct=True
+    sh = shingle_hash_rows(
+        df, id_col, text_col, shingle_n, distinct=True
+    ).select(
+        F.col("id").alias(id_col),
+        minhash_permute(F.col("h"), a0, b0).alias("hp"),
+    )
     filled = (
         sh.withColumn("fbin", (F.col("hp") % k).cast("int"))
         .groupBy(id_col, "fbin")

@@ -41,15 +41,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from movievectorsearch_spark.operators import check_impl
-
 from movievectorsearch_spark.functions.hashing import (
     P,
     int_mix,
     minhash_coeffs,
-    poly_hash,
 )
-from movievectorsearch_spark.functions.text import tokens
 
 PPM = 1_000_000
 
@@ -59,8 +55,7 @@ CLF_SEED = 13  # affine coefficients for the deterministic weight vector
 
 
 def doc_bucket_tf(
-    docs: DataFrame, dim: int, carry: list[str] | None = None,
-    impl: str = "arrow",
+    docs: DataFrame, dim: int, carry: list[str] | None = None
 ) -> DataFrame:
     """(doc_id, *carry, bucket, tf): hashed-unigram term frequencies.
 
@@ -69,37 +64,18 @@ def doc_bucket_tf(
     ``docs`` just to label results — they are functionally dependent on
     doc_id, so adding them to the grouping key changes no cardinality.
 
-    ``impl="arrow"`` (default, round 12): a document's bucket histogram
-    depends only on that document's text, so the tokenize → poly_hash →
-    (doc, bucket) count all collapse into the map task — the doc-local
-    twin-kernel argument of :func:`bigram_counts_arrow`. The relational
-    explode form (``"relational"``, the oracle-mirror shape and the
-    bit-equality cross-check) dispatched the interpreted per-character
-    poly_hash fold once per TOKEN and carried ~1 row per corpus token
-    into a hash-aggregate; the kernel hashes every token of a batch in
-    one closed-form pass (functions/hashing_arrow._hash_flat — the
-    identical int64 values) and reduces the batch with one np.unique
-    over ``row·dim + bucket``. Tokenization replays Spark exactly:
+    A document's bucket histogram depends only on that document's text,
+    so the tokenize → poly_hash → (doc, bucket) count all collapse into
+    the map task (the doc-local argument of :func:`bigram_counts_arrow`).
+    The kernel hashes every token of a batch in one closed-form pass
+    (functions/hashing_arrow._hash_flat — the int64 values of
+    functions/hashing.poly_hash) and reduces the batch with one
+    np.unique over ``row·dim + bucket``. Tokenization replays Spark's
+    functions/text.tokens exactly:
     ``strip(' ')`` (Spark trim strips spaces only), ``.lower()``, an
     ASCII-``\\s`` split, empties dropped — the proven
     operators/shingle_arrow recipe. Only the pre-aggregated per-doc
     histogram reaches any shuffle."""
-    from movievectorsearch_spark.operators import check_impl
-
-    carry = carry or []
-    if check_impl(impl) == "relational":
-        return (
-            docs.select(
-                "doc_id", *carry, F.explode(tokens(F.col("text"))).alias("tok")
-            )
-            .select(
-                "doc_id", *carry,
-                (poly_hash(F.col("tok")) % dim).alias("bucket"),
-            )
-            .groupBy("doc_id", *carry, "bucket")
-            .agg(F.count("*").alias("tf"))
-        )
-
     import re
 
     import numpy as np
@@ -109,6 +85,7 @@ def doc_bucket_tf(
 
     from movievectorsearch_spark.functions.hashing_arrow import _hash_flat
 
+    carry = carry or []
     fields = [StructField("doc_id", docs.schema["doc_id"].dataType)]
     fields += [StructField(c, docs.schema[c].dataType) for c in carry]
     fields += [StructField("bucket", LongType()), StructField("tf", LongType())]
@@ -199,8 +176,8 @@ def dsir_weights(
     tf = doc_bucket_tf(docs, dim, carry=["lang"])
     if persist is not None:
         # tf feeds BOTH the model build and the scoring join — persist
-        # through the caller's cache registry so the explode+groupBy
-        # runs once (released after the query, bench cache policy)
+        # through the caller's cache registry so the kernel runs once
+        # (released after the query, bench cache policy)
         tf = persist(tf)
     lam = dsir_lambda_table(tf, dim, target_lang)
     return (
@@ -261,10 +238,10 @@ def char_bigrams(text: Column) -> Column:
 def bigram_counts_arrow(
     docs: DataFrame, carry: list[str] | None = None
 ) -> DataFrame:
-    """Zero-shuffle Arrow twin of the (doc_id, *carry, bg, cnt) stage
-    under :func:`bigram_xent` — BIT-EQUAL row set (tests/test_dsir.py),
-    same doc-local argument as operators/winnow.fingerprint_rows_arrow:
-    a document's bigram histogram depends only on that document's text,
+    """(doc_id, *carry, bg, cnt): per-document char-bigram histogram,
+    the stage under :func:`bigram_xent` — the same row set as
+    ``explode(char_bigrams(text))`` + groupBy (tests/test_dsir.py).
+    A document's bigram histogram depends only on that document's text,
     so the explode (~1 row per corpus character) and the
     (doc_id, bg) hash-aggregate both collapse into the map task. Only
     the pre-aggregated per-doc histogram (≤ distinct-bigrams-per-doc
@@ -356,36 +333,19 @@ def bigram_counts_arrow(
 
 
 def bigram_xent(
-    docs: DataFrame, carry: list[str] | None = None, persist=None,
-    impl: str = "arrow",
+    docs: DataFrame, carry: list[str] | None = None, persist=None
 ) -> DataFrame:
     """(doc_id, *carry, n_bigrams, xent_ppm): per-document cross-entropy under
     the corpus's add-one-smoothed char-bigram model, as an exact
     integer — per-bigram λ = floor(−ln p̂(c₂|c₁)·1e6) quantized once in
     the ≤|charset|² model table, per-doc Σ count·λ `div` n_bigrams.
 
-    One corpus pass (``impl="arrow"``, default): the per-doc bigram
-    histogram is doc-local, so :func:`bigram_counts_arrow` computes it
-    inside the map task with NO shuffle at all — the relational explode
-    + (doc_id, bg) groupBy (``impl="relational"``, kept as the
-    bit-equality cross-check; the oracle mirrors slice its CTE chain)
-    carried ~1 row per corpus character into a hash-aggregate. Model
-    build and scoring are map-side joins against broadcast model
-    tables built from the cached histogram."""
+    One corpus pass: the per-doc bigram histogram is doc-local, so
+    :func:`bigram_counts_arrow` computes it inside the map task with NO
+    shuffle at all. Model build and scoring are map-side joins against
+    broadcast model tables built from the cached histogram."""
     carry = carry or []
-    check_impl(impl)
-    if impl == "arrow":
-        bg = bigram_counts_arrow(docs, carry)
-    else:
-        bg = (
-            docs.select(
-                "doc_id",
-                *carry,
-                F.explode(char_bigrams(F.col("text"))).alias("bg"),
-            )
-            .groupBy("doc_id", *carry, "bg")
-            .agg(F.count("*").alias("cnt"))
-        )
+    bg = bigram_counts_arrow(docs, carry)
     if persist is not None:
         # bg feeds both the model build and the scoring join
         bg = persist(bg)

@@ -39,8 +39,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from movievectorsearch_spark.operators import check_impl
-
 __all__ = ["global_prefix_sum", "global_rank_cumsum", "pack_sequences"]
 
 
@@ -172,148 +170,19 @@ VIT_PACK = 1024  # packed DP key = cost_ppm * 1024 + n_pieces
 VIT_INF = 4_611_686_018_427_387_904  # 2^62: safe +lam headroom in int64
 
 
-def char_ngrams(text: Column, n: int) -> Column:
-    """array of n-char shingles (n >= 2) — n-way zipped slices, the
-    char_bigrams (dsir.py:178) construction generalized. NOT an
-    element_at gather inside the lambda: interpreted higher-order
-    functions do no CSE, so a lambda referencing the outer char split
-    re-evaluates it per ELEMENT — O(len²) per row (measured: the first
-    cut sent viterbi_segment_cost from ~1.6s to 38s at sf0.1). Zipped
-    slices evaluate the split once per slice — O(n·len)."""
-    ch = F.split(text, "")
-    m = F.size(ch) - (n - 1)
-    out = F.slice(ch, 1, m)
-    for k in range(1, n):
-        out = F.zip_with(
-            out, F.slice(ch, k + 1, m), lambda a, b: F.concat(a, b)
-        )
-    return F.when(m >= 1, out).otherwise(F.array().cast("array<string>"))
-
-
-def gram_counts_arrow(docs, n: int):
-    """(g, cnt) partial char n-gram counts (n = 1 or 2), one output row
-    per distinct gram PER ARROW BATCH — the zero-row-explosion twin of
-    ``explode(...)`` + ``groupBy``. The relational form emits ~1 row
-    per corpus character into a hash-aggregate; this kernel runs one
-    NumPy ``np.unique`` over each batch's concatenated code-point
-    arrays (bigram keys c₁·0x110000+c₂ are formed per document, so no
-    cross-document bigrams), handing the downstream groupBy ≤ |charset|^n
-    rows per batch. BIT-EQUAL global counts (tests/test_packing.py):
-    code points via UTF-32 match Spark ``split('')`` astral semantics,
-    and counts are exact integers. Same doc-local twin-kernel pattern
-    as operators/winnow.fingerprint_rows_arrow."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    if n not in (1, 2):
-        raise ValueError("gram_counts_arrow supports n = 1 or 2")
-    schema = StructType(
-        [StructField("g", StringType()), StructField("cnt", LongType())]
-    )
-
-    def kernel(batches):
-        for pdf in batches:
-            parts = []
-            for text in pdf["text"]:
-                if text is None or len(text) < n:
-                    continue
-                codes = np.frombuffer(
-                    text.encode("utf-32-le"), dtype="<u4"
-                ).astype(np.int64)
-                parts.append(
-                    codes if n == 1 else codes[:-1] * 0x110000 + codes[1:]
-                )
-            if not parts:
-                yield pd.DataFrame({"g": [], "cnt": []})
-                continue
-            keys, cnts = np.unique(np.concatenate(parts), return_counts=True)
-            if n == 1:
-                gs = [chr(int(k)) for k in keys]
-            else:
-                gs = [
-                    chr(int(k) // 0x110000) + chr(int(k) % 0x110000)
-                    for k in keys
-                ]
-            yield pd.DataFrame({"g": gs, "cnt": cnts.tolist()})
-
-    return docs.select("text").mapInPandas(kernel, schema=schema)
-
-
-def ngram_cost_table(docs, n: int, impl: str = "arrow"):
-    """(gram, lam): add-one-smoothed quantized negative log-prob
-    floor(−ln((cnt+1)/(T+V))·1e6) for every character n-gram of the
-    corpus — the unigram-LM piece costs. Bounded by |charset|^n rows,
-    computed in-engine (the ln-parity recipe) and small enough to
-    collect and broadcast into the Viterbi workers.
-
-    ``impl="arrow"`` (default, n ≤ 2) counts grams doc-locally via
-    :func:`gram_counts_arrow`; ``"relational"`` keeps the explode form
-    (the oracle-mirror shape, and the only path for n ≥ 3)."""
-    from pyspark.sql import functions as F
-
-    from movievectorsearch_spark.operators.dsir import char_bigrams
-
-    if check_impl(impl) == "arrow" and n <= 2:
-        cnt = (
-            gram_counts_arrow(docs, n)
-            .groupBy("g")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-        tot = cnt.agg(F.sum("cnt").alias("tot"), F.count("*").alias("v"))
-        return cnt.crossJoin(F.broadcast(tot)).select(
-            "g",
-            F.floor(
-                -F.log((F.col("cnt") + 1) / (F.col("tot") + F.col("v")))
-                * 1_000_000
-            )
-            .cast("bigint")
-            .alias("lam"),
-        )
-    if n == 1:
-        grams = docs.select(
-            F.explode(F.split(F.col("text"), "")).alias("g")
-        ).filter(F.col("g") != "")
-    elif n == 2:
-        grams = docs.select(
-            F.explode(char_bigrams(F.col("text"))).alias("g")
-        )
-    else:
-        grams = docs.select(
-            F.explode(char_ngrams(F.col("text"), n)).alias("g")
-        )
-    cnt = grams.groupBy("g").agg(F.count("*").alias("cnt"))
-    tot = cnt.agg(
-        F.sum("cnt").alias("tot"), F.count("*").alias("v")
-    )
-    return cnt.crossJoin(F.broadcast(tot)).select(
-        "g",
-        F.floor(
-            -F.log((F.col("cnt") + 1) / (F.col("tot") + F.col("v")))
-            * 1_000_000
-        )
-        .cast("bigint")
-        .alias("lam"),
-    )
-
-
 def gram_counts_arrow_multi(docs, ks: list[int]):
     """(k, g, cnt) partial char n-gram counts for EVERY k in ``ks``
-    out of ONE corpus scan — the multi-length extension of
-    :func:`gram_counts_arrow` (round 12). The per-k union form scanned
-    and re-shipped the documents' text once per length, and k = 3 fell
-    back to the relational ``explode(char_ngrams)`` (~1 row per corpus
-    character through an interpreted zip chain); here every length is
-    counted from the same concatenated code-point array with one
+    out of ONE corpus scan, one output row per distinct gram PER ARROW
+    BATCH, so the downstream groupBy sees ≤ |charset|^k rows per batch
+    instead of one row per corpus character. Every length is counted
+    from the same concatenated code-point array (UTF-32, so an astral
+    char is ONE element, as in Spark ``split('')``) with one
     ``np.unique`` per (batch, k), n-gram positions built per ROW so no
     gram ever crosses a document boundary. Keys pack as
     ``(c₁·K + c₂)·K + c₃`` with K = 0x110000: K³ ≈ 2⁶⁰·³ < 2⁶³, so
     lengths up to 3 are exact in int64; the ``ValueError`` for k outside
-    1..3 enforces that bound. BIT-EQUAL counts to
-    gram_counts_arrow / the relational form per k
-    (tests/test_packing.py)."""
+    1..3 enforces that bound. Counts are exact integers
+    (tests/test_packing.py checks them against a Python ``Counter``)."""
     import numpy as np
     import pandas as pd
 
@@ -384,50 +253,52 @@ def gram_counts_arrow_multi(docs, ks: list[int]):
     return docs.select("text").mapInPandas(kernel, schema=schema)
 
 
-def ngram_cost_tables(docs, ks, impl: str = "arrow") -> list[dict]:
+def _cost_rows(docs, ks) -> DataFrame:
+    """(k, g, lam): add-one-smoothed quantized negative log-prob
+    floor(−ln((cnt+1)/(T_k+V_k))·1e6) for every character k-gram of the
+    corpus and every k in ``ks`` (1..3), counted in ONE
+    :func:`gram_counts_arrow_multi` pass; T_k and V_k are the length-k
+    gram total and vocabulary."""
+    cnt = (
+        gram_counts_arrow_multi(docs, ks)
+        .groupBy("k", "g")
+        .agg(F.sum("cnt").alias("cnt"))
+    )
+    tot = cnt.groupBy("k").agg(
+        F.sum("cnt").alias("tot"), F.count("*").alias("v")
+    )
+    return cnt.join(F.broadcast(tot), "k").select(
+        "k",
+        "g",
+        F.floor(
+            -F.log((F.col("cnt") + 1) / (F.col("tot") + F.col("v")))
+            * 1_000_000
+        )
+        .cast("bigint")
+        .alias("lam"),
+    )
+
+
+def ngram_cost_table(docs, n: int) -> DataFrame:
+    """(gram, lam): the unigram-LM piece costs for length ``n`` — bounded
+    by |charset|^n rows, computed in-engine (the ln-parity recipe) and
+    small enough to collect and broadcast into the Viterbi workers."""
+    return _cost_rows(docs, [n]).select("g", "lam")
+
+
+def ngram_cost_tables(docs, ks) -> list[dict]:
     """The λ-table dicts for several piece lengths out of ONE job.
 
     Collecting :func:`ngram_cost_table` per k ran one full model-build
     job per length — L corpus-counting actions back to back where one
     suffices (round 11: viterbi_segment_cost spent 3.2 s of its 3.5 s
-    wall in these driver-blocking collects). Round 12 collapses the
-    remaining L parallel UNION branches (each its own scan + kernel
-    pass over the text, with k = 3 falling back to the interpreted
-    relational explode) into ONE :func:`gram_counts_arrow_multi` pass
-    when every k ≤ 3; per-k totals and the add-one-smoothed quantized
-    λ use the same expressions on the same counts, so every table's
-    values are unchanged (tests/test_packing.py pins equality). The
-    per-k union path remains for ``impl="relational"`` and k > 3."""
+    wall in these driver-blocking collects). Every length is counted in
+    the same :func:`gram_counts_arrow_multi` pass and collected once."""
     ks = list(ks)
     if not ks:  # r11 ADVICE: empty ks left tagged=None → AttributeError
         return []
-    if check_impl(impl) == "arrow" and all(1 <= int(k) <= 3 for k in ks):
-        multi = gram_counts_arrow_multi(docs, ks)
-        cnt = multi.groupBy("k", "g").agg(F.sum("cnt").alias("cnt"))
-        tot = cnt.groupBy("k").agg(
-            F.sum("cnt").alias("tot"), F.count("*").alias("v")
-        )
-        lam = cnt.join(F.broadcast(tot), "k").select(
-            "k",
-            "g",
-            F.floor(
-                -F.log((F.col("cnt") + 1) / (F.col("tot") + F.col("v")))
-                * 1_000_000
-            )
-            .cast("bigint")
-            .alias("lam"),
-        )
-        rows = lam.collect()
-    else:
-        tagged = None
-        for k in ks:
-            t = ngram_cost_table(docs, k, impl=impl).select(
-                F.lit(int(k)).alias("k"), "g", "lam"
-            )
-            tagged = t if tagged is None else tagged.unionByName(t)
-        rows = tagged.collect()
     out: dict[int, dict] = {k: {} for k in ks}
-    for r in rows:
+    for r in _cost_rows(docs, ks).collect():
         out[r.k][r.g] = r.lam
     return [out[k] for k in ks]
 

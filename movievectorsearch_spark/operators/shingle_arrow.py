@@ -27,8 +27,7 @@ kernel computes the identical hashes inside one map task per batch:
 BIT-EQUAL to the relational stage row-for-row (tests/test_curation.py),
 including the edge rows: null text → one (id, NULL) row, short/empty
 docs → the single whole-doc fallback shingle (poly_hash('') = 0).
-Same twin-kernel pattern as operators/winnow.fingerprint_rows_arrow;
-the relational form remains the DuckDB-oracle mirror shape.
+The relational form is the shape the DuckDB oracle mirrors.
 
 The reference has no sub-document or benchmark-decontamination tier at
 all (its dedup is whole-title exact match, movie_generator.py:83-94);

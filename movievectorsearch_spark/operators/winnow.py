@@ -13,47 +13,25 @@ hashes contributes its minimum (rightmost on ties), which guarantees
 - expected fingerprint density 2 / (w + 1) — a fixed, tunable fraction
   of the corpus, independent of document length.
 
-Plan shape (round 9): winnowing is a LOCAL algorithm — each document's
-fingerprint set depends only on that document's text — so the serving
-path is :func:`fingerprint_rows_arrow`, a ZERO-SHUFFLE ``mapInPandas``
+Plan shape: winnowing is a LOCAL algorithm — each document's
+fingerprint set depends only on that document's text — so
+:func:`fingerprint_rows_arrow` is a ZERO-SHUFFLE ``mapInPandas``
 kernel (NumPy rolling min over the k-gram hash array, rightmost
 tie-break, per-doc hash census all inside the map task). Only the
 small (id, n_grams, fp_h, npos) output ever enters an exchange — the
-downstream fp_h / doc-id groupBys that were always necessary. This is
-the same twin-kernel pattern as pipeline/featurizer.hash_embed_arrow:
-the relational form below (:func:`fingerprint_rows`) stays as the
-DuckDB-oracle mirror and bit-equality cross-check.
-
-Why the relational form is shaped the way it is: the k-gram hash array
-is computed ONCE per document and immediately exploded to (doc, pos,
-hash) rows; the window selection is ``lead()`` columns over a
-per-document window. An earlier all-array formulation (transform +
-element_at over a projected hash column) was QUADRATIC in practice:
-Catalyst's project collapsing inlines the array-building expression
-into every element_at access inside the selection lambdas (the same
-trap functions/text.word_shingles documents), and 2 documents already
-took 16 s. The exploded form evaluates the hash expression exactly
-once per gram — measured linear. But linear is not free: the explode
-emits ~1 row per character of normalized text and the lead()/lag()
-window shuffles all of them (the round-8 judge's one perf-weak flag).
-The Arrow kernel eliminates that corpus-character exchange entirely;
-at 100 TB that is the difference between petabytes of shuffle and
-none. The reference has no sub-document duplicate detection at all
-(its dedup is whole-title exact match, movie_generator.py:83-94); this
-is the industry-standard plagiarism/boilerplate detector a
-training-data pipeline runs next to MinHash.
+downstream fp_h / doc-id groupBys that were always necessary. The
+reference has no sub-document duplicate detection at all (its dedup
+is whole-title exact match, movie_generator.py:83-94); this is the
+industry-standard plagiarism/boilerplate detector a training-data
+pipeline runs next to MinHash.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
-
-from movievectorsearch_spark.operators import check_impl
 
 from movievectorsearch_spark.functions.hashing import P
-from movievectorsearch_spark.functions.text import tokens
 
 
 def rightmost_argmin_case(w: int, at) -> str:
@@ -69,112 +47,25 @@ def rightmost_argmin_case(w: int, at) -> str:
     return "CASE " + " ".join(conds) + " ELSE i END"
 
 
-def _argmin_cases(w: int) -> tuple[str, str]:
-    """(position CASE, hash CASE) over lead columns h, h1..h{w-1} at a
-    window-start row — same rightmost tie-break as
-    :func:`rightmost_argmin_case`, expressed over the exploded rows."""
-    hcol = lambda m: "h" if m == 0 else f"h{m}"  # noqa: E731
-    conds_p, conds_h = [], []
-    for j in range(w - 1, 0, -1):
-        prior = ", ".join(hcol(m) for m in range(j))
-        least = prior if j == 1 else f"least({prior})"
-        conds_p.append(f"WHEN {hcol(j)} <= {least} THEN pos + {j}")
-        conds_h.append(f"WHEN {hcol(j)} <= {least} THEN {hcol(j)}")
-    return (
-        "CASE " + " ".join(conds_p) + " ELSE pos END",
-        "CASE " + " ".join(conds_h) + " ELSE h END",
-    )
-
-
-def fingerprint_rows(
+def fingerprint_rows_arrow(
     docs: DataFrame, id_col: str, text_col: str, k: int = 8, w: int = 4
 ) -> DataFrame:
     """(id, n_grams, fp_h, npos): one row per document per DISTINCT
     selected fingerprint hash, with the count of selected positions
     carrying that hash — the shared pipeline under both the census
     (winnow_fingerprints) and the pair miner (winnow_dup_pairs).
-
     Documents whose normalized text yields fewer than ``w`` k-grams
     (len < k + w - 1) carry no window and are excluded — identically in
     the oracle.
-    """
-    # per-position k-gram polynomial hashes as a k-level zip_with
-    # rolling fold over k shifted slices of the char-code array — one
-    # multiply-add per char per level instead of a per-position inner
-    # aggregate over a fresh substring split (3x faster measured at
-    # sf0.1; identical values: the aggregate's first step (0*31+c1)%P
-    # equals the slice's c1 since code points < P). Exploded
-    # immediately so the chain is evaluated exactly once per document.
-    codes = "transform(split(norm, ''), c -> cast(ascii(c) as bigint))"
-    h_arr = f"slice({codes}, 1, n_grams)"
-    for j in range(1, k):
-        h_arr = (
-            f"zip_with({h_arr}, slice({codes}, {j + 1}, n_grams), "
-            f"(acc, c) -> (acc * 31 + c) % cast({P} as bigint))"
-        )
-    g = (
-        docs.select(
-            F.col(id_col).alias("id"),
-            F.array_join(tokens(F.col(text_col)), " ").alias("norm"),
-        )
-        .withColumn("n_grams", F.length("norm") - F.lit(k - 1))
-        .filter(F.col("n_grams") >= w)
-        .select(
-            "id",
-            "n_grams",
-            F.posexplode(F.expr(h_arr)).alias("p0", "h"),
-        )
-        .select("id", "n_grams", (F.col("p0") + 1).alias("pos"), "h")
-    )
-    ord_w = Window.partitionBy("id").orderBy("pos")
-    for j in range(1, w):
-        g = g.withColumn(f"h{j}", F.lead("h", j).over(ord_w))
-    case_p, case_h = _argmin_cases(w)
-    # Winnowing selections are NON-DECREASING in window-start order: if
-    # window i's rightmost min p is still inside window i+1, every
-    # survivor left of p has a strictly larger hash, so window i+1
-    # selects p again or something to its right; if p fell out, all of
-    # window i+1 sits right of p. Duplicate selections are therefore
-    # CONSECUTIVE, and a lag() filter over the same (id, pos) window —
-    # reusing the exchange the lead() columns already built — replaces
-    # what would otherwise be a corpus-sized distinct() shuffle (the
-    # x16 scaling probe flagged that distinct as the superlinear term).
-    sel = (
-        g.filter(F.col("pos") <= F.col("n_grams") - (w - 1))
-        .select(
-            "id",
-            "n_grams",
-            "pos",
-            F.expr(case_p).alias("fp_pos"),
-            F.expr(case_h).alias("fp_h"),
-        )
-        .withColumn("prev_pos", F.lag("fp_pos").over(ord_w))
-        .filter(
-            F.col("prev_pos").isNull() | (F.col("fp_pos") != F.col("prev_pos"))
-        )
-        .select("id", "n_grams", "fp_pos", "fp_h")
-    )
-    return sel.groupBy("id", "n_grams", "fp_h").agg(
-        F.count("*").alias("npos")
-    )
-
-
-def fingerprint_rows_arrow(
-    docs: DataFrame, id_col: str, text_col: str, k: int = 8, w: int = 4
-) -> DataFrame:
-    """Zero-shuffle Arrow twin of :func:`fingerprint_rows` — BIT-EQUAL
-    output (tests/test_winnow.py proves exact row-set equality over the
-    corpus plus NBSP/U+2028/emoji edge rows), same (id, n_grams, fp_h,
-    npos) schema.
 
     Winnowing is document-local, so the whole extract → window-argmin →
     consecutive-dedup → per-doc hash census runs inside one map task:
-    no posexplode, no per-document window exchange — the stage the
-    relational form shuffles one row per corpus character for. Docs are
-    KB-sized; the kernel is a vectorized NumPy rolling min per doc.
+    no posexplode, no per-document window exchange. Docs are KB-sized;
+    the kernel is a vectorized NumPy rolling min per doc.
 
-    Why bit-equal is achievable: everything is exact int64 — code
-    points, the polynomial hash mod P, window argmin positions, counts.
+    The output matches the oracle exactly because everything is exact
+    int64 — code points, the polynomial hash mod P, window argmin
+    positions, counts.
     Normalization replays functions/text.tokens in integer Python with
     the JVM semantics pipeline/featurizer.hash_embed_arrow established
     (Java ``\\s`` is ASCII-only so the split class is the literal
@@ -231,8 +122,12 @@ def fingerprint_rows_arrow(
                 pos0 = np.arange(sw.shape[0]) + (
                     (ww - 1) - np.argmin(sw[:, ::-1], axis=1)
                 )
-                # winnowing selections are non-decreasing; duplicates
-                # are consecutive (see fingerprint_rows) — keep firsts
+                # winnowing selections are NON-DECREASING in window-start
+                # order: if window i's rightmost min p is still inside
+                # window i+1, every survivor left of p has a strictly
+                # larger hash, so window i+1 selects p again or something
+                # to its right; if p fell out, all of window i+1 sits
+                # right of p. Duplicates are consecutive — keep firsts
                 ps = pos0[np.concatenate(([True], pos0[1:] != pos0[:-1]))]
                 uh, cnts = np.unique(h[ps], return_counts=True)
                 out_id.extend([doc_id] * len(uh))
@@ -260,7 +155,6 @@ def winnow_fingerprints(
     k: int = 8,
     w: int = 4,
     persist=None,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Per-document winnowing fingerprint census.
 
@@ -269,20 +163,11 @@ def winnow_fingerprints(
     document's distinct fingerprint hashes that also occur in at least
     one OTHER document (the boilerplate/plagiarism signal), and
     density_ppm = 1e6·n_fp/n_grams (winnowing guarantees ≈ 2/(w+1)).
-
-    ``impl``: "arrow" (default — the zero-shuffle doc-local kernel) or
-    "relational" (the oracle-mirror plan; bit-equal, kept for
-    cross-checks).
     """
     # eh feeds BOTH the per-hash doc count and the join probe side —
     # cached via the shared persist registry so the doc-local kernel
     # runs once (uncached, Spark plans the subtree twice).
-    rows_fn = (
-        fingerprint_rows_arrow
-        if check_impl(impl) == "arrow"
-        else fingerprint_rows
-    )
-    eh = rows_fn(docs, id_col, text_col, k, w)
+    eh = fingerprint_rows_arrow(docs, id_col, text_col, k, w)
     if persist is not None:
         eh = persist(eh)
     cnt = eh.groupBy("fp_h").agg(F.countDistinct("id").alias("nd"))
@@ -317,7 +202,6 @@ def winnow_dup_pairs(
     min_shared: int = 3,
     max_df: int = 16,
     persist=None,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Duplicate CANDIDATE PAIRS from shared winnowing fingerprints —
     the actionable output MOSS reports: (a_id, b_id, n_shared,
@@ -332,12 +216,7 @@ def winnow_dup_pairs(
     would make the self-join quadratic (a hash shared by m docs emits
     m² pairs; the cap bounds that to max_df² — the same no-cartesian
     discipline as the banded-LSH joins)."""
-    rows_fn = (
-        fingerprint_rows_arrow
-        if check_impl(impl) == "arrow"
-        else fingerprint_rows
-    )
-    eh = rows_fn(docs, id_col, text_col, k, w)
+    eh = fingerprint_rows_arrow(docs, id_col, text_col, k, w)
     if persist is not None:
         eh = persist(eh)
     nfp = eh.groupBy("id").agg(F.sum("npos").cast("bigint").alias("n_fp"))

@@ -2670,7 +2670,8 @@ FROM documents
 
 _CLEAN_SQL = (
     "trim(regexp_replace(regexp_replace(regexp_replace({x}, "
-    "'[\\*_\"'']', '', 'g'), '\\s+', ' ', 'g'), '^\\d+\\.\\s*', '', 'g'))"
+    "'[\\*_\"'']', '', 'g'), '[ \\t\\n\\v\\f\\r]+', ' ', 'g'), "
+    "'^\\d+\\.[ \\t\\n\\v\\f\\r]*', '', 'g'), ' ')"
 )
 
 
@@ -15024,7 +15025,7 @@ def _winnow_ctes(k: int = _WIN_K, w: int = _WIN_W) -> str:
     """Shared CTE chain (normalize → k-gram hashes → window argmin →
     per-doc fingerprint sets) under both winnowing oracles — same
     polynomial k-gram hashes, same rightmost-argmin selection as
-    operators/winnow.fingerprint_rows."""
+    operators/winnow.fingerprint_rows_arrow."""
     from movievectorsearch_spark.operators.winnow import rightmost_argmin_case
 
     gram = (

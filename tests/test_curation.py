@@ -129,19 +129,6 @@ def test_shingle_hash_kernel_bit_equal(spark, sf_dir):
             assert a == b
 
 
-def test_contamination_identical_across_impls(spark, sf_dir):
-    d = load_table(spark, sf_dir, "documents")
-    pred = F.col("doc_id") % 97 == 0
-    a = sorted(
-        map(tuple, contamination_overlap(d, pred, impl="arrow").collect())
-    )
-    b = sorted(
-        map(tuple, contamination_overlap(d, pred, impl="relational").collect())
-    )
-    assert len(a) > 0
-    assert a == b
-
-
 def test_quantize_int8_error_bound(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     out = quantize_int8(e).toPandas()

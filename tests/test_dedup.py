@@ -534,52 +534,20 @@ def test_embedding_neardup_unblocked_requires_explicit_opt_in(spark):
     assert {(r["a_id"], r["b_id"]) for r in out} == {(1, 2)}
 
 
-def test_minhash_signature_identical_across_impls(spark, sf_dir):
-    """The Arrow shingle-hash kernel must yield the SAME signatures and
-    distinct counts as the explode + poly_hash form (mins are
-    duplicate-insensitive; n_shingles dedups by STRING in both)."""
-    from movievectorsearch_spark.catalog import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # null-text doc: both impls must agree on n_shingles=0 / NULL mins
-    # (the arrow branch's count('*') used to read 1 here — ADVICE r9)
-    docs = docs.union(
-        spark.createDataFrame(
-            [(-1, None)], "doc_id BIGINT, text STRING"
-        )
+def test_minhash_signature_null_text_has_no_shingles(spark):
+    """A NULL-text document gets n_shingles == 0 and NULL minima
+    (the shingle kernel emits one (id, NULL) row for it, which count('h')
+    must not count — ADVICE r9)."""
+    docs = spark.createDataFrame(
+        [(-1, None), (1, "one two three four")], "doc_id BIGINT, text STRING"
     )
-    a = sorted(
-        map(
-            tuple,
-            D.minhash_signature(
-                docs, "doc_id", "text", include_size=True, impl="arrow"
-            ).collect(),
-        )
-    )
-    b = sorted(
-        map(
-            tuple,
-            D.minhash_signature(
-                docs, "doc_id", "text", include_size=True, impl="relational"
-            ).collect(),
-        )
-    )
-    assert len(a) > 0
-    assert a == b
-
-
-def test_oph_signature_identical_across_impls(spark, sf_dir):
-    from movievectorsearch_spark.catalog import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    a = sorted(
-        map(tuple, D.oph_signature(docs, "doc_id", "text", impl="arrow").collect())
-    )
-    b = sorted(
-        map(
-            tuple,
-            D.oph_signature(docs, "doc_id", "text", impl="relational").collect(),
-        )
-    )
-    assert len(a) > 0
-    assert a == b
+    rows = {
+        r.doc_id: r
+        for r in D.minhash_signature(
+            docs, "doc_id", "text", include_size=True
+        ).collect()
+    }
+    assert rows[-1].n_shingles == 0
+    assert all(rows[-1][f"mh{i}"] is None for i in range(16))
+    assert rows[1].n_shingles == 2
+    assert all(rows[1][f"mh{i}"] is not None for i in range(16))

@@ -100,12 +100,29 @@ def test_bigram_xent_counts(spark):
     assert row.n_bigrams == 4  # len-1
 
 
+def _bucket_tf_builtin(df, dim, carry):
+    """The Spark-builtin reference for doc_bucket_tf: explode(tokens) +
+    poly_hash + (doc, bucket) groupBy."""
+    from movievectorsearch_spark.functions.hashing import poly_hash
+    from movievectorsearch_spark.functions.text import tokens
+
+    return (
+        df.select("doc_id", *carry, F.explode(tokens(F.col("text"))).alias("tok"))
+        .select(
+            "doc_id", *carry, (poly_hash(F.col("tok")) % dim).alias("bucket")
+        )
+        .groupBy("doc_id", *carry, "bucket")
+        .agg(F.count("*").alias("tf"))
+    )
+
+
 def test_doc_bucket_tf_arrow_bit_equal(spark, sf_dir):
-    """Round 12: the doc-local token-bucket kernel must reproduce the
-    relational explode + poly_hash + groupBy EXACTLY — over the corpus
-    (with carry) and over unicode/whitespace edge rows (astral chars,
-    non-ASCII lowercasing, leading/trailing/mixed whitespace, empty and
-    NULL text contribute nothing)."""
+    """The doc-local token-bucket kernel must reproduce explode(tokens)
+    + poly_hash + groupBy EXACTLY — over the corpus (with carry) and
+    over unicode/whitespace edge rows (astral chars, non-ASCII
+    lowercasing, leading/trailing/mixed whitespace, VT/FF/CR split,
+    NBSP/U+2028 kept inside tokens, empty and NULL text contribute
+    nothing)."""
     from movievectorsearch_spark.operators.dsir import doc_bucket_tf
 
     docs = _docs(spark, sf_dir)
@@ -117,32 +134,22 @@ def test_doc_bucket_tf_arrow_bit_equal(spark, sf_dir):
             (4, "fr", None),
             (5, "es", "emoji \U0001F600\U0001F600 café CAFÉ İstanbul"),
             (6, "en", " \t\n "),
+            (7, "en", "vt\x0bff\x0ccr\rx nb\xa0sp ls\u2028x ΣΑΣ"),
         ],
         ["doc_id", "lang", "text"],
     )
     for df, carry in ((docs, ["lang"]), (docs, []), (edge, ["lang"])):
         for dim in (DSIR_DIM, CLF_DIM):
-            a = sorted(
-                map(
-                    tuple,
-                    doc_bucket_tf(df, dim, carry, impl="relational").collect(),
-                )
-            )
-            b = sorted(
-                map(
-                    tuple,
-                    doc_bucket_tf(df, dim, carry, impl="arrow").collect(),
-                )
-            )
+            a = sorted(map(tuple, _bucket_tf_builtin(df, dim, carry).collect()))
+            b = sorted(map(tuple, doc_bucket_tf(df, dim, carry).collect()))
             assert len(a) > 0
             assert a == b
 
 
 def test_bigram_counts_arrow_bit_equal_on_corpus(spark, sf_dir):
     """The zero-shuffle mapInPandas bigram histogram must produce
-    EXACTLY the relational explode+groupBy's row set over the real
-    corpus, with and without carry columns — the twin-kernel contract
-    (operators/winnow.fingerprint_rows_arrow precedent)."""
+    EXACTLY the builtin explode(char_bigrams) + groupBy row set over the
+    real corpus, with carry columns."""
     from movievectorsearch_spark.catalog import load_table
     from movievectorsearch_spark.operators.dsir import bigram_counts_arrow
 
@@ -207,22 +214,6 @@ def test_bigram_counts_arrow_bit_equal_edges(spark):
     assert a == b
     ids = {t[0] for t in a}
     assert {2, 3, 4}.isdisjoint(ids) and {1, 5, 6} <= ids
-
-
-def test_bigram_xent_identical_across_impls(spark, sf_dir):
-    from movievectorsearch_spark.catalog import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    a = sorted(
-        map(tuple, bigram_xent(docs, carry=["lang"], impl="arrow").collect())
-    )
-    b = sorted(
-        map(
-            tuple, bigram_xent(docs, carry=["lang"], impl="relational").collect()
-        )
-    )
-    assert len(a) > 0
-    assert a == b
 
 
 def test_bigram_kernel_plan_has_no_exchange(spark, sf_dir):

@@ -1,39 +1,9 @@
-"""Guards added in round 10 (ADVICE r9): twin-kernel ``impl`` selector
-validation and the oracle-SQL splice-anchor assertion."""
+"""The oracle-SQL splice-anchor guard (ADVICE r9): ``_slice_sql`` cuts
+a shared CTE chain at an anchor that must occur exactly once."""
 
 import pytest
 
-from movievectorsearch_spark.operators import check_impl
 from movievectorsearch_spark.plans.queries import _slice_sql
-
-
-def test_check_impl_accepts_known_values():
-    assert check_impl("arrow") == "arrow"
-    assert check_impl("relational") == "relational"
-
-
-@pytest.mark.parametrize("bad", ["Arrow", "", "native", "ARROW", None])
-def test_check_impl_rejects_unknown_values(bad):
-    with pytest.raises(ValueError, match="impl must be one of"):
-        check_impl(bad)
-
-
-def test_impl_guard_wired_into_operators():
-    """An unrecognized impl raises instead of silently changing the plan
-    shape — checked at the public operator surface, lazily (no Spark
-    session needed: the guard fires before any plan is built)."""
-    from movievectorsearch_spark.operators import curation, dedup, dsir, winnow
-
-    for fn, kwargs in [
-        (dedup.minhash_signature, dict(id_col="id", text_col="t")),
-        (dedup.oph_signature, dict(id_col="id", text_col="t")),
-        (winnow.winnow_fingerprints, dict(id_col="id", text_col="t")),
-        (winnow.winnow_dup_pairs, dict(id_col="id", text_col="t")),
-        (dsir.bigram_xent, dict()),
-        (curation.contamination_overlap, dict(bench_pred=None)),
-    ]:
-        with pytest.raises(ValueError, match="impl must be one of"):
-            fn(None, impl="Arrow", **kwargs)
 
 
 def test_slice_sql_unique_anchor():

@@ -6,6 +6,9 @@ scale."""
 
 from __future__ import annotations
 
+import math
+from collections import Counter
+
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -218,101 +221,95 @@ def test_viterbi_segment_rejects_overlong_docs(spark):
     assert "chunk longer docs first" in str(ei.value)
 
 
-def test_char_ngrams(spark):
-    from movievectorsearch_spark.operators.packing import char_ngrams
-    from pyspark.sql import functions as F
+def _gram_counts(texts, ks):
+    """Python reference: {k: Counter of code-point k-grams} — a str
+    indexes by code point, as Spark split('') does; None texts and texts
+    shorter than k contribute nothing."""
+    out = {k: Counter() for k in ks}
+    for t in texts:
+        if t is None:
+            continue
+        for k in ks:
+            out[k].update(t[i : i + k] for i in range(len(t) - k + 1))
+    return out
 
-    df = spark.createDataFrame(
-        [("abcd",), ("ab",), ("a",), ("",)], ["t"]
-    ).select(char_ngrams(F.col("t"), 3).alias("g"))
-    rows = [r.g for r in df.collect()]
-    assert rows[0] == ["abc", "bcd"]
-    assert rows[1] == []
-    assert rows[2] == []
-    assert rows[3] == []
+
+def _cost_dict(counts):
+    """{gram: floor(−ln((cnt+1)/(T+V))·1e6)} from one k's Counter."""
+    tot, v = sum(counts.values()), len(counts)
+    return {
+        g: math.floor(-math.log((c + 1) / (tot + v)) * 1_000_000)
+        for g, c in counts.items()
+    }
 
 
-def test_gram_counts_arrow_bit_equal(spark, sf_dir):
-    """ngram_cost_table's Arrow gram counter must reproduce the
-    relational explode+groupBy EXACTLY (counts → identical λ tables)
-    over the corpus and over unicode edge rows — astral chars are one
-    code point per side, None/short texts contribute nothing."""
-    from movievectorsearch_spark.catalog import load_table
-    from movievectorsearch_spark.operators.packing import ngram_cost_table
-
+def _gram_docs(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     edge = spark.createDataFrame(
         [
-            (1, "abca"),
+            (1, "abcabc"),
             (2, "x"),
             (3, ""),
             (4, None),
-            (5, "emoji \U0001F600\U0001F600 and café mixed  CASE"),
+            (5, "emoji \U0001F600\U0001F600ab and café mixed  CASE"),
+            (6, "abca"),
+            (7, "xy"),
+            (8, "emoji \U0001F600\U0001F600 and café mixed  CASE"),
         ],
         ["doc_id", "text"],
     )
-    for df in (docs, edge):
+    return docs, edge
+
+
+def test_gram_counts_arrow_bit_equal(spark, sf_dir):
+    """ngram_cost_table's Arrow gram counter must reproduce the Python
+    Counter reference EXACTLY (counts → identical λ tables) over the
+    corpus and over unicode edge rows — astral chars are one code point
+    per side, None/short texts contribute nothing."""
+    from movievectorsearch_spark.operators.packing import ngram_cost_table
+
+    for df in _gram_docs(spark, sf_dir):
+        ref = _gram_counts([r.text for r in df.select("text").collect()], (1, 2))
         for n in (1, 2):
-            a = sorted(
-                map(tuple, ngram_cost_table(df, n, impl="relational").collect())
-            )
-            b = sorted(
-                map(tuple, ngram_cost_table(df, n, impl="arrow").collect())
-            )
-            assert len(a) > 0
-            assert a == b
+            got = {r.g: r.lam for r in ngram_cost_table(df, n).collect()}
+            assert len(got) > 0
+            assert got == _cost_dict(ref[n])
 
 
 def test_ngram_cost_tables_multi_bit_equal(spark, sf_dir):
-    """Round 12: the one-scan multi-k kernel path of ngram_cost_tables
-    must produce the IDENTICAL λ dicts as the per-k relational union
-    path for every length 1..3 — over the corpus and over unicode edge
-    rows (astral chars one code point, None/short texts contribute
-    nothing, k=3 exercises the packed-key decode)."""
-    from movievectorsearch_spark.catalog import load_table
+    """The one-scan multi-k kernel must count every length 1..3 exactly
+    as the Python Counter reference does, and ngram_cost_tables must
+    return the λ dicts of those counts — over the corpus and over
+    unicode edge rows (astral chars one code point, None/short texts
+    contribute nothing, k=3 exercises the packed-key decode)."""
+    import pytest
+
     from movievectorsearch_spark.operators.packing import (
         gram_counts_arrow_multi,
         ngram_cost_tables,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
-    edge = spark.createDataFrame(
-        [
-            (1, "abcabc"),
-            (2, "xy"),
-            (3, ""),
-            (4, None),
-            (5, "emoji \U0001F600\U0001F600ab and café mixed  CASE"),
-        ],
-        ["doc_id", "text"],
-    )
-    for df in (docs, edge):
-        arrow = ngram_cost_tables(df, [1, 2, 3], impl="arrow")
-        rel = ngram_cost_tables(df, [1, 2, 3], impl="relational")
-        assert all(len(t) > 0 for t in arrow)
-        assert arrow == rel
-        # raw multi-kernel counts per k equal the single-k arrow kernel's
-        multi: dict[int, dict] = {}
+    for df in _gram_docs(spark, sf_dir):
+        ref = _gram_counts(
+            [r.text for r in df.select("text").collect()], (1, 2, 3)
+        )
+        multi = {k: Counter() for k in (1, 2, 3)}
         for r in (
-            gram_counts_arrow_multi(df, [1, 2])
+            gram_counts_arrow_multi(df, [1, 2, 3])
             .groupBy("k", "g")
             .sum("cnt")
             .collect()
         ):
-            multi.setdefault(r.k, {})[r.g] = r["sum(cnt)"]
-        from movievectorsearch_spark.operators.packing import (
-            gram_counts_arrow,
-        )
-
-        for k in (1, 2):
-            single = {}
-            for r in gram_counts_arrow(df, k).groupBy("g").sum(
-                "cnt"
-            ).collect():
-                single[r.g] = r["sum(cnt)"]
-            assert multi[k] == single
-    # empty ks guard (r11 ADVICE)
+            multi[r.k][r.g] = r["sum(cnt)"]
+        assert multi == ref
+        tables = ngram_cost_tables(df, [1, 2, 3])
+        assert all(len(t) > 0 for t in tables)
+        assert tables == [_cost_dict(ref[k]) for k in (1, 2, 3)]
+    # empty ks guard (r11 ADVICE); lengths past 3 overflow the packed key
+    docs = _gram_docs(spark, sf_dir)[0]
     assert ngram_cost_tables(docs, []) == []
+    with pytest.raises(ValueError, match="k in 1..3"):
+        ngram_cost_tables(docs, [2, 4])
 
 
 def test_viterbi_piece_counts_reconstructs_dp_optimum(spark):

@@ -5,6 +5,9 @@ exclusion, and the rightmost-min tie-break."""
 
 from __future__ import annotations
 
+import re
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from movievectorsearch_spark.operators.winnow import (
@@ -15,12 +18,25 @@ from movievectorsearch_spark.operators.winnow import (
 K, W = 8, 4
 
 
+def _norm(text: str) -> str:
+    """functions/text.tokens joined by ' ', under JVM rules: Spark trim
+    strips only ' ', and Java's \\s is ASCII-only (NBSP and U+2028 stay
+    inside tokens)."""
+    return " ".join(
+        t for t in re.split("[ \t\n\x0b\f\r]+", text.strip(" ").lower()) if t
+    )
+
+
 def _fp_sets(spark, rows):
-    """Reference python winnowing: per-doc set of (pos, hash)."""
+    """Reference python winnowing: per-doc set of (pos, hash); NULL text
+    has no set. Hashes fold code points (``ord``), as Spark's
+    split('') + ascii does."""
     P = 2_147_483_647
     out = {}
     for doc_id, text in rows:
-        norm = " ".join(text.lower().split())
+        if text is None:
+            continue
+        norm = _norm(text)
         grams = [norm[i : i + K] for i in range(len(norm) - K + 1)]
         hs = []
         for g in grams:
@@ -39,6 +55,20 @@ def _fp_sets(spark, rows):
     return out
 
 
+def _fp_rows(spark, rows):
+    """fingerprint_rows_arrow's (id, n_grams, fp_h, npos) rows, from
+    :func:`_fp_sets`: docs with no window are excluded."""
+    texts = dict(rows)
+    out = []
+    for doc_id, sel in _fp_sets(spark, rows).items():
+        if not sel:
+            continue
+        n_grams = len(_norm(texts[doc_id])) - K + 1
+        for h, n in Counter(h for _, h in sel).items():
+            out.append((doc_id, n_grams, h, n))
+    return sorted(out)
+
+
 def test_matches_python_reference(spark):
     rows = [
         (1, "the quick brown fox jumps over the lazy dog"),
@@ -52,8 +82,7 @@ def test_matches_python_reference(spark):
         for r in winnow_fingerprints(df, "doc_id", "text", K, W).collect()
     }
     for doc_id, text in rows:
-        norm = " ".join(text.lower().split())
-        assert got[doc_id][0] == len(norm) - K + 1
+        assert got[doc_id][0] == len(_norm(text)) - K + 1
         assert got[doc_id][1] == len(ref[doc_id])
 
 
@@ -143,33 +172,27 @@ def test_dup_pairs_stop_fingerprint_cap(spark):
 
 def test_arrow_kernel_bit_equal_on_corpus(spark, sf_dir):
     """The zero-shuffle mapInPandas kernel must produce EXACTLY the
-    same (id, n_grams, fp_h, npos) row set as the relational oracle
-    mirror over the real corpus — same twin-kernel contract as
-    pipeline/featurizer.hash_embed_arrow."""
+    (id, n_grams, fp_h, npos) row set of the Python reference over the
+    real corpus."""
     from movievectorsearch_spark.catalog import load_table
-    from movievectorsearch_spark.operators.winnow import (
-        fingerprint_rows,
-        fingerprint_rows_arrow,
-    )
+    from movievectorsearch_spark.operators.winnow import fingerprint_rows_arrow
 
     docs = load_table(spark, sf_dir, "documents")
-    rel = sorted(map(tuple, fingerprint_rows(docs, "doc_id", "text").collect()))
+    ref = _fp_rows(spark, [(r.doc_id, r.text) for r in docs.collect()])
     arw = sorted(
         map(tuple, fingerprint_rows_arrow(docs, "doc_id", "text").collect())
     )
-    assert len(rel) > 0
-    assert rel == arw
+    assert len(ref) > 0
+    assert ref == arw
 
 
 def test_arrow_kernel_bit_equal_unicode_edges(spark):
     """JVM-semantics edge rows (the hash_embed_arrow checklist): NBSP
     and U+2028 must NOT split (Java \\s is ASCII-only), tab/VT/FF/CR
     must, trim strips only ' ', astral chars hash as ONE code point,
-    and null/short/empty docs are excluded identically."""
-    from movievectorsearch_spark.operators.winnow import (
-        fingerprint_rows,
-        fingerprint_rows_arrow,
-    )
+    and null/short/empty docs are excluded — checked against the Python
+    reference."""
+    from movievectorsearch_spark.operators.winnow import fingerprint_rows_arrow
 
     rows = [
         (1, "nbsp stays and line sep stays inside tokens here"),
@@ -181,34 +204,14 @@ def test_arrow_kernel_bit_equal_unicode_edges(spark):
         (7, "   leading spaces survive trim-only-space semantics ok   "),
     ]
     df = spark.createDataFrame(rows, "doc_id int, text string")
-    rel = sorted(map(tuple, fingerprint_rows(df, "doc_id", "text").collect()))
+    ref = _fp_rows(spark, rows)
     arw = sorted(
         map(tuple, fingerprint_rows_arrow(df, "doc_id", "text").collect())
     )
-    assert len(rel) > 0
-    assert rel == arw
-    ids = {t[0] for t in rel}
+    assert len(ref) > 0
+    assert ref == arw
+    ids = {t[0] for t in ref}
     assert {4, 5, 6}.isdisjoint(ids)
-
-
-def test_high_level_ops_identical_across_impls(spark, sf_dir):
-    """winnow_fingerprints / winnow_dup_pairs must return identical
-    rows whichever kernel serves them."""
-    from movievectorsearch_spark.catalog import load_table
-    from movievectorsearch_spark.operators.winnow import (
-        winnow_dup_pairs,
-        winnow_fingerprints,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    for fn in (winnow_fingerprints, winnow_dup_pairs):
-        a = [tuple(r) for r in fn(docs, "doc_id", "text", impl="arrow").collect()]
-        b = [
-            tuple(r)
-            for r in fn(docs, "doc_id", "text", impl="relational").collect()
-        ]
-        assert len(a) > 0
-        assert a == b
 
 
 def test_dup_pairs_consistent_with_census(spark, sf_dir):

@@ -28,25 +28,12 @@ def _as_double(v: Column) -> Column:
 
 
 def vector_lit(vec: Sequence[float]) -> Column:
-    """A literal query vector as array<double>.
-
-    A numpy array lowers to ONE Catalyst ``Literal`` node; building it
-    from 64 ``F.lit`` leaves makes a 64-child ``CreateArray`` that gets
-    re-walked by every optimizer rule — measured 3× slower planning on
-    every query that embeds the vector."""
+    """A literal vector as array<double>: one Catalyst ``Literal``."""
     return F.lit(np.asarray(vec, dtype=np.float64))
 
 
 def dot(a: Column, b: Column) -> Column:
-    """Dot product, sequential left-fold (same order as the oracle).
-
-    REJECTED alternative (round 9, measured): unrolling to a fixed-dim
-    ``get(a,0)*get(b,0) + …`` chain — bit-equal (same left-assoc IEEE
-    order) and nominally codegen-friendly, but 2× SLOWER at both 2k
-    rows and 100k broadcast pairs at dim 64 (the 128-node expression
-    tree defeats whole-stage codegen's method-size limits and the
-    per-element ``get``+cast pairs cost more than the interpreted
-    fold's single array traversal). The fold form stands."""
+    """Dot product, sequential left-fold (same order as the oracle)."""
     return F.aggregate(
         F.zip_with(_as_double(a), _as_double(b), lambda x, y: x * y),
         F.lit(0.0),
@@ -116,18 +103,38 @@ def py_cosine_to_query(
     return (py_dot(query_vec, c) / d) if d != 0.0 else None
 
 
-def cosine_to_query(query_vec: Sequence[float], b: Column) -> Column:
-    """cos(q, b) with the query norm folded to a driver-side constant.
+def _double_sql(x: float) -> str:
+    """``x`` as Spark SQL text that parses to the identical double:
+    ``repr`` is the shortest round-trip decimal, and the ``D`` suffix
+    makes the parser read it with Java's correctly rounded
+    ``Double.parseDouble``. NaN and ±inf have no literal syntax, so
+    they go through a string cast (constant-folded at planning)."""
+    x = float(x)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return f"CAST('{'-' if x < 0 else ''}Infinity' AS DOUBLE)"
+    return repr(x) + "D"
 
-    The query vector is a constant, so its norm is too — computing it
-    per row (and carrying a second copy of the 64-element literal in
-    the plan) only bloats the expression tree. One literal array for
-    the dot product, one scalar literal for the norm."""
-    qn = py_l2_norm(query_vec)
-    # nullif instead of when(denom != 0, ...): one norm fold per row
+
+def cosine_to_query(query_vec: Sequence[float], vec_col: str) -> Column:
+    """cos(q, v) for the SQL expression ``vec_col`` (usually a column
+    name), with the query norm folded to a driver-side constant.
+
+    The same ``zip_with`` + ``aggregate`` fold and ``nullif`` denominator
+    as :func:`cosine_similarity`, written as ONE ``F.expr`` over SQL
+    text: the query vector is inlined as exact double literals, which
+    the optimizer folds into one array ``Literal``. Building the same
+    tree through the Column API costs hundreds of py4j round trips per
+    call; parsing the text costs one."""
+    q = ", ".join(_double_sql(x) for x in query_vec)
+    v = f"CAST({vec_col} AS ARRAY<DOUBLE>)"
+    qn = _double_sql(py_l2_norm(query_vec))
+    # nullif instead of CASE WHEN denom != 0: one norm fold per row
     # instead of two, identical values — see cosine_similarity.
-    return dot(vector_lit(query_vec), b) / F.nullif(
-        F.lit(qn) * l2_norm(b), F.lit(0.0)
+    return F.expr(
+        f"aggregate(zip_with(array({q}), {v}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
+        f" / nullif({qn} * sqrt(aggregate({v}, 0D, (acc, x) -> acc + x * x)), 0D)"
     )
 
 

@@ -124,7 +124,7 @@ def srp_search(
     probes = _probe_buckets(_bucket_of(query_vec, planes), n_planes, max_hamming)
     cand = bucketed.filter(F.col("__bucket").isin(probes))
     scored = cand.withColumn(
-        "score", cosine_to_query(query_vec, F.col(vec_col))
+        "score", cosine_to_query(query_vec, vec_col)
     )
     return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k).drop("__bucket")
 
@@ -199,6 +199,6 @@ def ivf_search(
     cells = order[:nprobe]
     cand = assigned.filter(F.col("__cell").isin(cells))
     scored = cand.withColumn(
-        "score", cosine_to_query(query_vec, F.col(vec_col))
+        "score", cosine_to_query(query_vec, vec_col)
     )
     return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k).drop("__cell")

@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from movievectorsearch_spark.functions.vector import cosine_similarity, cosine_to_query, vector_lit
+from movievectorsearch_spark.functions.vector import cosine_similarity, cosine_to_query
 
 
 def with_score(
@@ -41,7 +41,7 @@ def with_score(
 ) -> DataFrame:
     """Attach cosine score vs a single query vector (V1+V4)."""
     return corpus.withColumn(
-        score_col, cosine_to_query(query_vec, F.col(vec_col))
+        score_col, cosine_to_query(query_vec, vec_col)
     )
 
 

@@ -155,7 +155,7 @@ def mmr_rerank(
         corpus.select(
             F.col(id_col).alias("_id"),
             F.col(vec_col).alias("_vec"),
-            cosine_to_query(query_vec, F.col(vec_col)).alias("_score"),
+            cosine_to_query(query_vec, vec_col).alias("_score"),
         )
         .orderBy(F.desc("_score"), "_id")
         .limit(fetch_n)

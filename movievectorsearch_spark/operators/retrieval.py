@@ -164,7 +164,7 @@ def maxsim_scores(
     fixed column order, so the double is bit-stable. Scales as a single
     map-side-combining aggregate regardless of group sizes."""
     cos_cols = [
-        cosine_to_query(qv, F.col(vec_col)).alias(f"q{i}")
+        cosine_to_query(qv, vec_col).alias(f"q{i}")
         for i, qv in enumerate(query_vecs)
     ]
     per_vec = vectors.select(F.col(group_col).alias("grp"), *cos_cols)

@@ -6,6 +6,13 @@
 coalesce chains (search.py:46-62). The reference's Atlas-vs-manual
 fallback control flow disappears: exact scoring IS the semantics; ANN
 is a physical strategy (see :mod:`ann`).
+
+Like the reference, which reads a stored ``films`` collection, a search
+reads the session-cached films view (``catalog.films_view``): one Spark
+job over its in-memory copy, with no per-request join. The plan is built
+from SQL text — one ``where`` string, the ``cosine_to_query`` expression
+and one ``selectExpr`` over :data:`RESULT_COLUMNS` — so building it
+takes a few dozen driver calls instead of hundreds of Column-API ones.
 """
 
 from __future__ import annotations
@@ -15,11 +22,29 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from movievectorsearch_spark.functions.vector import cosine_similarity, cosine_to_query, vector_lit
+from movievectorsearch_spark.functions.vector import cosine_to_query
 
 DEFAULT_LIMIT = 20   # reference config.py:25
 MAX_LIMIT = 100      # reference config.py:26
 VALID_STATUS = ("enriched", "llm_generated")  # reference search.py:19
+
+# P2: the reference's 12-column result projection with coalesce chains
+# and defaults (search.py:46-60). `cast` is backquoted: unquoted it
+# starts a CAST expression.
+RESULT_COLUMNS = (
+    "id",
+    "title",
+    "year",
+    "coalesce(director, element_at(directors, 1), '') AS director",
+    "coalesce(`cast`, CAST(array() AS ARRAY<STRING>)) AS `cast`",
+    "coalesce(genres, CAST(array() AS ARRAY<STRING>)) AS genres",
+    "coalesce(plot, description, '') AS plot",
+    "coalesce(enrichment_response, analysis, '') AS chatgpt_description",
+    "coalesce(similarity, 0D) AS similarity",
+    "poster_url",
+    "processing_status",
+    "ai_provider",
+)
 
 
 def clamp_limit(limit: int | None) -> int:
@@ -29,30 +54,16 @@ def clamp_limit(limit: int | None) -> int:
 
 def base_filter(films: DataFrame) -> DataFrame:
     """P1: every search sees only enriched/llm_generated rows."""
-    return films.filter(F.col("processing_status").isin(*VALID_STATUS))
+    return films.where(
+        "processing_status IN (" + ", ".join(f"'{s}'" for s in VALID_STATUS) + ")"
+    )
 
 
 def project_results(df: DataFrame) -> DataFrame:
-    """P2: the reference's 12-column result projection with coalesce
-    chains and defaults (search.py:46-60). Missing keys become SQL
-    NULLs — the per-row null-key drop (search.py:62) is a serializer
-    concern, documented not replicated."""
-    return df.select(
-        F.col("id"),
-        F.col("title"),
-        F.col("year"),
-        F.coalesce(F.col("director"), F.element_at(F.col("directors"), 1), F.lit(""))
-        .alias("director"),
-        F.coalesce(F.col("cast"), F.array().cast("array<string>")).alias("cast"),
-        F.coalesce(F.col("genres"), F.array().cast("array<string>")).alias("genres"),
-        F.coalesce(F.col("plot"), F.col("description"), F.lit("")).alias("plot"),
-        F.coalesce(F.col("enrichment_response"), F.col("analysis"), F.lit(""))
-        .alias("chatgpt_description"),
-        F.coalesce(F.col("similarity"), F.lit(0.0)).alias("similarity"),
-        F.col("poster_url"),
-        F.col("processing_status"),
-        F.col("ai_provider"),
-    )
+    """P2: :data:`RESULT_COLUMNS`. Missing keys become SQL NULLs — the
+    per-row null-key drop (search.py:62) is a serializer concern,
+    documented not replicated."""
+    return df.selectExpr(*RESULT_COLUMNS)
 
 
 def browse(films: DataFrame, limit: int | None = None, skip: int = 0) -> DataFrame:
@@ -81,7 +92,7 @@ def vector_search(
         "similarity",
         F.when(
             F.col("embedding").isNotNull() & (F.size("embedding") > 0),
-            cosine_to_query(query_vec, F.col("embedding")),
+            cosine_to_query(query_vec, "embedding"),
         ),
     )
     ranked = scored.orderBy(

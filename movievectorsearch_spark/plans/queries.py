@@ -56,7 +56,6 @@ from movievectorsearch_spark.functions.vector import (
     dot_sql,
     l2_norm,
     py_l2_norm,
-    vector_lit,
 )
 from movievectorsearch_spark.operators.knn import knn_batch_literal
 from movievectorsearch_spark.operators import dedup as D
@@ -788,7 +787,7 @@ def knn_topk_q(spark, sf_dir):
     scored = e.select(
         "vec_id",
         "label",
-        F.round(cosine_to_query(QUERY_VEC, F.col("embedding")), 6)
+        F.round(cosine_to_query(QUERY_VEC, "embedding"), 6)
         .alias("score"),
     )
     return scored.orderBy(F.desc("score"), F.asc("vec_id")).limit(20)
@@ -807,7 +806,7 @@ def knn_prefiltered(spark, sf_dir):
     scored = e.select(
         "vec_id",
         "label",
-        F.round(cosine_to_query(QVECS[1], F.col("embedding")), 6)
+        F.round(cosine_to_query(QVECS[1], "embedding"), 6)
         .alias("score"),
     )
     return scored.orderBy(F.desc("score"), F.asc("vec_id")).limit(10)
@@ -903,7 +902,7 @@ def search_vector(spark, sf_dir):
         "year",
         F.when(
             F.col("embedding").isNotNull() & (F.size("embedding") > 0),
-            F.round(cosine_to_query(QUERY_VEC, F.col("embedding")), 6),
+            F.round(cosine_to_query(QUERY_VEC, "embedding"), 6),
         ).alias("similarity"),
     )
     return scored.orderBy(
@@ -5387,7 +5386,7 @@ def union_ranked_unranked(spark, sf_dir):
         "id",
         "title",
         F.lit(1).alias("has_embedding"),
-        F.round(cosine_to_query(QUERY_VEC, F.col("embedding")), 6).alias("similarity"),
+        F.round(cosine_to_query(QUERY_VEC, "embedding"), 6).alias("similarity"),
     )
     unranked = base.filter(~has_vec).select(
         "id",
@@ -6519,7 +6518,7 @@ def hybrid_rrf_fusion(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     vec_scored = e.select(
         F.col("vec_id").alias("id"),
-        F.round(cosine_to_query(QUERY_VEC, F.col("embedding")), 6).alias("c"),
+        F.round(cosine_to_query(QUERY_VEC, "embedding"), 6).alias("c"),
     )
     vrank = rank_topn(vec_scored, "id", "c", 50)
     d = load_table(spark, sf_dir, "documents")
@@ -7529,7 +7528,7 @@ def matryoshka_knn_recall(spark, sf_dir):
         F.col("embedding").isNotNull() & (F.size("embedding") > 0)
     )
     full_top = (
-        e.select("vec_id", cosine_to_query(QUERY_VEC, F.col("embedding")).alias("c"))
+        e.select("vec_id", cosine_to_query(QUERY_VEC, "embedding").alias("c"))
         .orderBy(F.desc("c"), F.asc("vec_id"))
         .limit(_MAT_K)
         .select("vec_id")
@@ -7537,9 +7536,7 @@ def matryoshka_knn_recall(spark, sf_dir):
     trunc_top = (
         e.select(
             "vec_id",
-            cosine_to_query(
-                _MAT_QV16, F.slice(F.col("embedding"), 1, _MAT_DIM)
-            ).alias("c"),
+            cosine_to_query(_MAT_QV16, f"slice(embedding, 1, {_MAT_DIM})").alias("c"),
         )
         .orderBy(F.desc("c"), F.asc("vec_id"))
         .limit(_MAT_K)
@@ -7665,7 +7662,7 @@ def int8_knn_recall(spark, sf_dir):
         .select("vec_id")
     )
     full_top = (
-        e.select("vec_id", cosine_to_query(QUERY_VEC, F.col("embedding")).alias("c"))
+        e.select("vec_id", cosine_to_query(QUERY_VEC, "embedding").alias("c"))
         .orderBy(F.desc("c"), F.asc("vec_id"))
         .limit(_MAT_K)
         .select("vec_id")
@@ -7948,7 +7945,7 @@ def ann_recall_at_k(spark, sf_dir):
         F.col("embedding").isNotNull() & (F.size("embedding") > 0)
     )
     exact = (
-        e.select("vec_id", cosine_to_query(QUERY_VEC, F.col("embedding")).alias("c"))
+        e.select("vec_id", cosine_to_query(QUERY_VEC, "embedding").alias("c"))
         .orderBy(F.desc("c"), F.asc("vec_id"))
         .limit(10)
         .select("vec_id")
@@ -11406,7 +11403,7 @@ def ann_probe_recall_curve(spark, sf_dir):
         e.filter(F.col("embedding").isNotNull() & (F.size("embedding") > 0))
         .select(
             "vec_id",
-            cosine_to_query(QUERY_VEC, F.col("embedding")).alias("c"),
+            cosine_to_query(QUERY_VEC, "embedding").alias("c"),
         )
         .orderBy(F.desc("c"), F.asc("vec_id"))
         .limit(10)
@@ -11605,7 +11602,7 @@ def ivf_probe_recall_curve(spark, sf_dir):
         e.filter(F.col("embedding").isNotNull() & (F.size("embedding") > 0))
         .select(
             "vec_id",
-            cosine_to_query(QUERY_VEC, F.col("embedding")).alias("c"),
+            cosine_to_query(QUERY_VEC, "embedding").alias("c"),
         )
         .orderBy(F.desc("c"), F.asc("vec_id"))
         .limit(10)
@@ -12937,7 +12934,7 @@ def retrieval_rank_correlation(spark, sf_dir):
         e.select(
             F.col("vec_id").alias("id"),
             F.round(
-                cosine_to_query(QUERY_VEC, F.col("embedding")), 6
+                cosine_to_query(QUERY_VEC, "embedding"), 6
             ).alias("c"),
         )
         .orderBy(F.desc("c"), F.asc("id"))
@@ -14215,7 +14212,7 @@ def pq_adc_knn_recall(spark, sf_dir):
         F.broadcast(cand.select("vec_id"))
         .join(e, "vec_id")
         .select(
-            "vec_id", cosine_to_query(QUERY_VEC, F.col("embedding")).alias("c")
+            "vec_id", cosine_to_query(QUERY_VEC, "embedding").alias("c")
         )
         .orderBy(F.desc("c"), F.asc("vec_id"))
         .limit(_MAT_K)
@@ -14223,7 +14220,7 @@ def pq_adc_knn_recall(spark, sf_dir):
     )
     full_top = (
         e.select(
-            "vec_id", cosine_to_query(QUERY_VEC, F.col("embedding")).alias("c")
+            "vec_id", cosine_to_query(QUERY_VEC, "embedding").alias("c")
         )
         .orderBy(F.desc("c"), F.asc("vec_id"))
         .limit(_MAT_K)
@@ -14324,7 +14321,7 @@ def binary_hamming_knn_recall(spark, sf_dir):
     )
     full_top = (
         e.select(
-            "vec_id", cosine_to_query(QUERY_VEC, F.col("embedding")).alias("c")
+            "vec_id", cosine_to_query(QUERY_VEC, "embedding").alias("c")
         )
         .orderBy(F.desc("c"), F.asc("vec_id"))
         .limit(_MAT_K)

@@ -90,7 +90,7 @@ def srp_search_indexed(
     planes = random_hyperplanes(n_planes, dim, seed)
     probes = _probe_buckets(_bucket_of(query_vec, planes), n_planes, max_hamming)
     cand = spark.read.parquet(path).filter(F.col(BUCKET_COL).isin(probes))
-    scored = cand.withColumn("score", cosine_to_query(query_vec, F.col(vec_col)))
+    scored = cand.withColumn("score", cosine_to_query(query_vec, vec_col))
     return (
         scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k).drop(BUCKET_COL)
     )
@@ -159,7 +159,7 @@ def ivf_search_indexed(
     order = sorted(range(len(centroids)), key=lambda i: (-cos(centroids[i]), i))
     cells = order[:nprobe]
     cand = spark.read.parquet(path).filter(F.col(CELL_COL).isin(cells))
-    scored = cand.withColumn("score", cosine_to_query(query_vec, F.col(vec_col)))
+    scored = cand.withColumn("score", cosine_to_query(query_vec, vec_col))
     return (
         scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k).drop(CELL_COL)
     )

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import math
+import struct
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -14,11 +17,14 @@ from movievectorsearch_spark.functions.text import (
     tokens,
     word_shingles,
 )
+from movievectorsearch_spark.catalog import load_table
 from movievectorsearch_spark.functions.vector import (
     cosine_similarity,
+    cosine_to_query,
     dot,
     l2_norm,
     l2_normalize,
+    py_l2_norm,
     vector_lit,
 )
 
@@ -238,6 +244,65 @@ def test_cosine_zero_vector_is_null(spark):
         cosine_similarity(vector_lit([0.0, 0.0]), vector_lit([1.0, 2.0])).alias("c")
     ).collect()[0]
     assert got["c"] is None
+
+
+def _cosine_to_query_column_form(q, vec_col):
+    """Reference: the same fold built through the Column API over a
+    numpy literal, which carries the query doubles verbatim."""
+    v = F.col(vec_col).cast("array<double>")
+    d = F.aggregate(
+        F.zip_with(F.lit(np.asarray(q, dtype=np.float64)), v, lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    n = F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
+    return d / F.nullif(F.lit(py_l2_norm(q)) * n, F.lit(0.0))
+
+
+def _same_double(a, b) -> bool:
+    if a is None or b is None:
+        return a is b
+    if math.isnan(a) or math.isnan(b):
+        return math.isnan(a) and math.isnan(b)
+    return struct.pack("<d", a) == struct.pack("<d", b)
+
+
+def _query(*head):
+    q = np.random.RandomState(3).uniform(-1, 1, 64)
+    q[: len(head)] = head
+    return q.tolist()
+
+
+@pytest.mark.parametrize(
+    "q",
+    [
+        _query(-0.0, 5e-324, 1 / 3),
+        _query(1e308),
+        [0.0] * 64,
+        _query(float("nan")),
+        _query(float("inf")),
+        _query(-float("inf")),
+    ],
+    ids=["signed-zero-subnormal-third", "1e308", "all-zero", "nan", "inf", "-inf"],
+)
+def test_cosine_to_query_sql_literals_are_exact(spark, sf_dir, q):
+    """The SQL-text query literals parse to the identical doubles: every
+    row matches the Column-API form bit for bit over the 500 sf0.001
+    embeddings, and NaN/±inf components plan without a parse error."""
+    rows = (
+        load_table(spark, sf_dir, "embeddings")
+        .select(
+            "vec_id",
+            cosine_to_query(q, "embedding").alias("got"),
+            _cosine_to_query_column_form(q, "embedding").alias("want"),
+        )
+        .collect()
+    )
+    assert rows
+    bad = [r for r in rows if not _same_double(r["got"], r["want"])]
+    assert not bad, bad[:3]
+    if not any(q):
+        assert all(r["got"] is None for r in rows)
 
 
 def test_l2_normalize_unit_norm(spark):

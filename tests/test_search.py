@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from movievectorsearch_spark.catalog import films_view
+from movievectorsearch_spark.catalog import films_view, invalidate
 from movievectorsearch_spark.operators.search import (
     MAX_LIMIT,
     browse,
@@ -54,6 +54,44 @@ def test_vector_search_director_coalesce(spark, sf_dir):
     # (director, directors[0], '') — reference search.py:51
     assert all(r["director"] is not None for r in rows)
     assert any(r["director"].startswith("dir_") for r in rows)
+
+
+def _physical_node_names(plan) -> list[str]:
+    """Node names of an executed plan, through adaptive wrappers and
+    query stages but not into a cached relation's own build plan."""
+    names, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        names.append(node.nodeName())
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+        elif kind.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        else:
+            kids = node.children()
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+    return names
+
+
+def test_vector_search_scans_the_cached_view(spark, sf_dir):
+    """A search over the memoized films view reads its in-memory copy
+    (no per-request documents ⋈ embeddings join), and returns the same
+    rows once the block cache is cleared under it."""
+    invalidate(spark, sf_dir)  # start from a memo miss, whatever ran before
+    df = vector_search(films_view(spark, sf_dir, register=False), QUERY_VEC, limit=50)
+    cached_rows = df.collect()
+    names = _physical_node_names(df._jdf.queryExecution().executedPlan())
+    assert "InMemoryTableScan" in names
+    assert "BroadcastExchange" not in names
+    spark.catalog.clearCache()
+    try:
+        films = films_view(spark, sf_dir, register=False)
+        assert not films.storageLevel.useMemory
+        rows = vector_search(films, QUERY_VEC, limit=50).collect()
+    finally:
+        invalidate(spark, sf_dir)
+    assert rows == cached_rows
 
 
 def test_genre_groups_semantics(spark):

@@ -1,16 +1,19 @@
-"""Expression builders: pure ``pyspark.sql.Column`` factories.
+"""Expression builders.
 
 Everything here compiles to JVM-side Catalyst expressions (no Python
 UDFs), so the hot paths stay inside whole-stage codegen and the same
-logic is mirrorable as ANSI SQL for the DuckDB oracle.
+logic is mirrorable as ANSI SQL for the DuckDB oracle. The text and
+hashing builders return ``pyspark.sql.Column`` values; the vector
+folds are SQL-text builders (``*_expr``) that callers parse with
+``F.expr``, so a fold of any width is one planner call.
 """
 
 from movievectorsearch_spark.functions.vector import (  # noqa: F401
-    cosine_similarity,
-    dot,
-    l2_norm,
-    l2_normalize,
-    vector_lit,
+    array_expr,
+    cosine_expr,
+    cosine_to_query,
+    dot_expr,
+    norm_expr,
 )
 from movievectorsearch_spark.functions.hashing import (  # noqa: F401
     int_mix,

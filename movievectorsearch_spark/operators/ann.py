@@ -25,6 +25,7 @@ subset of the exact brute-force top-k(overfetch) — never value-hashed.
 
 from __future__ import annotations
 
+import re
 from collections.abc import Sequence
 
 import numpy as np
@@ -32,11 +33,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from movievectorsearch_spark.functions.vector import (
-    cosine_similarity,
+    array_expr,
     cosine_to_query,
-    dot,
+    cosine_to_query_expr,
+    dot_expr,
     py_cosine_to_query,
-    vector_lit,
 )
 
 
@@ -45,42 +46,26 @@ def random_hyperplanes(n_planes: int, dim: int, seed: int = 42) -> np.ndarray:
     return rng.normal(size=(n_planes, dim))
 
 
-def srp_bucket(vec_col: Column, planes: np.ndarray) -> Column:
-    """Bucket id = bit-packed signs of v·r_j. All literal arithmetic —
-    no shuffle, no UDF.
+def srp_bucket(vec_col: str, planes: np.ndarray) -> Column:
+    """Bucket id = bit-packed signs of v·r_j for the SQL array
+    expression ``vec_col``. All literal arithmetic — no shuffle, no UDF.
 
-    ONE expression over a nested plane literal (round 11), not
-    n_planes separate when(dot(...)) subtrees: the per-plane form cost
-    ~200 py4j round-trips per call site building the fold chains —
-    measured 1.8-3.6 s of pure driver-side DataFrame CONSTRUCTION per
-    SRP query at sf0.1, as large as the execution itself — and a
-    n_planes× bigger tree for every optimizer walk (the pq_adc nested
-    codeword-literal precedent). The dot here is the same cast +
-    zip_with + sequential left-fold ``functions.vector.dot`` builds,
-    over the same float64 plane rows, so every per-plane dot — and
-    therefore every sign bit and bucket id — is bit-identical to the
-    unrolled form (tests/test_ann.py pins bucket equality)."""
-    planes2d = F.array(*[vector_lit(p) for p in np.asarray(planes, dtype=np.float64)])
-    weights = F.lit(np.array([1 << j for j in range(len(planes))], dtype=np.int64))
-    bits = F.zip_with(
-        planes2d,
-        weights,
-        lambda p, w: F.when(
-            F.aggregate(
-                F.zip_with(
-                    vec_col.cast("array<double>"),
-                    p.cast("array<double>"),
-                    lambda x, y: x * y,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            >= 0,
-            w,
-        ).otherwise(F.lit(0)),
-    )
-    return F.aggregate(bits, F.lit(0).cast("bigint"), lambda a, b: a + b).cast(
-        "int"
+    One expression over a nested plane literal: a lambda over
+    (plane, bit weight) pairs applies :func:`dot_expr` to each plane,
+    so every per-plane dot, sign bit and bucket id is the one the
+    unrolled per-plane sum gives (tests/test_ann.py pins bucket
+    equality against a Python model). The lambda's variables are
+    ``__p`` and ``__w``; a ``vec_col`` that names either would be
+    captured by the lambda instead of read from the row, so it is
+    rejected."""
+    if re.search(r"\b__[pw]\b", vec_col):
+        raise ValueError(f"srp_bucket: vec_col {vec_col!r} names a lambda variable")
+    planes_sql = ", ".join(array_expr(p) for p in np.asarray(planes, dtype=np.float64))
+    weights = ", ".join(f"{1 << j}L" for j in range(len(planes)))
+    return F.expr(
+        f"CAST(aggregate(zip_with(array({planes_sql}), array({weights}),"
+        f" (__p, __w) -> CASE WHEN {dot_expr(vec_col, '__p')} >= 0 THEN __w ELSE 0L END),"
+        f" 0L, (acc, b) -> acc + b) AS INT)"
     )
 
 
@@ -120,7 +105,7 @@ def srp_search(
     dim = len(query_vec)
     planes = random_hyperplanes(n_planes, dim, seed)
     has_vec = corpus.filter(F.col(vec_col).isNotNull() & (F.size(vec_col) > 0))
-    bucketed = has_vec.withColumn("__bucket", srp_bucket(F.col(vec_col), planes))
+    bucketed = has_vec.withColumn("__bucket", srp_bucket(vec_col, planes))
     probes = _probe_buckets(_bucket_of(query_vec, planes), n_planes, max_hamming)
     cand = bucketed.filter(F.col("__bucket").isin(probes))
     scored = cand.withColumn(
@@ -153,18 +138,15 @@ def seeded_centroids(
     return [list(r[0]) for r in rows[:n_cells]]
 
 
-def ivf_cell(vec_col: Column, centroids: list[list[float]]) -> Column:
-    """argmax cosine over centroid literals → cell id."""
-    pairs = F.array(
-        *[
-            F.struct(
-                (F.lit(-1.0) * cosine_similarity(vec_col, vector_lit(c))).alias("neg"),
-                F.lit(i).alias("cell"),
-            )
-            for i, c in enumerate(centroids)
-        ]
+def ivf_cell(vec_col: str, centroids: list[list[float]]) -> Column:
+    """argmax cosine over centroid literals → cell id (ties go to the
+    lowest cell). Each centroid's cosine is :func:`cosine_to_query`'s
+    own text with the centroid as the query."""
+    cells = ", ".join(
+        f"named_struct('neg', -1.0D * ({cosine_to_query_expr(c, vec_col)}), 'cell', {i})"
+        for i, c in enumerate(centroids)
     )
-    return F.array_min(pairs)["cell"]
+    return F.expr(f"array_min(array({cells})).cell")
 
 
 def ivf_assign(
@@ -175,7 +157,7 @@ def ivf_assign(
     """Attach the IVF cell id. At 100 TB this column is the physical
     partition key of the index table (write once, prune every query)."""
     has_vec = corpus.filter(F.col(vec_col).isNotNull() & (F.size(vec_col) > 0))
-    return has_vec.withColumn("__cell", ivf_cell(F.col(vec_col), centroids))
+    return has_vec.withColumn("__cell", ivf_cell(vec_col, centroids))
 
 
 def ivf_search(

@@ -45,7 +45,7 @@ from movievectorsearch_spark.functions.text import (
     tokens,
     word_shingles,
 )
-from movievectorsearch_spark.functions.vector import cosine_similarity
+from movievectorsearch_spark.functions.vector import dot_expr, norm_expr
 
 
 # ---------------------------------------------------------------------------
@@ -349,6 +349,31 @@ def ngram_jaccard_pairs(
 # Embedding cosine near-dup
 # ---------------------------------------------------------------------------
 
+def _unit_vectors(
+    emb: DataFrame, id_col: str, vec_col: str, block_col: str | None = None
+) -> DataFrame:
+    """``(id, nv[, blk])``: each non-empty vector divided by its norm.
+    The norm is its own column, folded once per row; vectors with norm
+    0 have no cosine and are dropped here, so no caller sees a NULL
+    ``nv``."""
+    blk = [F.col(block_col).alias("blk")] if block_col else []
+    return (
+        emb.filter(F.col(vec_col).isNotNull() & (F.size(vec_col) > 0))
+        .select(
+            F.col(id_col).alias("id"),
+            F.col(vec_col).cast("array<double>").alias("v"),
+            F.expr(norm_expr(vec_col)).alias("nrm"),
+            *blk,
+        )
+        .filter(F.col("nrm") != 0.0)
+        .select(
+            "id",
+            F.expr("transform(v, x -> x / nrm)").alias("nv"),
+            *(["blk"] if block_col else []),
+        )
+    )
+
+
 def embedding_neardup_pairs(
     emb: DataFrame,
     id_col: str = "vec_id",
@@ -382,8 +407,6 @@ def embedding_neardup_pairs(
     ``gemm_candidates=False`` keeps the pure column-expression path
     (used by tests as the semantics oracle for the fast path).
     """
-    from movievectorsearch_spark.functions.vector import dot, l2_normalize
-
     if block_col is None and not allow_all_pairs:
         raise ValueError(
             "embedding_neardup_pairs with block_col=None is an all-pairs "
@@ -396,10 +419,7 @@ def embedding_neardup_pairs(
     # vectors recomputes both norms per PAIR (O(pairs) array folds);
     # dot over pre-normalized vectors is one fold per pair and O(rows)
     # normalizations — at block size m that's 3× less pair work
-    cols = [F.col(id_col).alias("id"), l2_normalize(F.col(vec_col)).alias("nv")]
-    if block_col:
-        cols.append(F.col(block_col).alias("blk"))
-    base = emb.filter(F.col(vec_col).isNotNull() & (F.size(vec_col) > 0)).select(*cols)
+    base = _unit_vectors(emb, id_col, vec_col, block_col)
 
     if gemm_candidates and block_col:
         import numpy as np
@@ -433,7 +453,7 @@ def embedding_neardup_pairs(
         return (
             cand.join(av, "a_id")
             .join(bv, "b_id")
-            .withColumn("cos", dot(F.col("a_nv"), F.col("b_nv")))
+            .withColumn("cos", F.expr(dot_expr("a_nv", "b_nv")))
             .filter(F.col("cos") >= threshold)
             .select("a_id", "b_id", "cos")
         )
@@ -450,7 +470,7 @@ def embedding_neardup_pairs(
     joined = a.join(b, join_on) if join_on else a.crossJoin(b)
     joined = joined.filter(F.col("a_id") < F.col("b_id"))
     return (
-        joined.withColumn("cos", dot(F.col("a_nv"), F.col("b_nv")))
+        joined.withColumn("cos", F.expr(dot_expr("a_nv", "b_nv")))
         .filter(F.col("cos") >= threshold)
         .select("a_id", "b_id", "cos")
     )
@@ -495,34 +515,18 @@ def embedding_neardup_pairs_srp(
     import pandas as pd
     from pyspark.sql.types import IntegerType, StructField, StructType
 
-    from movievectorsearch_spark.functions.vector import dot, l2_norm
     from movievectorsearch_spark.operators.ann import (
         random_hyperplanes,
         srp_bucket,
     )
 
-    # norm as its own column: l2_normalize(col) embeds the norm fold
-    # inside the transform lambda AND the null-guard — three evals per
-    # row and a 3x bigger expression tree for the optimizer to walk.
-    base = (
-        emb.filter(F.col(vec_col).isNotNull() & (F.size(vec_col) > 0))
-        .select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-            l2_norm(F.col(vec_col)).alias("nrm"),
-        )
-        .filter(F.col("nrm") != 0.0)  # zero vectors have no cosine
-        .select(
-            "id",
-            F.transform(F.col("v"), lambda x: x / F.col("nrm")).alias("nv"),
-        )
-    )
+    base = _unit_vectors(emb, id_col, vec_col)
     tables = F.array(
         *[
             F.struct(
                 F.lit(t).alias("tbl"),
                 srp_bucket(
-                    F.col("nv"), random_hyperplanes(n_planes, dim, seed + t)
+                    "nv", random_hyperplanes(n_planes, dim, seed + t)
                 ).alias("bkt"),
             )
             for t in range(n_tables)
@@ -601,7 +605,7 @@ def embedding_neardup_pairs_srp(
     return (
         av.join(cand, "a_id")
         .join(bv, "b_id")
-        .withColumn("cos", dot(F.col("a_nv"), F.col("b_nv")))
+        .withColumn("cos", F.expr(dot_expr("a_nv", "b_nv")))
         .filter(F.col("cos") >= threshold)
         .select("a_id", "b_id", "cos")
     )

@@ -8,8 +8,8 @@ Re-expression of the reference's search stack (SURVEY.md §2.9):
                           ``$vectorSearch`` w/ filter, ai_service.py:59-96
                           (exact scoring; ANN is a physical choice, see
                           :mod:`ann`)
-- ``knn_batch``           generalized per-query top-k (query table ×
-                          corpus), which the reference never batches
+- ``knn_batch_literal``   per-query top-k for a batch of query
+                          vectors, which the reference never batches
 
 Scale design
 ------------
@@ -18,8 +18,8 @@ One pass over the corpus, cosine as a codegen'd expression, then
 ``TakeOrderedAndProject``: per-partition top-k heaps + a k-row merge on
 the driver. No global sort, no shuffle of the corpus — the only data
 movement is k rows per partition. That plan is identical at 500 rows
-and at 100 TB; the per-query batch form broadcasts the (small) query
-set so the corpus is still read exactly once for Q queries.
+and at 100 TB; the batch form inlines the (small) query set as a
+literal so the corpus is still read exactly once for Q queries.
 """
 
 from __future__ import annotations
@@ -28,9 +28,14 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from movievectorsearch_spark.functions.vector import cosine_similarity, cosine_to_query
+from movievectorsearch_spark.functions.vector import (
+    array_expr,
+    cosine_expr,
+    cosine_to_query,
+    double_expr,
+    py_l2_norm,
+)
 
 
 def with_score(
@@ -90,70 +95,23 @@ def knn_batch_literal(
 
     The queries are inlined as one literal array of structs and
     exploded against the corpus — a narrow op: no second DataFrame, no
-    join, no broadcast machinery (measured ~6× faster than the
-    broadcast-join form for single-digit batches). Query norms are
-    driver-side constants. The only shuffle is the per-qid window.
-    Use :func:`knn_batch` when the query set is itself a table.
+    join, no broadcast machinery. Query norms are driver-side
+    constants. The only shuffle is the per-qid window.
     """
-    import numpy as np
-
-    from movievectorsearch_spark.functions.vector import dot, l2_norm, py_l2_norm
-
-    qarr = F.array(
-        *[
-            F.struct(
-                F.lit(i + 1).alias("qid"),
-                F.lit(np.asarray(v, dtype=np.float64)).alias("qvec"),
-                F.lit(py_l2_norm(v)).alias("qnorm"),
-            )
-            for i, v in enumerate(query_vecs)
-        ]
+    qarr = ", ".join(
+        f"named_struct('qid', {i + 1}, 'qvec', {array_expr(v)},"
+        f" 'qnorm', {double_expr(py_l2_norm(v))})"
+        for i, v in enumerate(query_vecs)
     )
-    has_vec = corpus.filter(F.col(vec_col).isNotNull() & (F.size(vec_col) > 0))
-    ex = has_vec.select(id_col, F.col(vec_col).alias("__emb")).select(
-        id_col, F.explode(qarr).alias("q"), "__emb"
-    )
-    denom = F.col("q.qnorm") * l2_norm(F.col("__emb"))
-    scored = ex.select(
-        F.col("q.qid").alias("qid"),
-        id_col,
-        F.when(denom != 0.0, dot(F.col("q.qvec"), F.col("__emb")) / denom)
-        .alias(score_col),
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc(score_col), F.asc(id_col))
+    score = cosine_expr("q.qvec", "__emb", "q.qnorm")
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def knn_batch(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    qid_col: str = "qid",
-    qvec_col: str = "qvec",
-    score_col: str = "score",
-) -> DataFrame:
-    """Per-query top-k for a table of query vectors.
-
-    ``broadcast(queries) × corpus`` so the corpus never shuffles, then a
-    per-query window. The window DOES shuffle the scored rows by qid —
-    at scale, pre-aggregate per partition first is what
-    TakeOrderedAndProject would do for one query; for the batched form
-    AQE keeps the (rows × Q) exchange bounded because we filter to the
-    top-k per (qid, partition) is handled by the rank filter pushing
-    into the window. Query side must be small (it is: user queries).
-    """
-    has_vec = corpus.filter(F.col(vec_col).isNotNull() & (F.size(vec_col) > 0))
-    scored = has_vec.crossJoin(F.broadcast(queries)).withColumn(
-        score_col, cosine_similarity(F.col(qvec_col), F.col(vec_col))
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.desc(score_col), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop(qvec_col, vec_col)
+        corpus.where(f"{vec_col} IS NOT NULL AND size({vec_col}) > 0")
+        .selectExpr(id_col, f"explode(array({qarr})) AS q", f"{vec_col} AS __emb")
+        .selectExpr("q.qid AS qid", id_col, f"{score} AS {score_col}")
+        .selectExpr(
+            "*",
+            f"row_number() OVER (PARTITION BY qid ORDER BY {score_col} DESC,"
+            f" {id_col}) AS rank",
+        )
+        .where(f"rank <= {k}")
     )

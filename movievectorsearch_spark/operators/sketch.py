@@ -114,15 +114,6 @@ def cms_estimate(spark: SparkSession, sketch: bytes, item: str) -> int:
 # counter and estimate bit-for-bit (unlike the JVM sketch, whose
 # Murmur layout is engine-specific).
 
-def _cms_bucket(key_col, a: int, b: int, width: int):
-    from movievectorsearch_spark.functions.hashing import (
-        minhash_permute,
-        poly_hash,
-    )
-
-    return (minhash_permute(poly_hash(key_col), a, b) % width).cast("int")
-
-
 def cms_coeffs(depth: int, seed: int = 7):
     from movievectorsearch_spark.functions.hashing import minhash_coeffs
 

@@ -48,13 +48,12 @@ from movievectorsearch_spark.functions.text import (
     tokens_sql,
 )
 from movievectorsearch_spark.functions.vector import (
-    cosine_similarity,
+    cosine_expr,
     cosine_sql,
     cosine_to_query,
     cosine_to_query_sql,
-    dot,
     dot_sql,
-    l2_norm,
+    norm_expr,
     py_l2_norm,
 )
 from movievectorsearch_spark.operators.knn import knn_batch_literal
@@ -867,7 +866,7 @@ def avg_norm_by_label(spark, sf_dir):
         e.groupBy("label")
         .agg(
             F.count("*").alias("n"),
-            F.round(F.avg(l2_norm(F.col("embedding"))), 6).alias("avg_norm"),
+            F.round(F.avg(F.expr(norm_expr("embedding"))), 6).alias("avg_norm"),
         )
         .orderBy("label")
     )
@@ -5344,7 +5343,7 @@ def hashed_tfidf_knn(spark, sf_dir):
     # dedup_minhash_lsh's _persist(sig))
     _persist(vecs)
     qv = vecs.orderBy("doc_id").limit(1).select(F.col("emb").alias("qemb"))
-    score = cosine_similarity(F.col("emb"), F.col("qemb"))
+    score = F.expr(cosine_expr("emb", "qemb"))
     return (
         vecs.crossJoin(F.broadcast(qv))
         .withColumn("score", score)
@@ -7642,7 +7641,7 @@ def int8_knn_recall(spark, sf_dir):
             "vec_id",
             "x",
             F.array_max(F.transform(F.col("x"), F.abs)).alias("s"),
-            l2_norm(F.col("x")).alias("nrm"),
+            F.expr(norm_expr("x")).alias("nrm"),
         )
         .select("vec_id", "s", qcodes.alias("q"), "nrm")
         .filter(F.col("nrm") != 0)
@@ -12756,8 +12755,8 @@ def knn_hubness_report(spark, sf_dir):
     rides the kernel closure, and each corpus batch is scored by
     per-DIMENSION sequential accumulation in NumPy: ``acc += q_j·x_j``
     ascending j is the identical left-fold add order (and separate
-    multiply/add roundings) as functions.vector.dot per pair, ``en``
-    replays l2_norm's fold + sqrt, and the qn·en product and division
+    multiply/add roundings) as functions.vector.dot_expr per pair, ``en``
+    replays norm_expr's fold + sqrt, and the qn·en product and division
     are the same two IEEE ops — every cosine is bit-equal to the JVM
     expression, so the oracle still hash-matches. Only corpus rows
     cross the Arrow boundary; the pair matrix is born and reduced
@@ -12778,7 +12777,7 @@ def knn_hubness_report(spark, sf_dir):
     )
     qids_l = [int(r.qid) for r in q_rows]
     qvs_l = [[float(x) for x in r.qv] for r in q_rows]
-    # same fold + correctly-rounded sqrt as the JVM l2_norm
+    # same fold + correctly-rounded sqrt as the JVM norm_expr
     qns_l = [py_l2_norm(r.qv) for r in q_rows]
     # score + phase-1 top-k INSIDE the scan task (round-4 judge item
     # #2, tightened round 11): the kernel holds a bounded per-query
@@ -13317,7 +13316,7 @@ def embedding_norm_histogram(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull() & (F.size("embedding") > 0)
     )
-    nrm = l2_norm(F.col("embedding"))
+    nrm = F.expr(norm_expr("embedding"))
     b = e.select(
         F.least(
             F.lit(_NORM_HIST_BINS - 1),
@@ -13749,7 +13748,7 @@ def embedding_source_centroid_drift(spark, sf_dir):
             "source",
             "n_docs",
             F.round(
-                cosine_similarity(F.col("av"), F.col("bv")), 6
+                F.expr(cosine_expr("av", "bv")), 6
             ).alias("centroid_cos"),
         )
         .orderBy("source")

@@ -66,7 +66,7 @@ def write_srp_index(
     its probe set."""
     planes = random_hyperplanes(n_planes, dim, seed)
     bucketed = _has_vec(corpus, vec_col).withColumn(
-        BUCKET_COL, srp_bucket(F.col(vec_col), planes)
+        BUCKET_COL, srp_bucket(vec_col, planes)
     )
     bucketed.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
 
@@ -111,7 +111,7 @@ def write_ivf_index(
     own directory. Centroids persist under ``_centroids`` (underscore
     prefix → ignored by data scans) so serving needs no side channel."""
     assigned = _has_vec(corpus, vec_col).withColumn(
-        CELL_COL, ivf_cell(F.col(vec_col), centroids)
+        CELL_COL, ivf_cell(vec_col, centroids)
     )
     assigned.write.mode("overwrite").partitionBy(CELL_COL).parquet(path)
     spark = corpus.sparkSession
@@ -194,7 +194,7 @@ def srp_index_stream_sink(
     indexed collection)."""
     planes = random_hyperplanes(n_planes, dim, seed)
     bucketed = _has_vec(stream_df, vec_col).withColumn(
-        BUCKET_COL, srp_bucket(F.col(vec_col), planes)
+        BUCKET_COL, srp_bucket(vec_col, planes)
     )
     w = (
         bucketed.writeStream.format("parquet")

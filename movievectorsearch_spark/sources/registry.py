@@ -20,10 +20,6 @@ PROFILE_SCHEMA = (
 )
 
 
-def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def read_json_profiles(spark: SparkSession, path: str) -> DataFrame:
     """S6: the ``sample_profile.json`` analog (reference search.py:64-74)
     with the explicit schema from FIXTURES.md §B2 — never inferSchema in

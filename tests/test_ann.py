@@ -4,9 +4,11 @@ recall against exact top-k clears a floor on the real testdata."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from movievectorsearch_spark.catalog import load_table
+from movievectorsearch_spark.functions.vector import py_cosine_to_query, py_dot
 from movievectorsearch_spark.operators import ann
 from movievectorsearch_spark.operators.knn import knn_topk
 from movievectorsearch_spark.plans.queries import QVECS
@@ -78,30 +80,49 @@ def test_ivf_self_query_with_full_probe_is_exact(spark, sf_dir):
     assert got == _exact_ids(spark, sf_dir, QVECS[1], 10)
 
 
-def test_srp_bucket_nested_form_bit_equal_to_unrolled(spark, sf_dir):
-    """The nested-plane-literal srp_bucket (round 11) must assign every
-    corpus vector the exact bucket the original per-plane unrolled
-    expression did — same cast + zip_with + sequential left-fold dot,
-    same >= 0 sign test, same bit weights."""
-    from movievectorsearch_spark.functions.vector import dot, vector_lit
-
-    emb = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("embedding").isNotNull() & (F.size("embedding") > 0)
+def _embedded_rows(spark, sf_dir, *cols):
+    return (
+        load_table(spark, sf_dir, "embeddings")
+        .filter(F.col("embedding").isNotNull() & (F.size("embedding") > 0))
+        .select("vec_id", "embedding", *cols)
+        .collect()
     )
+
+
+def test_srp_bucket_nested_form_bit_equal_to_unrolled(spark, sf_dir):
+    """The nested-plane-literal srp_bucket assigns every corpus vector
+    the bucket of the unrolled per-plane sum: bit j set when the
+    sequential-fold dot with plane j is >= 0, computed here in Python
+    (py_dot folds in the same order, so every sign is bit-exact)."""
     planes = ann.random_hyperplanes(8, 64, seed=42)
+    rows = _embedded_rows(
+        spark, sf_dir, ann.srp_bucket("embedding", planes).alias("nested")
+    )
 
-    def unrolled(vec_col, planes):
-        bits = [
-            F.when(dot(vec_col, vector_lit(p)) >= 0, F.lit(1 << j)).otherwise(
-                F.lit(0)
-            )
-            for j, p in enumerate(planes)
-        ]
-        return sum(bits).cast("int")
+    def unrolled(v):
+        return sum(1 << j for j, p in enumerate(planes) if py_dot(v, p) >= 0)
 
-    rows = emb.select(
-        "vec_id",
-        ann.srp_bucket(F.col("embedding"), planes).alias("nested"),
-        unrolled(F.col("embedding"), planes).alias("flat"),
-    ).collect()
-    assert rows and all(r["nested"] == r["flat"] for r in rows)
+    assert rows and all(r["nested"] == unrolled(r["embedding"]) for r in rows)
+
+
+def test_srp_bucket_rejects_lambda_variable_names():
+    planes = ann.random_hyperplanes(2, 4, seed=42)
+    for vec_col in ("__p", "slice(__w, 1, 4)"):
+        with pytest.raises(ValueError, match="lambda variable"):
+            ann.srp_bucket(vec_col, planes)
+
+
+def test_ivf_cell_is_python_argmax_of_centroid_cosine(spark, sf_dir):
+    """Every row's cell is the argmax over centroids of the driver-side
+    cosine mirror, ties to the lowest cell (``array_min`` over
+    ``(neg, cell)``)."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    cents = ann.seeded_centroids(emb, n_cells=8)
+    rows = _embedded_rows(spark, sf_dir, ann.ivf_cell("embedding", cents).alias("cell"))
+
+    def argmax(v):
+        cos = [py_cosine_to_query(c, v) for c in cents]
+        assert None not in cos  # no zero vectors in the testdata
+        return min(range(len(cents)), key=lambda i: (-cos[i], i))
+
+    assert rows and all(r["cell"] == argmax(r["embedding"]) for r in rows)

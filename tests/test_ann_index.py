@@ -65,7 +65,7 @@ def test_srp_index_probe_reads_only_probed_buckets(spark, srp_index):
     planes = random_hyperplanes(8, 64, 42)
     probes = _probe_buckets(_bucket_of(QUERY_VEC, planes), 8, max_hamming=1)
     expected = (
-        e.withColumn("b", srp_bucket(F.col("embedding"), planes))
+        e.withColumn("b", srp_bucket("embedding", planes))
         .filter(F.col("b").isin(probes))
         .count()
     )

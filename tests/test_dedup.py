@@ -150,6 +150,24 @@ def test_embedding_neardup_blocked(spark):
     assert {(r["a_id"], r["b_id"]) for r in out} == {(1, 2)}
 
 
+def test_embedding_neardup_all_paths_skip_zero_vector(spark):
+    """An all-zero embedding has no cosine: every path drops it instead
+    of failing on it (the GEMM path once stacked its NULL unit vector)."""
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0], 0), (2, [1.0, 0.0], 0), (3, [0.0, 0.0], 0), (4, [0.0, 1.0], 1)],
+        "vec_id INT, embedding ARRAY<DOUBLE>, label INT",
+    )
+    runs = [
+        D.embedding_neardup_pairs(df, "vec_id", "embedding", "label", 0.9),
+        D.embedding_neardup_pairs(
+            df, "vec_id", "embedding", "label", 0.9, gemm_candidates=False
+        ),
+        D.embedding_neardup_pairs_srp(df, dim=2, threshold=0.9),
+    ]
+    for out in runs:
+        assert [(r.a_id, r.b_id, r.cos) for r in out.collect()] == [(1, 2, 1.0)]
+
+
 def test_embedding_neardup_gemm_path_matches_expression_path(spark, sf_dir):
     from movievectorsearch_spark.catalog import load_table
 
@@ -199,7 +217,6 @@ def test_embedding_neardup_srp_block_sizes_bounded(spark, sf_dir):
     import numpy as np
 
     from movievectorsearch_spark.catalog import load_table
-    from movievectorsearch_spark.functions.vector import l2_normalize
     from movievectorsearch_spark.operators.ann import (
         random_hyperplanes,
         srp_bucket,
@@ -207,20 +224,18 @@ def test_embedding_neardup_srp_block_sizes_bounded(spark, sf_dir):
 
     e = load_table(spark, sf_dir, "embeddings")
     n = e.count()
-    base = e.select(
-        "vec_id", l2_normalize(F.col("embedding")).alias("nv"), "label"
-    )
+    base = D._unit_vectors(e, "vec_id", "embedding", "label")
     sizes = []
     for t in range(4):
         planes = random_hyperplanes(8, 64, 42 + t)
         counts = (
-            base.select(srp_bucket(F.col("nv"), planes).alias("bkt"))
+            base.select(srp_bucket("nv", planes).alias("bkt"))
             .groupBy("bkt")
             .count()
         )
         sizes.append(counts.agg(F.max("count")).first()[0])
     max_label_block = (
-        base.groupBy("label").count().agg(F.max("count")).first()[0]
+        base.groupBy("blk").count().agg(F.max("count")).first()[0]
     )
     # each SRP block well under the label blocks and a small corpus frac
     assert max(sizes) < max_label_block / 2, (sizes, max_label_block)

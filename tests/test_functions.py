@@ -19,13 +19,12 @@ from movievectorsearch_spark.functions.text import (
 )
 from movievectorsearch_spark.catalog import load_table
 from movievectorsearch_spark.functions.vector import (
-    cosine_similarity,
+    array_expr,
+    cosine_expr,
     cosine_to_query,
-    dot,
-    l2_norm,
-    l2_normalize,
+    dot_expr,
+    norm_expr,
     py_l2_norm,
-    vector_lit,
 )
 
 
@@ -227,11 +226,9 @@ def test_cosine_matches_numpy(spark):
     a = rng.uniform(-1, 1, 16)
     b = rng.uniform(-1, 1, 16)
     expected = float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
-    df = spark.range(1)
-    got = df.select(
-        cosine_similarity(vector_lit(a.tolist()), vector_lit(b.tolist())).alias("c"),
-        dot(vector_lit(a.tolist()), vector_lit(b.tolist())).alias("d"),
-        l2_norm(vector_lit(a.tolist())).alias("n"),
+    va, vb = array_expr(a.tolist()), array_expr(b.tolist())
+    got = spark.range(1).selectExpr(
+        f"{cosine_expr(va, vb)} AS c", f"{dot_expr(va, vb)} AS d", f"{norm_expr(va)} AS n"
     ).collect()[0]
     assert abs(got["c"] - expected) < 1e-12
     assert abs(got["d"] - float(a @ b)) < 1e-12
@@ -239,11 +236,8 @@ def test_cosine_matches_numpy(spark):
 
 
 def test_cosine_zero_vector_is_null(spark):
-    df = spark.range(1)
-    got = df.select(
-        cosine_similarity(vector_lit([0.0, 0.0]), vector_lit([1.0, 2.0])).alias("c")
-    ).collect()[0]
-    assert got["c"] is None
+    c = cosine_expr(array_expr([0.0, 0.0]), array_expr([1.0, 2.0]))
+    assert spark.range(1).selectExpr(f"{c} AS c").collect()[0]["c"] is None
 
 
 def _cosine_to_query_column_form(q, vec_col):
@@ -306,11 +300,61 @@ def test_cosine_to_query_sql_literals_are_exact(spark, sf_dir, q):
 
 
 def test_l2_normalize_unit_norm(spark):
-    df = spark.range(1)
-    got = df.select(
-        l2_norm(l2_normalize(vector_lit([3.0, 4.0]))).alias("n")
-    ).collect()[0]
-    assert abs(got["n"] - 1.0) < 1e-12
+    """The engine's one normalization idiom (dedup's unit vectors): a
+    norm column, a zero-norm filter, then ``transform``."""
+    from movievectorsearch_spark.operators.dedup import _unit_vectors
+
+    df = spark.createDataFrame(
+        [(1, [3.0, 4.0]), (2, [0.0, 0.0])], "id INT, v ARRAY<DOUBLE>"
+    )
+    got = _unit_vectors(df, "id", "v").selectExpr("id", f"{norm_expr('nv')} AS n").collect()
+    assert [r["id"] for r in got] == [1]
+    assert abs(got[0]["n"] - 1.0) < 1e-12
+
+
+def _py4j_calls(spark, build) -> int:
+    """py4j round trips made by a second ``build()`` (the driver-side
+    cost of building a plan, paid once per request; the first call
+    also pays one-time lookups)."""
+    build()
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    n = 0
+
+    def counting(*args, **kwargs):
+        nonlocal n
+        n += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        build()
+    finally:
+        del client.send_command
+    return n
+
+
+def test_vector_folds_build_in_a_few_planner_calls(spark, sf_dir):
+    """Each fold is one parsed SQL expression, so its build cost does not
+    grow with vector width or with the number of planes, centroids or
+    queries; a Column-API fold costs one call per expression node
+    (thousands here). No Spark job runs."""
+    from movievectorsearch_spark.operators.ann import ivf_cell, random_hyperplanes, srp_bucket
+    from movievectorsearch_spark.operators.knn import knn_batch_literal
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    rng = np.random.RandomState(5)
+    planes = random_hyperplanes(8, 64)
+    cents = rng.uniform(-1, 1, (8, 64)).tolist()
+    queries = rng.uniform(-1, 1, (3, 64)).tolist()
+    counts = {
+        "srp_bucket": _py4j_calls(spark, lambda: emb.select(srp_bucket("embedding", planes))),
+        "ivf_cell": _py4j_calls(spark, lambda: emb.select(ivf_cell("embedding", cents))),
+        "knn_batch_literal": _py4j_calls(spark, lambda: knn_batch_literal(emb, queries)),
+    }
+    assert counts["srp_bucket"] <= 10, counts
+    assert counts["ivf_cell"] <= 10, counts
+    assert counts["knn_batch_literal"] <= 120, counts
 
 
 def test_split_sentences_udtf(spark):

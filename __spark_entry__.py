@@ -1,13 +1,14 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+Verification runs ``entry(spark)`` as a smoke check, runs each
+``queries()[name]`` at sf=0.01 and compares it against the matching
+``oracle_sql()[name]`` via DuckDB (row-count + schema +
+order-insensitive value-hash).
 
 The actual registry lives in movievectorsearch_spark/plans/queries.py —
 one named plan per operator from SURVEY.md §2, each citing the
-reference file:line it re-expresses.
+reference file:line it re-expresses. Both ``queries()`` and
+``oracle_sql()`` list it in registration order.
 """
 
 from __future__ import annotations
@@ -29,12 +30,11 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    return Q.queries()
+    return {name: spec["spark"] for name, spec in Q.QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL equivalents — one per registered
-    query (as of round 6 every entry has one; engine-specific values
-    like sketch estimates are gated via bound/invariant columns the
-    oracle emits as constants)."""
-    return Q.oracle_sql()
+    query (engine-specific values like sketch estimates are gated via
+    bound/invariant columns the oracle emits as constants)."""
+    return {name: spec["sql"] for name, spec in Q.QUERIES.items()}

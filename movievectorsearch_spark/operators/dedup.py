@@ -317,14 +317,14 @@ def ngram_jaccard_pairs(
     a = base.select(
         F.col("did").alias("a_id"),
         *[F.col(c).alias(f"a_{c}") for c in (block_cols or [])],
-        "shingle",
+        F.col("shingle").alias("a_sh"),
     )
     b = base.select(
         F.col("did").alias("b_id"),
         *[F.col(c).alias(f"b_{c}") for c in (block_cols or [])],
-        "shingle",
+        F.col("shingle").alias("b_sh"),
     )
-    cond = [a.shingle == b.shingle] + [
+    cond = [F.col("a_sh") == F.col("b_sh")] + [
         F.col(f"a_{c}") == F.col(f"b_{c}") for c in (block_cols or [])
     ]
     inter = (

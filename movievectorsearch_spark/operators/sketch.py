@@ -19,9 +19,11 @@ Datasketches-backed aggregates that make this a first-class pattern:
 
 The reference has no approximate operators (its corpus is hundreds of
 rows); this is part of the scale tier SURVEY.md §7 step 8 calls for.
-Sketch estimates are engine-specific, so these are rows-only queries:
-tests/test_sketch.py bounds them against exact counts instead of a
-DuckDB hash-compare.
+Sketch estimates are engine-specific, so the registry entries built on
+these operators hash-check only what DuckDB can reproduce: exact
+counts, portable-hash counters, and bound checks emitted as boolean
+columns. tests/test_sketch.py bounds the raw estimates against exact
+counts.
 """
 
 from __future__ import annotations

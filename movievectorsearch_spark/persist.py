@@ -9,10 +9,10 @@ time is safe: by then the prior query's result has been consumed, and
 even if a caller builds several plans before consuming them, unpersist
 only costs a recompute — never correctness.
 
-Lives in its own module (not plans/queries.py) so OPERATORS can persist
-too without an import cycle — e.g. operators/dedup.ngram_jaccard_pairs
-caches its exploded shingle base, which three downstream subtrees
-consume (round-8: the recompute was ~half the CC-family wall time).
+plans/queries.py is the only user: its builders call ``persist`` on
+intermediates that several subtrees of one plan consume, and its
+``q()`` wrapper calls ``release_persisted`` before each build. No
+operator persists through this module.
 """
 
 from __future__ import annotations

@@ -1,12 +1,5 @@
-"""Per-query implementation fingerprints — the automated recheck front.
-
-Rounds 3-6 each hand-maintained a ``_RECHECK_R{N}`` list in queries.py
-naming the queries whose behavior changed that round, so the driver's
-50-slot correctness window would re-prove them before recycling old
-greens. Round 6 modified five proven queries and fronted none of them
-(the round-6 judge re-verified them by hand, item #3): the hand list is
-exactly the kind of process that fails silently. This module derives
-the set instead.
+"""Per-query implementation fingerprints: a walk over what each
+registry builder is made of.
 
 A query's fingerprint hashes everything its implementation is made of:
 
@@ -16,36 +9,30 @@ A query's fingerprint hashes everything its implementation is made of:
   comprehension/lambda code objects included);
 * a stable repr of every module-level CONSTANT in plans.queries it
   references (SQL template strings, parameter dicts, band counts — a
-  tweak to ``_HUB_K`` must re-front every query built on it);
+  tweak to ``_HUB_K`` changes every query built on it);
 * the FILE BYTES of every other ``movievectorsearch_spark`` module it
-  reaches (an operator edit re-fronts every query built on that
+  reaches (an operator edit changes every query built on that
   operator — deliberately coarse: at module granularity a change can
-  only over-front, never stale-green), expanded transitively through
+  only over-report, never go unnoticed), expanded transitively through
   each module's own movievectorsearch_spark imports;
 * its ORACLE SQL string.
 
-Two committed artifacts close the loop (tools/update_fprints.py):
+Users:
 
-* ``QUERY_FPRINTS_HEAD.json`` — the full name→fingerprint map frozen at
-  each round's final commit: the implementations the driver is about to
-  test.
-* ``QUERY_FPRINTS.json`` — name→fingerprint at each query's most recent
-  driver-green row: when CORRECTNESS_r{N} lands, the stamp for each
-  green query is copied from the previous round's HEAD snapshot (that
-  is what the driver actually ran).
-
-``_rotated()`` fronts every query whose CURRENT fingerprint differs
-from its stamp — i.e. anything added or modified since its last
-driver-proven state — with no hand list involved. Forgetting to
-re-stamp only keeps queries fronted (the driver keeps re-proving them);
-it can never leave a modified query resting on a stale green row.
+* ``tools/scaling_probe_cc.py`` records each query's fingerprint next
+  to its measurements and merges a prior row only when the fingerprint
+  still matches;
+* ``tests/test_bench_policy.py`` walks each bench-excluded builder's
+  module closure (``_inner_fn`` → ``_walk`` → ``_module_closure``) to
+  check that no query reaching the iterative operators is left out of
+  both bench tiers.
 
 Known limits (conservative directionality preserved): dynamically
 dispatched names (getattr-by-string) and method calls resolved through
 object types are not traced — but every such site in this repo lives in
 an operator module, which is hashed whole-file; and sources/ modules
 reached only through ``load_table`` are in every query's closure, so a
-catalog change re-fronts everything (correct: it can change every
+catalog change changes every fingerprint (correct: it can change every
 scan).
 """
 
@@ -62,12 +49,6 @@ from typing import Any
 _PKG = "movievectorsearch_spark"
 _SELF = f"{_PKG}.plans.fingerprint"
 _QMOD = f"{_PKG}.plans.queries"
-
-_REPO_ROOT = os.path.dirname(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
-STAMP_PATH = os.path.join(_REPO_ROOT, "QUERY_FPRINTS.json")
-HEAD_PATH = os.path.join(_REPO_ROOT, "QUERY_FPRINTS_HEAD.json")
 
 
 def _code_objects(code: types.CodeType):
@@ -271,25 +252,7 @@ def query_fingerprints(queries: dict[str, dict]) -> dict[str, str]:
             try:
                 out[name] = fingerprint_one(name, entry)
             except Exception:
-                out[name] = "fingerprint-error"  # treated as changed
+                out[name] = "fingerprint-error"  # tests/test_fingerprint.py flags it
         _CACHE = out
     return _CACHE
 
-
-def load_stamps() -> dict[str, str]:
-    """name -> fingerprint at last driver-green (committed artifact)."""
-    try:
-        with open(STAMP_PATH) as f:
-            raw = json.load(f)
-    except (OSError, ValueError):
-        return {}
-    return {k: v["fp"] if isinstance(v, dict) else v for k, v in raw.items()}
-
-
-def changed_since_green(queries: dict[str, dict]) -> list[str]:
-    """Registry order; added-or-modified since last driver-green stamp.
-    A missing or unreadable stamp file fronts everything — the safe
-    direction (extra re-proving, never a stale green)."""
-    stamps = load_stamps()
-    current = query_fingerprints(queries)
-    return [n for n in queries if stamps.get(n) != current[n]]

@@ -132,16 +132,16 @@ def _cents(col: str) -> F.Column:
 
 QUERIES: dict[str, dict] = {}
 
-# Persist lifecycle: moved to movievectorsearch_spark/persist.py so
-# operators can register cached intermediates too (no import cycle);
-# the q() wrapper below still releases on every next-query build.
+# Persist lifecycle (movievectorsearch_spark/persist.py): builders
+# persist reused intermediates; the q() wrapper below releases them on
+# every next-query build.
 from movievectorsearch_spark.persist import (  # noqa: E402
     persist as _persist,
     release_persisted,
 )
 
 
-def q(name: str, sql: str | None = None):
+def q(name: str, sql: str):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             release_persisted()
@@ -4779,7 +4779,8 @@ def multimodal_decode(spark, sf_dir):
 
 
 # ===========================================================================
-# ANN + pipeline + approx (rows-only: non-SQL-expressible / approximate)
+# ANN + pipeline + approx (oracles inline the seeded index parameters
+# or emit the bound checks as constant columns)
 # ===========================================================================
 
 # built-once-probed-forever: the persisted index is the point (the
@@ -7931,7 +7932,10 @@ FROM exact JOIN ann USING (vec_id)
 """
 
 
-@q("ann_recall_at_k")
+@q(
+    "ann_recall_at_k",
+    _ANN_RECALL_SQL.format(ann_select=_ann_srp_sql().strip()),
+)
 def ann_recall_at_k(spark, sf_dir):
     """Recall@10 of the persisted SRP-LSH index against exact KNN — the
     serving-quality number an ANN deployment is judged by, computed as
@@ -7954,13 +7958,6 @@ def ann_recall_at_k(spark, sf_dir):
         F.count("*").cast("bigint").alias("n_overlap"),
         F.round(F.count("*") / F.lit(10.0), 6).alias("recall"),
     )
-
-
-# wire the ann_recall oracle from the same literal-hyperplane SQL the
-# SRP query uses (the builder isn't available until after its def above)
-QUERIES["ann_recall_at_k"]["sql"] = _ANN_RECALL_SQL.format(
-    ann_select=_ann_srp_sql().strip()
-)
 
 
 # ===========================================================================
@@ -15918,554 +15915,3 @@ def unigram_lm_train_converged(spark, sf_dir):
         "round bigint, vocab_v bigint, n_multi bigint, n_kept bigint, "
         "prev_cost_ppm bigint, sum_cost_ppm bigint, sum_pieces bigint",
     ).orderBy("round")
-
-
-# ---------------------------------------------------------------------------
-# Registry ordering for the driver's bounded CORRECTNESS window.
-#
-# The verify driver hash-checks the FIRST 50 entries of ``queries()`` each
-# round (verified against CORRECTNESS_r01.json: checked set == first 50 of
-# insertion order). With 134 registered queries, a static order leaves 84
-# queries without a hard driver signal forever. We therefore rotate: names
-# already driver-proven in a previous round sort last; queries touched or
-# added this round sort first (so behavior changes get re-proven); the
-# remaining not-yet-checked oracle-backed queries fill the window. Round 3
-# rotates again (append r2's checked set to _DRIVER_GREEN) until every
-# query has a green row on record.
-# ---------------------------------------------------------------------------
-
-def _driver_green_from_files(min_round: int = 0) -> set[str]:
-    """Union of hash-proven names across the driver's
-    CORRECTNESS_r{N}.json files with N >= ``min_round`` — the rotation
-    maintains itself each round instead of needing a hand-updated set."""
-    import glob
-    import json
-    import os
-    import re
-
-    root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    green: set[str] = set()
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m or int(m.group(1)) < min_round:
-            continue
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(data, dict):
-            continue
-        for name, row in data.items():
-            if isinstance(row, dict) and row.get("hash_match") is True:
-                green.add(name)
-    return green
-
-
-# driver-green in round 1 (keys of CORRECTNESS_r01.json, all hash_match=true)
-# — kept as a literal fallback; _driver_green_from_files() supersedes it as
-# new CORRECTNESS_r{N}.json files appear
-_DRIVER_GREEN_R1 = {
-    "scan_filter_limit", "point_lookup", "count_scan", "distinct_keys",
-    "projection_coalesce", "year_patch_clamp", "slug_derive",
-    "agg_counts_by_type", "min_max_year_range", "explode_top_words",
-    "genre_groups", "top_k_sort", "multi_key_sort", "window_topk_per_group",
-    "anti_join_new_keys", "semi_join_active", "fuzzy_band_join",
-    "q1_pricing_summary", "q3_shipping_priority", "q5_region_revenue",
-    "q4_order_priority", "q10_returned_items", "knn_topk", "knn_prefiltered",
-    "knn_batch", "avg_norm_by_label", "search_vector", "search_browse",
-    "dedup_exact", "dedup_minhash_signature", "dedup_minhash_lsh",
-    "dedup_simhash", "dedup_ngram_jaccard", "dedup_clusters",
-    "dedup_embedding_cosine", "text_profile", "lang_detect",
-    "events_props_json", "events_props_variant", "events_hourly",
-    "events_resample_ffill", "events_sessionize", "salted_join_users",
-    "events_sliding_window", "table_profile", "events_window_frames",
-    "events_range_frame", "events_value_percentiles",
-    "partitioned_sink_scan", "q14_promo_revenue",
-}
-
-# modified or added THIS round — front of the window so the driver re-proves
-# them with their new implementations (bucketed embedding dedup, executor-side
-# CMS, persisted-ANN variants, newly-oracled sampling queries, ...).
-_RECHECK_FIRST = [
-    "dedup_embedding_cosine",
-    "mixture_sample_temperature",
-    "kmeans_relational_step",
-    "heavy_hitters_cms",
-    # newly oracle-backed this round (were rows-only in r1)
-    "stratified_sample",
-    "approx_distinct_users",
-    "ann_srp_topk",
-    "ann_ivf_topk",
-    # new this round
-    "hashed_tfidf_knn",
-    # newly oracle-backed this round (batch 2)
-    "ingest_pipeline",
-    "profile_json_lookup",
-    "multimodal_decode",
-    "ingest_with_cost_accounting",
-    "chunk_documents",
-    "vocab_oov_rate",
-    "quality_filter_funnel",
-    # new in round-2 batch 3
-    "paragraph_dedup",
-    "domain_cap_sample",
-    "dedup_prefix_containment",
-    "histogram_quantile_sketch",
-    "decayed_popularity",
-    "dedup_end_to_end",
-    # new in round-2 batch 4 (hybrid retrieval + graph + rolling distinct)
-    "keyword_bm25_topk",
-    "hybrid_rrf_fusion",
-    "colbert_maxsim_topk",
-    "pagerank_step_suppliers",
-    "rolling_wau_stickiness",
-    # new in round-2 batch 5
-    "sql_pipe_aggregate",
-    "pandas_mad_by_type",
-    "incremental_dedup_store",
-    "text_roundtrip_agg",
-    # new in round-2 batch 6
-    "rcte_hierarchy_rollup",
-    "token_simpson_diversity",
-    "histogram_quantiles_by_group",
-    # new in round-2 batch 7
-    "table_checksum_audit",
-    "power_iteration_matvec",
-    # new in round-2 batch 8
-    "bpe_merge_step",
-    "winsorize_by_sketch",
-    "negative_sampling_pairs",
-    # new in round-2 batch 9
-    "parameterized_sql_filter",
-    # new in round-2 batch 10
-    "matryoshka_knn_recall",
-    "int8_knn_recall",
-    # new in round-2 batch 11
-    "covisitation_pairs",
-    "langid_confusion",
-    "source_token_cosine",
-    # new in round-2 batch 12
-    "ngram_containment_pairs",
-    "ann_recall_at_k",
-    # new in round-2 batch 13 (beyond the 50-entry window this round;
-    # the rotation queues them for round 3 automatically)
-    "events_burst_detection",
-    "bigram_novelty_rate",
-    "first_touch_attribution",
-    # new in round-2 batch 14 (iterative convergence loops, containment
-    # sketches, passage mining, Markov/autocorr/encoding/interp)
-    "pagerank_converged",
-    "power_iteration_converged",
-    "containment_minhash_pairs",
-    "duplicate_passage_spans",
-    "next_event_markov",
-    "events_autocorr",
-    "target_encoding_smoothed",
-    "events_gap_fill_interp",
-    # new in round-2 batch 15
-    "embedding_outliers_by_label",
-    "exact_median_mad_by_type",
-    "hourly_seasonality_profile",
-    # new in round-2 batch 16
-    "cross_source_dup_matrix",
-    "pii_cluster_quarantine",
-    # new in round-2 batch 17
-    "bloom_seen_customers",
-    "mmr_rerank_topk",
-    # new in round-2 batch 18
-    "global_shuffle_positions",
-    "dedup_rewrite_survivors",
-    # new in round-2 batch 19
-    "events_trend_slope",
-    "session_pattern_match",
-    # new in round-2 batch 20
-    "dataset_datasheet",
-    # new in round-2 batch 21
-    "events_anomaly_mad",
-    "orders_market_basket",
-    # new in round-2 batch 22
-    "leakage_safe_split",
-    "bpe_apply_encode",
-    "length_bucket_padding",
-    "events_changepoint_cusum",
-    "corpus_release_report",
-    # new in round-2 batch 24
-    "join_size_estimate_cms",
-    "partition_skew_report",
-    # new in round-2 batch 25
-    "dedup_graph_stats",
-    "funnel_conversion_windowed",
-    "events_retention_cohorts",
-    "parts_abc_pareto",
-    # new in round-2 batch 26
-    "dedup_oph_pairs",
-    # new in round-2 batch 27
-    "vocab_coverage_curve",
-    "dedup_threshold_sweep",
-    "split_drift_ks_check",
-    "ann_probe_recall_curve",
-    "corpus_shard_manifest",
-    "ivf_probe_recall_curve",
-    # new in round-2 batch 29
-    "parallel_text_mining",
-    "dedup_keep_best_rewrite",
-    "multimodal_exact_dedup",
-    # new in round-2 batch 30
-    "semantic_clusters",
-    "ab_test_readout",
-    "customer_rfm_segments",
-    "blocklist_screen",
-]
-
-
-# behavior changed in round 3 — each re-proves at the very front of the
-# window until a round-3+ CORRECTNESS file records it green, regardless
-# of earlier green rows (those proved the OLD implementation):
-#   vocab_coverage_curve  — rank/cumsum rewired through global_rank_cumsum
-#   orders_market_basket  — per-basket item cap (both engines)
-#   bloom_seen_customers  — known-absent probes now negated keys
-#   events_trend_slope    — degenerate-denominator NULL guard
-#   events_autocorr       — degenerate-denominator NULL guard
-#   mmr_rerank_topk       — half-away-from-zero rounding (DuckDB parity)
-_RECHECK_R3 = [
-    "vocab_coverage_curve",
-    "orders_market_basket",
-    "bloom_seen_customers",
-    "events_trend_slope",
-    "events_autocorr",
-    "mmr_rerank_topk",
-    # new in round-3 batch 1
-    "repetition_filter_report",
-    "tokenizer_fertility_by_lang",
-    "mixture_weights_plan",
-    # new in round-3 batch 2
-    "lsh_candidate_quality",
-    "ivf_cell_balance_report",
-    "covisitation_triangles",
-    # new in round-3 batch 3
-    "knn_hubness_report",
-    "retrieval_rank_correlation",
-    "poisson_bootstrap_ci",
-]
-
-
-# behavior or plan changed in round 5 — re-prove at the very front of
-# the window until a round-5+ CORRECTNESS file records each green:
-#   - knn_hubness_report: phase-1 top-k moved INSIDE the scan task
-#     (mapInPandas bounded carry) — values identical, plan changed
-#     (round-4 judge #3)
-#   - poisson_bootstrap_ci: integer-domain int_mix draw replaces the
-#     per-row string concat → DIFFERENT deterministic resamples,
-#     oracle mirrored (round-4 judge #5)
-#   - orders_market_basket: in-task array pair expansion replaces the
-#     self-join pair stage — values identical, plan changed (round-4
-#     judge #4)
-#   - q11_important_parts: scale-free 3×-mean threshold replaces the
-#     fixed 0.1%-share constant → different rows, oracle mirrored
-#     (round-4 judge #6)
-_RECHECK_R5 = [
-    "knn_hubness_report",
-    "poisson_bootstrap_ci",
-    "orders_market_basket",
-    "q11_important_parts",
-]
-
-# behavior or arithmetic changed in round 4 — re-prove at the very
-# front of the window until a round-4+ CORRECTNESS file records each
-# green (earlier green rows proved the OLD implementation):
-#   - the ppm/quadratic-statistic overflow class (round-3 judge #1):
-#     every exact-int multiply whose operand is corpus-sized widened to
-#     DECIMAL(38,0) (Spark) / HUGEINT (oracle) in BOTH engines
-#   - parts_abc_pareto additionally dropped the -rev*1e9+pk packed
-#     order key for direct global_rank_cumsum sort expressions
-#   - knn_hubness_report: fixed-size hash-ranked query sample +
-#     two-phase top-k (round-3 judge #3/#4)
-#   - mixture_weights_plan: zero-token epochs_ceil NULL guard (advisor)
-#   - keyword_bm25_topk / hybrid_rrf_fusion / retrieval_rank_correlation
-#     share bm25_scores_ppm, whose idf/saturation numerators widened
-_RECHECK_R4 = [
-    "parts_abc_pareto",
-    "knn_hubness_report",
-    "mixture_weights_plan",
-    "orders_market_basket",
-    "dataset_datasheet",
-    "split_drift_ks_check",
-    "keyword_bm25_topk",
-    "hybrid_rrf_fusion",
-    "retrieval_rank_correlation",
-    "next_event_markov",
-    "events_autocorr",
-    "events_trend_slope",
-    "hourly_seasonality_profile",
-    "cross_source_dup_matrix",
-    "length_bucket_padding",
-    "join_size_estimate_cms",
-    "partition_skew_report",
-    "dedup_graph_stats",
-    "repetition_filter_report",
-    "tokenizer_fertility_by_lang",
-    "lsh_candidate_quality",
-    "ivf_cell_balance_report",
-    "covisitation_triangles",
-    "events_burst_detection",
-    "token_simpson_diversity",
-    "source_token_cosine",
-    "poisson_bootstrap_ci",
-    "events_outliers",
-    "blocklist_screen",
-    "shard_balance_report",
-    "kfold_assignment_counts",
-]
-
-# round-3 judge item #3: the §2-mapped stragglers (3 rounds with no
-# driver row), then the TPC-H adaptation family, then the format tier
-# and the Python DataSource entries — explicitly fronted ahead of the
-# generic registry-order backlog
-_PRIORITY_R4 = [
-    # the 8 §2 stragglers
-    "upsert_latest_wins",
-    "ingest_parse",
-    "embedding_text_assembly",
-    "sql_api_passthrough",
-    "array_tail_slice",
-    "union_ranked_unranked",
-    "sentence_split_udtf",
-    "events_rank_functions",
-    # TPC-H family
-    "q2_min_cost_supplier",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "q11_important_parts",
-    "q12_late_shipment_priority",
-    "q13_order_distribution",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q17_small_quantity_revenue",
-    "q18_big_orders",
-    "q19_disjunctive_predicates",
-    "q20_dominant_suppliers",
-    "q21_waiting_suppliers",
-    "q22_dormant_customers",
-    # format tier
-    "csv_roundtrip_agg",
-    "orc_roundtrip_agg",
-    "jsonl_roundtrip_agg",
-    "clustered_scan_agg",
-    "zorder_scan_agg",
-    # Python DataSource entries
-    "moviegen_source_rows",
-    "moviegen_source_agg",
-    "moviegen_curate_roundtrip",
-]
-
-
-def _driver_green_after_r1() -> set[str]:
-    """Hash-proven names from round-2+ files — used to retire
-    _RECHECK_FIRST entries: an entry stays at the front only until a
-    round-2+ file proves its (current) implementation, then it stops
-    occupying window slots and the window rotates to unproven queries."""
-    return _driver_green_from_files(min_round=2)
-
-
-def _rotated() -> list[str]:
-    names = list(QUERIES)
-    proven = _driver_green_from_files() | _DRIVER_GREEN_R1
-    # AUTOMATED recheck front (round-6 judge item #3, replaces the
-    # hand-maintained _RECHECK_R{N} pattern for round 7+): any query
-    # whose implementation fingerprint (builder source + referenced
-    # constants + transitive operator-module hashes + oracle SQL,
-    # plans/fingerprint.py) differs from its stamp at last driver-green
-    # (QUERY_FPRINTS.json, updated from each round's CORRECTNESS file by
-    # tools/update_fprints.py) fronts the window — added or modified
-    # queries re-prove without anyone maintaining a list.
-    from . import fingerprint as _fp
-
-    front_auto = _fp.changed_since_green(QUERIES)
-    # Round-8 priority splice: the automated front this round is 51
-    # entries (docstring-only module-hash changes swept the whole dedup
-    # family in), one more than the driver's 50-slot window — so the
-    # queries whose BEHAVIOR or proof actually changed go first and the
-    # one pushed out is a docstring-only recheck that re-proves next
-    # round. Retires automatically once a round-8+ file records these
-    # green (same rule as the older splices).
-    _r8_critical = [
-        "moviegen_curate_roundtrip",   # r7's only red — must re-prove
-        "curate_stream_corpus",        # new (ST1-ST3 driver gate)
-        "viterbi_segment_chunked",     # new (judge item 4 deliverable)
-        "unigram_lm_em_round",         # new (EM round)
-        "viterbi_segment_cost",        # operator raise added
-        "ingest_pipeline",             # Arrow-embed charset semantics
-        # round-8 continuation entries
-        "winnowing_fingerprints",      # new (MOSS winnowing census)
-        "char_entropy_quality",        # new (entropy quality signal)
-        "ccnet_ppl_buckets",           # new (CCNet ppl terciles)
-        "unigram_lm_prune_round",      # new (SentencePiece prune step)
-        "bpe_train_merges",            # new (BPE training loop)
-        "token_zipf_fit",              # new (Zipf-law OLS fit)
-        "doremi_mixture_update",       # new (DoReMi MW reweighting)
-        "winnow_dup_pairs",            # new (MOSS pair miner)
-    ]
-    front_r8 = [
-        n for n in _r8_critical
-        if n in QUERIES and n not in _driver_green_from_files(min_round=8)
-    ]
-    front_auto = front_r8 + [n for n in front_auto if n not in set(front_r8)]
-    # Round-9 priority splice: the Arrow twin-kernel work (winnow /
-    # bigram / gram-count / shingle-hash kernels) re-fronts the whole
-    # dedup module by module hash — 56 entries, 6 over the window. The
-    # r8 verdict's 9 rotated greens go FIRST (judge task #2), then the
-    # entries whose PLAN actually changed this round (kernel consumers
-    # + the new converged-training entry); module-hash-only rechecks of
-    # already-green entries fill the remaining slots and any spill
-    # re-proves next round (the round-8 pattern). Retires automatically
-    # once a round-9+ file records these green.
-    _r9_critical = [
-        # the 9 rotated driver greens (changed in r8, window-spilled)
-        "covisitation_triangles", "dedup_keep_best_rewrite",
-        "dsir_gumbel_resample", "dsir_importance_topk",
-        "lm_bigram_xent_by_lang", "lsh_candidate_quality",
-        "semantic_clusters", "semantic_decontamination",
-        "shard_balance_report",
-        # round-9 behavior changes: doc-local Arrow kernels + new entry
-        "winnowing_fingerprints", "winnow_dup_pairs",
-        "ccnet_ppl_buckets", "doremi_mixture_update",
-        "unigram_lm_em_round", "unigram_lm_prune_round",
-        "unigram_lm_train_converged", "viterbi_segment_cost",
-        "viterbi_segment_chunked", "contamination_ngram_overlap",
-        "dedup_minhash_signature", "dedup_minhash_lsh",
-        "incremental_dedup_store", "containment_minhash_pairs",
-        "cross_source_dup_matrix", "dedup_oph_pairs",
-    ]
-    front_r9 = [
-        n for n in _r9_critical
-        if n in QUERIES and n not in _driver_green_from_files(min_round=9)
-    ]
-    front_auto = front_r9 + [n for n in front_auto if n not in set(front_r9)]
-    # Round-10 priority splice (judge task #2): the 6 rechecks the
-    # _r9_critical splice pushed past the 50-slot window go FIRST this
-    # round — nothing may displace them again — then the one entry whose
-    # observable behavior round 10 touches (containment_minhash_pairs
-    # consumes minhash_signature(include_size=True), whose arrow-path
-    # n_shingles count became NULL-ignoring per ADVICE r9). Every other
-    # round-10 edit is behavior-neutral (impl validation, byte-identical
-    # SQL-splice refactor, bit-equal per-batch power-table hoist);
-    # module-hash rechecks fill the remaining slots automatically.
-    _r10_critical = [
-        "parts_abc_pareto", "vocab_coverage_curve",
-        "dedup_threshold_sweep", "corpus_shard_manifest",
-        "parallel_text_mining", "quality_classifier_funnel",
-        "containment_minhash_pairs",
-    ]
-    front_r10 = [
-        n for n in _r10_critical
-        if n in QUERIES and n not in _driver_green_from_files(min_round=10)
-    ]
-    front_auto = front_r10 + [n for n in front_auto if n not in set(front_r10)]
-    # Round-11 priority splice (judge tasks #3/#8): drain the 32-entry
-    # driver-green backlog STALENESS.json names (the r9 Arrow-twin
-    # families + recall curves — every one green in the r10 hermetic
-    # sweep and the judge's own 254/254, but last DRIVER-green in r8 or
-    # earlier). The five highest-traffic perf-surface entries the judge
-    # calls out by name go first (they are also the queries the r11
-    # quiet-floor cross-check measures), then the rest of the backlog in
-    # registry order. All 32 fit the 50-slot window; pinning the order
-    # here guarantees their slots even if a late-round edit re-fronts
-    # additional entries. Retires automatically on round-11+ greens.
-    _r11_critical = [
-        "winnowing_fingerprints", "winnow_dup_pairs",
-        "unigram_lm_em_round", "ccnet_ppl_buckets",
-        "doremi_mixture_update",
-        # remainder of the r10 staleness backlog, registry order
-        "dedup_rewrite_survivors", "leakage_safe_split",
-        "corpus_release_report", "dedup_graph_stats", "dedup_oph_pairs",
-        "ann_probe_recall_curve", "ivf_probe_recall_curve",
-        "dedup_keep_best_rewrite", "semantic_clusters",
-        "lsh_candidate_quality", "ivf_cell_balance_report",
-        "covisitation_triangles", "knn_hubness_report",
-        "retrieval_rank_correlation", "shard_balance_report",
-        "embedding_norm_histogram", "semantic_decontamination",
-        "embedding_source_centroid_drift", "dsir_importance_topk",
-        "dsir_gumbel_resample", "lm_bigram_xent_by_lang",
-        "pq_adc_knn_recall", "binary_hamming_knn_recall",
-        "viterbi_segment_cost", "viterbi_segment_chunked",
-        "unigram_lm_prune_round", "unigram_lm_train_converged",
-    ]
-    front_r11 = [
-        n for n in _r11_critical
-        if n in QUERIES and n not in _driver_green_from_files(min_round=11)
-    ]
-    front_auto = front_r11 + [n for n in front_auto if n not in set(front_r11)]
-    # queries whose implementation changed or were added this round
-    # re-prove even if previously green — but once a round-2+ file
-    # records them green, they retire from the front automatically
-    reproven = _driver_green_after_r1()
-    front_r5 = [
-        n
-        for n in _RECHECK_R5
-        if n in QUERIES
-        and n not in _driver_green_from_files(min_round=5)
-        and n not in set(front_auto)
-    ]
-    front_r4 = [
-        n
-        for n in _RECHECK_R4
-        if n in QUERIES
-        and n not in _driver_green_from_files(min_round=4)
-        and n not in set(front_r5)
-    ]
-    prio = [
-        n
-        for n in _PRIORITY_R4
-        if n in QUERIES
-        and n not in proven
-        and n not in set(front_r5) | set(front_r4)
-    ]
-    front_r3 = [
-        n
-        for n in _RECHECK_R3
-        if n in QUERIES
-        and n not in _driver_green_from_files(min_round=3)
-        and n not in set(front_r5) | set(front_r4) | set(prio)
-    ]
-    front2 = [
-        n
-        for n in _RECHECK_FIRST
-        if n in QUERIES
-        and n not in reproven
-        and n not in set(front_r5) | set(front_r4) | set(prio) | set(front_r3)
-    ]
-    front = list(
-        dict.fromkeys(
-            front_auto + front_r5 + front_r4 + prio + front_r3 + front2
-        )
-    )
-    fset = set(front)
-    with_oracle = [
-        n for n in names
-        if n not in fset and n not in proven
-        and QUERIES[n]["sql"] is not None
-    ]
-    rows_only = [
-        n for n in names
-        if n not in fset and n not in proven
-        and QUERIES[n]["sql"] is None
-    ]
-    green = [n for n in names if n not in fset and n in proven]
-    return front + with_oracle + rows_only + green
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: QUERIES[name]["spark"] for name in _rotated()}
-
-
-def oracle_sql() -> dict[str, str]:
-    return {
-        name: QUERIES[name]["sql"]
-        for name in _rotated()
-        if QUERIES[name]["sql"] is not None
-    }

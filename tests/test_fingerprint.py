@@ -1,8 +1,8 @@
-"""The automated recheck front (plans/fingerprint.py): every registry
-query must fingerprint cleanly, fingerprints must be deterministic, and
-the dependency walk must reach the operator modules a query is actually
-built on (the round-6 failure mode was a modified operator whose
-queries kept stale green rows)."""
+"""The builder walk (plans/fingerprint.py): every registry query must
+fingerprint cleanly, fingerprints must be deterministic, and the
+dependency walk must reach the operator modules a query is actually
+built on (a modified operator must change the fingerprint of every
+query built on it)."""
 
 from movievectorsearch_spark.plans import fingerprint as FP
 from movievectorsearch_spark.plans import queries as Q
@@ -57,15 +57,3 @@ def test_transitive_module_closure():
     _, _, mods = _closure("dedup_minhash_lsh")
     assert "movievectorsearch_spark.functions.hashing" in mods
 
-
-def test_changed_since_green_is_registry_subset_in_order():
-    front = FP.changed_since_green(Q.QUERIES)
-    names = list(Q.QUERIES)
-    assert all(n in Q.QUERIES for n in front)
-    assert front == [n for n in names if n in set(front)]
-
-
-def test_missing_stamp_file_fronts_everything(monkeypatch):
-    monkeypatch.setattr(FP, "STAMP_PATH", "/nonexistent/stamps.json")
-    front = FP.changed_since_green(Q.QUERIES)
-    assert len(front) == len(Q.QUERIES)

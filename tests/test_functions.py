@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 import struct
+import threading
 
 import numpy as np
 import pytest
@@ -315,15 +316,19 @@ def test_l2_normalize_unit_norm(spark):
 def _py4j_calls(spark, build) -> int:
     """py4j round trips made by a second ``build()`` (the driver-side
     cost of building a plan, paid once per request; the first call
-    also pays one-time lookups)."""
+    also pays one-time lookups). Only calls from this thread count:
+    py4j's finalizer thread sends a detach command for every JavaObject
+    Python frees, through the same ``send_command``, whenever it drains
+    its queue."""
     build()
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
+    me = threading.get_ident()
     n = 0
 
     def counting(*args, **kwargs):
         nonlocal n
-        n += 1
+        n += threading.get_ident() == me
         return send(*args, **kwargs)
 
     client.send_command = counting

@@ -16,10 +16,6 @@ NAMES = sorted(Q.QUERIES)
 def test_query_matches_oracle(name, spark, duck, sf_dir):
     spec = Q.QUERIES[name]
     sdf = spec["spark"](spark, sf_dir).toPandas()
-    if spec["sql"] is None:
-        # rows-only check for non-SQL-expressible ops
-        assert len(sdf) >= 0
-        return
     odf = duck.sql(spec["sql"]).df()
     problems = compare(sdf, odf)
     assert not problems, f"{name}: " + "; ".join(problems[:4])
@@ -47,8 +43,16 @@ def test_bench_names_are_registered():
 
 
 def test_zero_rows_only_entries():
-    """Round 6 converted the last two rows-only entries to
-    oracle-backed bound checks — every registry entry must now carry
-    an oracle_sql so the driver hash-compares all of them."""
+    """Every registry entry carries an oracle_sql, so every entry is
+    hash-compared; engine-specific values are checked through bound
+    columns the oracle emits as constants."""
     rows_only = [n for n in NAMES if Q.QUERIES[n]["sql"] is None]
     assert rows_only == []
+
+
+def test_contract_lists_registry_in_order():
+    """queries() and oracle_sql() are plain views of the registry, in
+    registration order, whatever files sit in the repo root."""
+    import __spark_entry__ as E
+
+    assert list(E.queries()) == list(E.oracle_sql()) == list(Q.QUERIES)

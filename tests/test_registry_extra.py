@@ -1,5 +1,5 @@
-"""Self-verification for the rows-only registry entries (the checks
-the DuckDB oracle can't express — SURVEY.md §5)."""
+"""Property checks on registry entries beyond their DuckDB oracle
+(the checks a row hash can't express — SURVEY.md §5)."""
 
 from __future__ import annotations
 

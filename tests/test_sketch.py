@@ -1,8 +1,8 @@
 """Error bounds for the mergeable-sketch operators
 (operators/sketch.py). Sketch output is engine-specific, so the
-registry entries are rows-only; these tests supply the correctness
-evidence: estimates must sit inside the structures' published bounds
-relative to exact counts."""
+registry's oracles check exact counts and bound columns, not the raw
+estimates; these tests check the estimates themselves: they must sit
+inside the structures' published bounds relative to exact counts."""
 
 from __future__ import annotations
 

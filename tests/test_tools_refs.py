@@ -1,5 +1,6 @@
-"""Every name a tools/ script takes from bench.py, and every name the
-scripts, perfbench and bench.py import from the package, still exists.
+"""Every name a tools/ script takes from bench.py, every name the
+scripts, perfbench and bench.py import from the package, and every
+``tools/<name>.py`` the docs mention, still exists.
 
 The tools and perfbench have no tests of their own, so a deleted name
 would only surface when someone next runs the script. This reads each
@@ -13,6 +14,7 @@ from __future__ import annotations
 import ast
 import importlib
 import importlib.util
+import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -123,3 +125,19 @@ def test_package_import_scan(tmp_path):
     }
     assert _resolves("movievectorsearch_spark.plans", "queries")
     assert not _resolves("movievectorsearch_spark.operators.dsir", "nope")
+
+
+DOCS = ("README.md", ".claude/skills/verify/SKILL.md")
+
+
+def test_docs_name_only_existing_tools():
+    refs = {
+        (doc, f"tools/{name}.py")
+        for doc in DOCS
+        for name in re.findall(r"\btools/(\w+)\.py\b", (ROOT / doc).read_text())
+    }
+    assert refs
+    missing = sorted(
+        f"{doc}: {ref}" for doc, ref in refs if not (ROOT / ref).is_file()
+    )
+    assert missing == []

@@ -131,7 +131,7 @@ def main():
         )
 
     results: dict[str, dict] = {}
-    n_pass = n_fail = n_noracle = 0
+    n_pass = n_fail = 0
     for name in names:
         spec = Q.QUERIES[name]
         if opts.hermetic:
@@ -157,12 +157,6 @@ def main():
                 }
                 if muts:
                     results[name]["conf_mutations"] = muts
-        if spec["sql"] is None:
-            print(f"rows  {name}: {len(sdf)} rows (no oracle)")
-            results[name].update(status="rows-only", rows=len(sdf),
-                                 seconds=round(time.perf_counter() - t0, 3))
-            n_noracle += 1
-            continue
         try:
             odf = con.sql(spec["sql"]).df()
         except Exception as e:
@@ -184,7 +178,7 @@ def main():
             print(f"PASS  {name} ({len(sdf)} rows)")
             results[name].update(status="pass", rows=len(sdf), seconds=secs)
             n_pass += 1
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_noracle} rows-only")
+    print(f"\n{n_pass} pass, {n_fail} fail")
     if opts.json:
         try:
             commit = subprocess.run(
@@ -201,7 +195,6 @@ def main():
             commit, dirty = "unknown", True
         doc = {"sf_dir": sf_dir, "commit": commit, "dirty": dirty,
                "n_pass": n_pass, "n_fail": n_fail,
-               "n_rows_only": n_noracle,
                "total_seconds": round(
                    sum(v.get("seconds", 0) for v in results.values()), 1),
                "queries": results}

@@ -7,6 +7,9 @@ prints ONE JSON line:
     {"metric": "...", "value": <total_sec>, "unit": "sec",
      "queries": {"q1": sec, ...}, "sf": ...}
 
+With ``$SPARK_GRAFT_CPUS`` unset, ``session.get_spark`` runs
+``local[*]``, every core.
+
 Each query is executed to completion via a noop-format write (every
 output column is computed and serialized executor-side, nothing is
 collected to the driver) and timed wall-clock. A plain ``count()``
@@ -438,8 +441,7 @@ def _round_number() -> int:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(app_name="mvs-bench", cpus=cpus)
+    spark = get_spark(app_name="mvs-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     # warmup: touch the session + codegen paths once
@@ -489,16 +491,6 @@ def main() -> None:
               "slowest5": slow5, "heavy": heavy, "heavy_rows": heavy_rows,
               "heavy_total_sec": heavy_total,
               "excluded": BENCH_EXCLUDED}
-    # fold in the latest scaling-probe table (tools/scaling_probe.py:
-    # per-query exponent from an 8x blown-up copy of the big tables)
-    scaling_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                "SCALING.json")
-    if os.path.exists(scaling_path):
-        try:
-            with open(scaling_path) as f:
-                detail["scaling"] = json.load(f)
-        except (OSError, ValueError):
-            pass
     with open(detail_path, "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)
     # per-round snapshot (round-7 judge item #5): BENCH_DETAIL.json is

@@ -19,9 +19,9 @@ A query's fingerprint hashes everything its implementation is made of:
 
 Users:
 
-* ``tools/scaling_probe_cc.py`` records each query's fingerprint next
-  to its measurements and merges a prior row only when the fingerprint
-  still matches;
+* ``query_fingerprints`` has no caller outside the tests; its planned
+  user is the per-query run record (ROADMAP Direction 3), which names
+  each timed query's implementation by its fingerprint;
 * ``tests/test_bench_policy.py`` walks each bench-excluded builder's
   module closure (``_inner_fn`` → ``_walk`` → ``_module_closure``) to
   check that no query reaching the iterative operators is left out of

@@ -25,6 +25,13 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def _default_driver_mem() -> str:
+    """Half of physical memory, capped at 24g: a heap cap above what the
+    machine has lets the local-mode JVM grow until the kernel stops it."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(phys_mb // 2, 24 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "movievectorsearch-spark",
     cpus: int | str | None = None,
@@ -33,9 +40,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` then ``*``. On a real
-    cluster the master/resource config comes from spark-submit and the
-    builder settings here are additive.
+    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` then ``*``; the driver
+    heap to ``$SPARK_GRAFT_DRIVER_MEM`` then half of physical memory,
+    at most 24g. On a real cluster the master/resource config comes
+    from spark-submit and the builder settings here are additive.
     """
     if cpus is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -52,7 +60,8 @@ def get_spark(
         # multi-second full-GC stalls that land on whatever query is
         # running. Size the heap for the box (must be set pre-launch).
         .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()),
         )
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")

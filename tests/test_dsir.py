@@ -233,21 +233,6 @@ def test_bigram_kernel_plan_has_no_exchange(spark, sf_dir):
     assert "MapInPandas" in p
 
 
-def test_scaling3_fit_recovers_exact_parameters():
-    """tools/scaling_probe3.fit must solve t(n) = c + k*n^e exactly at
-    geometrically spaced points — pure arithmetic, no Spark."""
-    from tools.scaling_probe3 import fit
-
-    c, k, e, r = 0.8, 0.05, 1.3, 4
-    t = [c + k * n**e for n in (1, r, r * r)]
-    got = fit(*t, r)
-    assert abs(got["exp_fit"] - e) < 1e-6
-    assert abs(got["const_c"] - c) < 1e-6
-    # non-monotone timings degrade to the tail exponent, not a crash
-    nm = fit(1.0, 0.9, 1.1, 4)
-    assert nm["exp_fit"] is None and "exp_tail" in nm
-
-
 def test_gumbel_ppm_far_from_floor_boundaries():
     """Round-6 advisor: floor(−ln(−ln(u))·1e6) is a cross-engine float
     surface — Spark's Math.log and DuckDB's ln may disagree in the last

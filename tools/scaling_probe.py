@@ -1,28 +1,51 @@
-"""Scaling probe: does each headline plan's wall time grow ~linearly?
+"""Scaling probe: does each query's wall time grow like its data?
 
-local[32] timings at one SF can hide super-linear behavior (a plan that
-is O(n^2) in a blocked join, a window that funnels into one partition).
-This probe blows the five big tables up by ``FACTOR`` with shifted keys
-(join fan-outs preserved: orderkey shifts consistently across
-orders/lineitem, doc_id/vec_id across documents/embeddings), times a
-probe set at both scales, and records the per-query scaling exponent
+A timing at one scale can hide a super-linear plan (a blocked join that
+goes O(n^2), a window that funnels into one partition). This probe
+replicates the keyed tables of ``src_dir`` at factors n in {1, r, r^2}
+and times each named query at each factor with bench.py's loop: one
+untimed ``count()`` (warmup, output rows, and a failing query recorded
+as an ``err`` row), then ``bench._timed_min`` over the queries that
+passed (two interleaved passes through the noop sink, min per query).
 
-    exponent = log(t_big / t_small) / log(FACTOR)
+The fixture replicates the true answer linearly wherever the data
+allows it:
 
-~1.0 is linear, ~1.1 is n log n at these sizes; anything >1.35 is
-flagged. Results land in SCALING.json, and bench.py folds them into
-BENCH_DETAIL.json on its next run.
+* keys shift per replica, one constant per key family, so join fan-out
+  per key is preserved (orderkey across orders/lineitem, doc_id/vec_id
+  across documents/embeddings);
+* replica i > 0 of ``documents.text`` gets every word suffixed with
+  ``_r{i}``. Word-shingle sets of different replicas are disjoint, so no
+  cross-replica near-duplicate survives, while every Jaccard within a
+  replica is the original's;
+* replica i > 0 of ``embeddings`` gets a deterministic per-replica sign
+  pattern. Cosines within a replica are unchanged (the signs square
+  away); across replicas they decorrelate (mean 0, sd ~1/sqrt(dim)).
 
-The probe set is restricted to queries whose OUTPUT scales linearly
-under replication. The near-dup JOIN queries (fuzzy_band_join, the LSH
-band join, SRP-blocked embedding dedup) are excluded by design: blowing
-a corpus up by replicating rows multiplies the genuine near-duplicate
-PAIRS quadratically, so their time growth measures the answer growing,
-not the plan degrading. Their scale story is the blocking knob
-(bands/planes scale with log N — operators/dedup.py docstrings), not a
-fixed-knob replication probe.
+Each row records the output rows at every factor. A row whose answer
+outgrows its data (``rows_{r^2} > r^2 * rows_1``) is flagged
+``ANSWER_SUPERLINEAR``: its time exponent measures the answer growing,
+not the plan. Replicated events share ``user_id`` and ``ts``, for one,
+and a low cosine threshold still admits cross-replica pairs.
 
-Usage: python tools/scaling_probe.py [factor] [small_sf_dir]
+The timings are fitted exactly to ``t(n) = c + k * n**e``. With
+log-equal spacing, (t3-t2)/(t2-t1) = r^e, so
+
+    e = log((t3-t2)/(t2-t1)) / log(r)
+    k = (t2-t1) / (r^e - 1)
+    c = t1 - k
+
+``e`` is the constant-free data exponent; ``exp_2pt_bound`` =
+log(t3/t1)/log(r^2) is the upper bound that charges the fixed cost
+(task launch, plan compile) to the slope. A data exponent above 1.35
+flags the row ``SUPERLINEAR``.
+
+SCALING.json is overwritten with the rows measured, ``r``, ``factors``,
+``src`` and ``commit``; git keeps earlier runs.
+
+Usage: python tools/scaling_probe.py [r] [src_dir] [names...]
+Defaults: r=4, the catalog's default sf dir, and
+bench.BENCH_QUERIES + bench.BENCH_HEAVY.
 """
 
 from __future__ import annotations
@@ -31,194 +54,212 @@ import json
 import math
 import os
 import shutil
+import subprocess
 import sys
 import tempfile
-import time
+from functools import reduce
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
 
-from movievectorsearch_spark.catalog import TABLES, table_path
-from movievectorsearch_spark.plans import queries as Q
-from movievectorsearch_spark.session import get_spark
+import bench  # noqa: E402
+from movievectorsearch_spark.catalog import (  # noqa: E402
+    DEFAULT_SF_DIR,
+    TABLES,
+    table_path,
+)
+from movievectorsearch_spark.plans import queries as Q  # noqa: E402
+from movievectorsearch_spark.session import get_spark  # noqa: E402
 
-# The probe set is EVERY benched query (bench.BENCH_QUERIES) minus the
-# documented exclusions below — full coverage per the round-2 judge's
-# item #7, with the near-dup pair joins excluded by design (see module
-# docstring: replication grows their TRUE answer quadratically, so
-# their time growth would measure the answer, not the plan).
-EXCLUDED = {
-    "fuzzy_band_join": "near-dup pair join: replication grows true pairs ~n^2",
-    "dedup_minhash_lsh": "LSH band join: replicas are true dups, pairs ~n^2",
-    "dedup_embedding_cosine": "SRP-blocked dup join: replica pairs ~n^2",
-    "dedup_prefix_containment": "identical prefixes replicate, pairs ~n^2",
-    "containment_minhash_pairs": "containment pair join, pairs ~n^2",
-    "dedup_oph_pairs": "OPH pair join, pairs ~n^2",
-    "cross_source_dup_matrix": "cross-source dup pairs ~n^2 under replication",
-    "parallel_text_mining": "rides the LSH candidate stage, pairs ~n^2",
-    "incremental_dedup_store": "replicas are true dups of the store, matches ~n^2",
-    "events_interval_join": "replicated events share user_id AND ts, so "
-    "1h-window pairs grow ~factor^2 — true output growth, same replication "
-    "artifact as the dedup pair joins (round-5 judge item #5)",
-    # round-7 bench promotions with the same artifact: the benchmark /
-    # eval side of the screen replicates as TRUE matches of the corpus
-    # side, so join hits grow ~factor^2. Both get rows on the
-    # replication-AWARE fixture instead (tools/scaling_probe_cc.py ->
-    # SCALING_CC.json), where cross-replica overlap is zero by
-    # construction.
-    "contamination_ngram_overlap": "bench-side 5-gram replicas are true "
-    "matches under replication, hits ~n^2 — probed in SCALING_CC.json",
-    "semantic_decontamination": "replicated eval embeddings are true "
-    "semantic matches, pairs ~n^2 — probed in SCALING_CC.json",
-}
-
-# probed but not benched: signature-only / salted-agg stages kept from
-# the round-1 probe so their trend history continues
-EXTRA_PROBES = [
-    "dedup_minhash_signature",
-    "salted_agg_events",
-]
-
-from bench import BENCH_QUERIES  # noqa: E402
-
-PROBE_QUERIES = [n for n in BENCH_QUERIES if n not in EXCLUDED] + EXTRA_PROBES
-
+# table -> (key column shifted per replica, key family); tables of one
+# family shift by the same constant
 SHIFT_KEYS = {
-    # table -> columns that must shift together so join fan-out per key
-    # is preserved (8 copies of an order get 8 distinct orderkeys, each
-    # with the original's lineitems)
-    "orders": ["o_orderkey"],
-    "lineitem": ["l_orderkey"],
-    "events": ["event_id"],
-    "documents": ["doc_id"],
-    "embeddings": ["vec_id"],
+    "orders": ("o_orderkey", "orderkey"),
+    "lineitem": ("l_orderkey", "orderkey"),
+    "events": ("event_id", "event"),
+    "documents": ("doc_id", "doc"),
+    "embeddings": ("vec_id", "doc"),
 }
+
+# Run-to-run noise on identical code is ~0.1-0.15s per query
+# (DRIFT_r5.json: median ratio 1.02, p90 1.10 on ~1s queries); a stage
+# delta below this floor carries no slope information and the exact
+# fit would amplify it into a spurious exponent (observed: a 0.06s
+# d21 fitting e=1.77 on a query whose 2-point bound is 0.2).
+NOISE_FLOOR_S = 0.15
+
+
+def _sign_pattern(replica: int, dim: int) -> list[int]:
+    """Deterministic +-1 per (replica, dim) — a tiny LCG mix, no RNG."""
+    out = []
+    for d in range(dim):
+        h = (replica * 1_103_515_245 + d * 12_345 + 42) % 2_147_483_647
+        h = (h * h + h * 31) % 2_147_483_647
+        out.append(1 if h % 2 == 0 else -1)
+    return out
 
 
 def build_blowup(spark, src_dir: str, dst_dir: str, factor: int) -> None:
-    # one shift constant per key FAMILY (orderkey shared by orders and
-    # lineitem; doc_id/vec_id shared by documents and embeddings)
-    fam_of = {"o_orderkey": "ok", "l_orderkey": "ok", "event_id": "ev",
-              "doc_id": "doc", "vec_id": "doc"}
-    fam_shift: dict[str, int] = {}
-    for t, cols in SHIFT_KEYS.items():
-        df = spark.read.parquet(table_path(src_dir, t))
-        m = df.agg(F.max(cols[0])).first()[0]
-        fam = fam_of[cols[0]]
-        fam_shift[fam] = max(fam_shift.get(fam, 0), int(m) + 1)
+    """Write ``factor`` replicas of each keyed table of ``src_dir`` to
+    ``dst_dir`` (see the module docstring); other tables are copied."""
+    shift: dict[str, int] = {}
+    for t, (col, fam) in SHIFT_KEYS.items():
+        m = spark.read.parquet(table_path(src_dir, t)).agg(F.max(col)).first()[0]
+        shift[fam] = max(shift.get(fam, 0), int(m) + 1)
+    emb_dim = len(
+        spark.read.parquet(table_path(src_dir, "embeddings"))
+        .select("embedding").first()[0]
+    )
+
     for t in TABLES:
         src = table_path(src_dir, t)
         dst = table_path(dst_dir, t)
         if t not in SHIFT_KEYS:
-            shutil.copytree(src, dst) if os.path.isdir(src) else shutil.copy(
-                src, dst
-            )
+            (shutil.copytree if os.path.isdir(src) else shutil.copy)(src, dst)
             continue
         df = spark.read.parquet(src)
-        col = SHIFT_KEYS[t][0]
-        shift = fam_shift[fam_of[col]]
-        parts = [
-            df.withColumn(col, (F.col(col) + F.lit(i * shift)).cast(
-                dict(df.dtypes)[col]))
-            for i in range(factor)
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        out.write.mode("overwrite").parquet(dst)
+        col, fam = SHIFT_KEYS[t]
+        parts = []
+        for i in range(factor):
+            p = df.withColumn(
+                col, (F.col(col) + F.lit(i * shift[fam])).cast(
+                    dict(df.dtypes)[col])
+            )
+            if t == "documents" and i > 0:
+                p = p.withColumn(
+                    "text",
+                    F.array_join(
+                        F.transform(
+                            F.split(F.col("text"), " "),
+                            lambda w: F.concat(w, F.lit(f"_r{i}")),
+                        ),
+                        " ",
+                    ),
+                )
+            if t == "embeddings" and i > 0:
+                signs = F.array(
+                    *[F.lit(float(s)) for s in _sign_pattern(i, emb_dim)]
+                )
+                p = p.withColumn(
+                    "embedding",
+                    F.zip_with(
+                        F.col("embedding"), signs, lambda x, s: x * s
+                    ),
+                )
+            parts.append(p)
+        reduce(DataFrame.unionByName, parts).write.mode("overwrite").parquet(dst)
 
 
-def time_queries(spark, sf_dir: str, names: list[str]) -> tuple[
-    dict[str, float], dict[str, str]
-]:
-    """Time each query; a failure records an error string instead of
-    aborting the whole run (round-3 judge finding: one ANSI overflow at
-    the blown-up scale killed the probe before SCALING.json was
-    written)."""
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    for _pass in range(2):
-        for name in names:
-            if name in errors:
-                continue
-            fn = Q.QUERIES[name]["spark"]
-            t0 = time.perf_counter()
-            try:
-                # noop write = full projection executed, like bench.py
-                fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite").save()
-            except Exception as e:  # noqa: BLE001 — record, keep probing
-                errors[name] = f"{type(e).__name__}: {str(e)[:300]}"
-                timings.pop(name, None)
-                print(f"# ERROR {name} at {sf_dir}: {errors[name]}",
-                      file=sys.stderr)
-                continue
-            dt = time.perf_counter() - t0
-            timings[name] = round(min(timings.get(name, dt), dt), 3)
-    return timings, errors
+def fit(t1: float, t2: float, t3: float, r: int) -> dict:
+    """Exact 3-parameter fit of t(n) = c + k*n^e at n = 1, r, r^2."""
+    d21, d32 = t2 - t1, t3 - t2
+    if d21 <= 0 or d32 <= 0:
+        # non-monotone timings: noise dominates — report the tail
+        # 2-point exponent (constant-free between the two big scales)
+        # and no constant split
+        e_tail = math.log(max(t3, 1e-3) / max(t2, 1e-3)) / math.log(r)
+        return {"exp_fit": None, "const_c": None,
+                "exp_tail": round(e_tail, 2), "note": "non-monotone"}
+    if d21 < NOISE_FLOOR_S or d32 < NOISE_FLOOR_S:
+        # either delta inside the noise floor: the exponent is not
+        # identifiable at these scales — report flat, keep the
+        # (bounded) 2pt numbers. (d32 too: a sub-noise tail delta
+        # produced a spurious exp=-1.8 for dsir_gumbel_resample.)
+        e_tail = math.log(max(t3, 1e-3) / max(t2, 1e-3)) / math.log(r)
+        return {"exp_fit": None, "const_c": round(t1, 3),
+                "exp_tail": round(e_tail, 2),
+                "note": "delta-below-noise (constant-dominated)"}
+    e = math.log(d32 / d21) / math.log(r)
+    k = d21 / (r ** e - 1)
+    c = t1 - k
+    return {
+        "exp_fit": round(e, 2),
+        "const_c": round(c, 3),
+        "slope_k": round(k, 4),
+        "exp_tail": round(math.log(t3 / t2) / math.log(r), 2),
+    }
+
+
+def answer_superlinear(rows_1: int, rows_n: int, n: int) -> bool:
+    """True when the answer at ``n`` replicas outgrows ``n`` copies of
+    the answer at one: time then measures the answer, not the plan."""
+    return rows_n > n * rows_1
 
 
 def main() -> None:
-    factor = int(sys.argv[1]) if len(sys.argv) > 1 else 8
-    src_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    # optional explicit query names (dev/targeted runs); a partial run
-    # never overwrites SCALING.json. Unknown names are a hard error —
-    # silently dropping them could leave `only` empty and fall through
-    # to a FULL run that overwrites SCALING.json (advisor finding).
-    unknown = [a for a in sys.argv[3:] if a not in Q.QUERIES]
+    r = int(sys.argv[1]) if len(sys.argv) > 1 else 4
+    src_dir = sys.argv[2] if len(sys.argv) > 2 else DEFAULT_SF_DIR
+    names = sys.argv[3:] or bench.BENCH_QUERIES + bench.BENCH_HEAVY
+    if r < 2:
+        sys.exit(f"r must be at least 2, got {r}")
+    unknown = [n for n in names if n not in Q.QUERIES]
     if unknown:
-        sys.exit(f"unknown query name(s): {unknown} — not in Q.QUERIES")
-    only = [a for a in sys.argv[3:] if a in Q.QUERIES]
-    probe_set = only or PROBE_QUERIES
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(app_name="mvs-scaling", cpus=cpus)
+        sys.exit(f"unknown query name(s): {unknown}")
+    factors = [1, r, r * r]
+
+    spark = get_spark(app_name="mvs-scaling")
     spark.sparkContext.setLogLevel("ERROR")
+    rows: dict[int, dict[str, int]] = {n: {} for n in factors}
+    t: dict[int, dict[str, float]] = {}
+    errs: dict[str, str] = {}
+    with tempfile.TemporaryDirectory(prefix="spark_graft_blowup_") as tmp:
+        dirs = {1: src_dir}
+        for n in factors[1:]:
+            dirs[n] = os.path.join(tmp, f"x{n}")
+            os.makedirs(dirs[n])
+            print(f"# building x{n} fixture in {dirs[n]}", file=sys.stderr)
+            build_blowup(spark, src_dir, dirs[n], n)
 
-    dst_dir = tempfile.mkdtemp(prefix="spark_graft_blowup_")
-    print(f"# building x{factor} blow-up of {src_dir} in {dst_dir}",
-          file=sys.stderr)
-    build_blowup(spark, src_dir, dst_dir, factor)
-
-    Q.QUERIES["count_scan"]["spark"](spark, src_dir).collect()  # warmup
-    t_small, err_small = time_queries(spark, src_dir, probe_set)
-    t_big, err_big = time_queries(spark, dst_dir, probe_set)
+        Q.QUERIES["count_scan"]["spark"](spark, src_dir).collect()  # warmup
+        for n, d in dirs.items():
+            for name in names:
+                if name in errs:
+                    continue
+                try:
+                    rows[n][name] = Q.QUERIES[name]["spark"](spark, d).count()
+                except Exception as e:  # noqa: BLE001 — record, keep probing
+                    errs[name] = f"x{n}: {type(e).__name__}: {str(e)[:300]}"
+                    print(f"# ERROR {name}: {errs[name]}", file=sys.stderr)
+            t[n] = bench._timed_min(spark, d, [x for x in names
+                                               if x not in errs])
 
     table = {}
-    for name in probe_set:
-        if name in err_small or name in err_big:
-            table[name] = {
-                "err": err_small.get(name) or err_big.get(name),
-                "err_at": "small" if name in err_small else "big",
-                "flag": "ERROR",
-            }
+    for name in names:
+        if name in errs:
+            table[name] = {"err": errs[name], "flag": "ERROR"}
             continue
-        ratio = t_big[name] / max(t_small[name], 1e-3)
-        exponent = math.log(max(ratio, 1e-9)) / math.log(factor)
-        table[name] = {
-            "t_small": t_small[name],
-            "t_big": t_big[name],
-            "ratio": round(ratio, 2),
-            "exponent": round(exponent, 2),
-            "flag": "SUPERLINEAR" if exponent > 1.35 else "",
-        }
-        print(f"# {name}: {t_small[name]:.2f}s -> {t_big[name]:.2f}s "
-              f"(x{ratio:.1f}, exp {exponent:.2f})"
-              f"{'  <-- SUPERLINEAR' if exponent > 1.35 else ''}",
+        t1, t2, t3 = (t[n][name] for n in factors)
+        row = {f"t_{n}": t[n][name] for n in factors}
+        row.update({f"rows_{n}": rows[n][name] for n in factors})
+        row["exp_2pt_bound"] = round(
+            math.log(max(t3, 1e-3) / max(t1, 1e-3)) / math.log(r * r), 2)
+        row.update(fit(t1, t2, t3, r))
+        exp = row["exp_fit"] if row["exp_fit"] is not None else row["exp_tail"]
+        if answer_superlinear(rows[1][name], rows[r * r][name], r * r):
+            row["flag"] = "ANSWER_SUPERLINEAR"
+        elif exp > 1.35:
+            row["flag"] = "SUPERLINEAR"
+        else:
+            row["flag"] = ""
+        table[name] = row
+        print(f"# {name}: {t1:.2f}s / {t2:.2f}s / {t3:.2f}s  rows "
+              + "/".join(str(rows[n][name]) for n in factors)
+              + f"  fit exp={row['exp_fit']} c={row['const_c']} "
+              f"(2pt bound {row['exp_2pt_bound']}) {row['flag']}",
               file=sys.stderr)
 
-    flagged = [n for n, r in table.items() if r["flag"]]
-    if not only:
-        out_path = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "SCALING.json")
-        with open(out_path, "w") as f:
-            json.dump({"factor": factor, "src": src_dir,
-                       "excluded": EXCLUDED, "queries": table},
-                      f, indent=1, sort_keys=True)
-    print(json.dumps({"factor": factor, "n_queries": len(table),
-                      "flagged": flagged}))
-    shutil.rmtree(dst_dir, ignore_errors=True)
+    commit = subprocess.run(["git", "-C", REPO, "rev-parse", "HEAD"],
+                            capture_output=True, text=True).stdout.strip()
+    with open(os.path.join(REPO, "SCALING.json"), "w") as f:
+        json.dump({"r": r, "factors": factors, "src": src_dir,
+                   "commit": commit, "queries": table},
+                  f, indent=1, sort_keys=True)
+    print(json.dumps({"r": r, "n_queries": len(table),
+                      "flagged": {n: v["flag"] for n, v in table.items()
+                                  if v["flag"]}}))
     spark.stop()
 
 

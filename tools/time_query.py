@@ -64,8 +64,7 @@ def main() -> None:
     if not names:
         ap.error("give query names or --tier")
 
-    spark = get_spark(app_name="mvs-time",
-                      cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark(app_name="mvs-time")
     spark.sparkContext.setLogLevel("ERROR")
     Q.QUERIES["count_scan"]["spark"](spark, args.sf).collect()
 

@@ -19,8 +19,15 @@ candidates, exact-rescored". Here:
   :func:`ivf_search`      IVF: nearest-of-K seeded centroids as the
                           coarse quantizer; query probes nprobe cells.
 
-Correctness policy (SURVEY.md §5): ANN results are validated as a
-subset of the exact brute-force top-k(overfetch) — never value-hashed.
+Each probe, here and in sources/ann_index.py, is a candidate filter
+(the probed buckets or cells) in front of :func:`knn.knn_topk`, the
+engine's one exact top-k; only the candidate set is approximate.
+
+Correctness: bucket and cell assignment and the probe ranking are
+deterministic, so the served probes (``ann_srp_topk``,
+``ann_ivf_topk``) hash-match the DuckDB oracle like any exact query.
+tests/test_ann.py also checks recall and that results are a subset
+of the exact top-k(overfetch).
 """
 
 from __future__ import annotations
@@ -34,11 +41,11 @@ from pyspark.sql import functions as F
 
 from movievectorsearch_spark.functions.vector import (
     array_expr,
-    cosine_to_query,
     cosine_to_query_expr,
     dot_expr,
     py_cosine_to_query,
 )
+from movievectorsearch_spark.operators.knn import knn_topk
 
 
 def random_hyperplanes(n_planes: int, dim: int, seed: int = 42) -> np.ndarray:
@@ -108,10 +115,7 @@ def srp_search(
     bucketed = has_vec.withColumn("__bucket", srp_bucket(vec_col, planes))
     probes = _probe_buckets(_bucket_of(query_vec, planes), n_planes, max_hamming)
     cand = bucketed.filter(F.col("__bucket").isin(probes))
-    scored = cand.withColumn(
-        "score", cosine_to_query(query_vec, vec_col)
-    )
-    return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k).drop("__bucket")
+    return knn_topk(cand, query_vec, k, vec_col=vec_col, id_col=id_col).drop("__bucket")
 
 
 # ---------------------------------------------------------------------------
@@ -160,6 +164,21 @@ def ivf_assign(
     return has_vec.withColumn("__cell", ivf_cell(vec_col, centroids))
 
 
+def _probe_cells(
+    centroids: list[list[float]], query_vec: Sequence[float], nprobe: int
+) -> list[int]:
+    """The nprobe cells whose centroids are nearest the query, ties to
+    the lowest cell. Ranked with the sequential-fold cosine
+    (py_cosine_to_query), not numpy, so the probed cell set is
+    bit-reproducible in the oracle; a zero centroid ranks last."""
+
+    def cos(i: int) -> float:
+        v = py_cosine_to_query(query_vec, centroids[i])
+        return v if v is not None else -1.0
+
+    return sorted(range(len(centroids)), key=lambda i: (-cos(i), i))[:nprobe]
+
+
 def ivf_search(
     assigned: DataFrame,
     centroids: list[list[float]],
@@ -169,18 +188,8 @@ def ivf_search(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Probe the nprobe nearest cells, exact-rescore, top-k. Probe
-    ranking uses the sequential-fold cosine (py_cosine_to_query), not
-    numpy, so the probed cell set is bit-reproducible in the oracle."""
-
-    def cos(c):
-        v = py_cosine_to_query(query_vec, c)
-        return v if v is not None else -1.0
-
-    order = sorted(range(len(centroids)), key=lambda i: (-cos(centroids[i]), i))
-    cells = order[:nprobe]
+    """Probe the nprobe nearest cells (:func:`_probe_cells`),
+    exact-rescore, top-k."""
+    cells = _probe_cells(centroids, query_vec, nprobe)
     cand = assigned.filter(F.col("__cell").isin(cells))
-    scored = cand.withColumn(
-        "score", cosine_to_query(query_vec, vec_col)
-    )
-    return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k).drop("__cell")
+    return knn_topk(cand, query_vec, k, vec_col=vec_col, id_col=id_col).drop("__cell")

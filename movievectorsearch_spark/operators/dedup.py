@@ -25,7 +25,8 @@ Every operator here is join/groupBy shaped — never a driver-side loop:
                banding the fingerprint into chunks.
 - ngram-jaccard: token-pair join with a cheap blocking key to prune the
                cross product (same idea as the reference's year band).
-- embedding:   cosine self-join blocked by label/LSH bucket.
+- embedding:   cosine pairs blocked by SRP-LSH bucket, GEMM per bucket,
+               exact re-score of the candidates.
 """
 
 from __future__ import annotations
@@ -374,108 +375,6 @@ def _unit_vectors(
     )
 
 
-def embedding_neardup_pairs(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_col: str | None = "label",
-    threshold: float = 0.95,
-    gemm_candidates: bool = True,
-    allow_all_pairs: bool = False,
-) -> DataFrame:
-    """Near-duplicate pairs by embedding cosine ≥ threshold, blocked by
-    ``block_col`` (at scale: an LSH/IVF bucket id instead of a label).
-
-    ``block_col=None`` means an ALL-PAIRS O(n²) cross join — never
-    valid at scale, so it raises unless the caller passes
-    ``allow_all_pairs=True`` explicitly (round-3 judge finding: the
-    silent fallback let a library user cross-join a corpus by omitting
-    one argument). Use :func:`embedding_neardup_pairs_srp` for the
-    unblocked problem at scale.
-
-    Two-stage: a per-block numpy GEMM (Arrow-batched applyInPandas)
-    finds candidate pairs with cos ≥ threshold − 1e-9, then the exact
-    sequential-fold dot re-scores ONLY the candidates. The final filter
-    uses the exact fold, so results are bit-identical to the naive
-    self-join (the GEMM margin of 1e-9 dwarfs BLAS-vs-sequential
-    summation drift, ~1e-14 at dim 64) — but the O(m²·dim) work per
-    block runs as one BLAS matmul instead of interpreted per-pair
-    array folds (~50× less expression-tree evaluation). At 100 TB the
-    block is an LSH/IVF bucket and each bucket's GEMM is one executor
-    task; the candidate re-score is a sparse equi-join on id.
-
-    ``gemm_candidates=False`` keeps the pure column-expression path
-    (used by tests as the semantics oracle for the fast path).
-    """
-    if block_col is None and not allow_all_pairs:
-        raise ValueError(
-            "embedding_neardup_pairs with block_col=None is an all-pairs "
-            "cross join (O(n²) — unusable beyond toy corpora); pass "
-            "allow_all_pairs=True to run it anyway, or use "
-            "embedding_neardup_pairs_srp for SRP-blocked pairs at scale"
-        )
-
-    # normalize ONCE per row before the self-join: cos(a,b) over raw
-    # vectors recomputes both norms per PAIR (O(pairs) array folds);
-    # dot over pre-normalized vectors is one fold per pair and O(rows)
-    # normalizations — at block size m that's 3× less pair work
-    base = _unit_vectors(emb, id_col, vec_col, block_col)
-
-    if gemm_candidates and block_col:
-        import numpy as np
-        from pyspark.sql.types import StructField, StructType
-
-        id_type = base.schema["id"].dataType
-        # fresh StructType per call: StructType.add mutates in place and
-        # df.schema returns Spark's cached instance
-        cand_schema = StructType(
-            [StructField("a_id", id_type), StructField("b_id", id_type)]
-        )
-        margin = threshold - 1e-9
-
-        def find_pairs(pdf):
-            import pandas as pd
-
-            if len(pdf) < 2:
-                return pd.DataFrame({"a_id": [], "b_id": []}).astype(
-                    {"a_id": pdf["id"].dtype, "b_id": pdf["id"].dtype}
-                )
-            pdf = pdf.sort_values("id")  # so triu ⇒ a_id < b_id
-            ids = pdf["id"].to_numpy()
-            m = np.vstack(pdf["nv"].to_numpy())
-            sims = m @ m.T
-            ai, bi = np.nonzero(np.triu(sims >= margin, k=1))
-            return pd.DataFrame({"a_id": ids[ai], "b_id": ids[bi]})
-
-        cand = base.groupBy("blk").applyInPandas(find_pairs, cand_schema)
-        av = base.select(F.col("id").alias("a_id"), F.col("nv").alias("a_nv"))
-        bv = base.select(F.col("id").alias("b_id"), F.col("nv").alias("b_nv"))
-        return (
-            cand.join(av, "a_id")
-            .join(bv, "b_id")
-            .withColumn("cos", F.expr(dot_expr("a_nv", "b_nv")))
-            .filter(F.col("cos") >= threshold)
-            .select("a_id", "b_id", "cos")
-        )
-
-    a = base.select(
-        F.col("id").alias("a_id"), F.col("nv").alias("a_nv"),
-        *([F.col("blk").alias("a_blk")] if block_col else []),
-    )
-    b = base.select(
-        F.col("id").alias("b_id"), F.col("nv").alias("b_nv"),
-        *([F.col("blk").alias("b_blk")] if block_col else []),
-    )
-    join_on = [F.col("a_blk") == F.col("b_blk")] if block_col else []
-    joined = a.join(b, join_on) if join_on else a.crossJoin(b)
-    joined = joined.filter(F.col("a_id") < F.col("b_id"))
-    return (
-        joined.withColumn("cos", F.expr(dot_expr("a_nv", "b_nv")))
-        .filter(F.col("cos") >= threshold)
-        .select("a_id", "b_id", "cos")
-    )
-
-
 def embedding_neardup_pairs_srp(
     emb: DataFrame,
     dim: int,
@@ -487,17 +386,15 @@ def embedding_neardup_pairs_srp(
     seed: int = 42,
 ) -> DataFrame:
     """Embedding near-dup pairs blocked by sign-random-projection LSH
-    buckets — the 100 TB form of :func:`embedding_neardup_pairs`.
+    buckets, the engine's one embedding near-dup operator.
 
-    Blocking by a data column (label/category) gives block sizes
-    proportional to the CORPUS: at 100 TB a 10-value label makes
-    ~10 TB "blocks", and the per-block GEMM task OOMs. Here the block
-    key is (table, srp_bucket): ``n_tables`` independent hyperplane
-    tables of ``n_planes`` sign bits each (multiprobe-for-recall via
-    table multiplicity, the classic L-table cosine-LSH construction).
-    Expected bucket size is N / 2^n_planes per table and n_planes grows
-    with the corpus (add bits, buckets shrink) — block size is a free
-    parameter, not a data property. A pair is a candidate when it
+    The block key is (table, srp_bucket): ``n_tables`` independent
+    hyperplane tables of ``n_planes`` sign bits each (multiprobe-for-
+    recall via table multiplicity, the classic L-table cosine-LSH
+    construction). Expected bucket size is N / 2^n_planes per table and
+    n_planes grows with the corpus (add bits, buckets shrink) — block
+    size is a free parameter, not a data property, so no GEMM task is
+    corpus-sized. A pair is a candidate when it
     collides in ANY table; candidates are distinct-ed and re-scored
     with the exact sequential-fold dot, so the final pair set is
     exactly {(a, b) : collide ∧ cos ≥ threshold} — deterministic and
@@ -513,7 +410,7 @@ def embedding_neardup_pairs_srp(
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import IntegerType, StructField, StructType
+    from pyspark.sql.types import StructField, StructType
 
     from movievectorsearch_spark.operators.ann import (
         random_hyperplanes,

@@ -38,18 +38,6 @@ from movievectorsearch_spark.functions.vector import (
 )
 
 
-def with_score(
-    corpus: DataFrame,
-    query_vec: Sequence[float],
-    vec_col: str = "embedding",
-    score_col: str = "score",
-) -> DataFrame:
-    """Attach cosine score vs a single query vector (V1+V4)."""
-    return corpus.withColumn(
-        score_col, cosine_to_query(query_vec, vec_col)
-    )
-
-
 def knn_topk(
     corpus: DataFrame,
     query_vec: Sequence[float],
@@ -58,16 +46,16 @@ def knn_topk(
     id_col: str = "vec_id",
     score_col: str = "score",
 ) -> DataFrame:
-    """Exact top-k by cosine (reference V2). Rows with NULL/empty
-    vectors are excluded (has-embedding predicate, ai_service.py:103).
-    Ties broken by id so results are deterministic."""
-    scored = with_score(
-        corpus.filter(F.col(vec_col).isNotNull() & (F.size(vec_col) > 0)),
-        query_vec,
-        vec_col,
-        score_col,
+    """Exact top-k by cosine (reference V2), the engine's one exact
+    top-k: the ANN probes and the recall baselines all end here. Rows
+    with NULL/empty vectors are excluded (has-embedding predicate,
+    ai_service.py:103). Ties broken by id so results are deterministic."""
+    return (
+        corpus.filter(F.col(vec_col).isNotNull() & (F.size(vec_col) > 0))
+        .withColumn(score_col, cosine_to_query(query_vec, vec_col))
+        .orderBy(F.desc(score_col), F.asc(id_col))
+        .limit(k)
     )
-    return scored.orderBy(F.desc(score_col), F.asc(id_col)).limit(k)
 
 
 def knn_topk_filtered(

@@ -15,8 +15,8 @@ Split per Spark's execution model:
   shape to knn_topk. This is the only part that touches all N rows, so
   it's the only part that must scale.
 - **driver-side**: the greedy selection itself is inherently sequential
-  (each pick conditions the next) over fetch_n ≤ ~100 rows — a NumPy
-  O(fetch_n²·dim) loop on bounded data, NOT a distributed op. Putting
+  (each pick conditions the next) over fetch_n ≤ ~100 rows — an
+  O(k²·fetch_n·dim) loop on bounded data, NOT a distributed op. Putting
   it in the driver is the honest design; the collected pool is bounded
   by construction, never by luck.
 
@@ -28,7 +28,6 @@ from __future__ import annotations
 
 import math
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     DoubleType,
@@ -40,38 +39,6 @@ from pyspark.sql.types import (
 from movievectorsearch_spark.functions.vector import cosine_to_query
 
 
-def mmr_select(
-    ids: list,
-    scores: np.ndarray,
-    vecs: np.ndarray,
-    k: int,
-    lam: float = 0.7,
-) -> list[tuple]:
-    """Greedy MMR over a candidate pool (NumPy, deterministic).
-    Returns [(id, rank, rel_score, mmr_score), ...]."""
-    n = len(ids)
-    k = min(k, n)
-    norms = np.linalg.norm(vecs, axis=1)
-    norms[norms == 0] = 1.0
-    unit = vecs / norms[:, None]
-    selected: list[int] = []
-    out: list[tuple] = []
-    remaining = list(range(n))
-    for rank in range(k):
-        if not selected:
-            mmr = lam * scores[remaining]
-        else:
-            red = unit[remaining] @ unit[selected].T  # cosine to selected
-            mmr = lam * scores[remaining] - (1.0 - lam) * red.max(axis=1)
-        # argmax with id tie-break: stable because remaining is id-sorted
-        # within equal scores (pool pre-sorted by score desc, id asc)
-        best_pos = int(np.argmax(mmr))
-        best = remaining.pop(best_pos)
-        selected.append(best)
-        out.append((ids[best], rank + 1, float(scores[best]), float(mmr[best_pos])))
-    return out
-
-
 def mmr_select_exact(
     ids: list,
     scores: list[float],
@@ -79,16 +46,17 @@ def mmr_select_exact(
     k: int,
     lam: float = 0.7,
 ) -> list[tuple]:
-    """Greedy MMR with SEQUENTIAL-FOLD float arithmetic — the
-    bit-reproducible twin of :func:`mmr_select`. Every kernel mirrors
-    the SQL oracle exactly: pairwise cosine is py_dot / (py_l2_norm ·
-    py_l2_norm) in that order (numpy's pairwise/SIMD summation is NOT
-    reproducible in SQL — same rationale as py_cosine_to_query), the
-    1−λ constant is computed once in Python and inlined into the oracle
-    via repr(), and argmax ties break on min id. This is what turns the
-    'inherently sequential' greedy loop into a hash-checkable query:
-    the loop is UNROLLED in the oracle as k chained CTE steps, which is
-    possible precisely because every step's floats are bit-identical."""
+    """Greedy MMR with SEQUENTIAL-FOLD float arithmetic, so every
+    kernel mirrors the SQL oracle bit-for-bit: pairwise cosine is
+    py_dot / (py_l2_norm · py_l2_norm) in that order (numpy's
+    pairwise/SIMD summation is NOT reproducible in SQL — same rationale
+    as py_cosine_to_query), the 1−λ constant is computed once in
+    Python and inlined into the oracle via repr(), and argmax ties
+    break on min id. This is what turns the 'inherently sequential'
+    greedy loop into a hash-checkable query: the loop is UNROLLED in
+    the oracle as k chained CTE steps, which is possible precisely
+    because every step's floats are bit-identical.
+    Returns [(id, rank, rel_score, mmr_score), ...]."""
     from movievectorsearch_spark.functions.vector import py_dot, py_l2_norm
 
     n = len(ids)
@@ -165,9 +133,7 @@ def mmr_rerank(
     scores = [float(r._score) for r in pool]
     vecs = [[float(x) for x in r._vec] for r in pool]
     # the exact (sequential-fold) selector: bit-reproducible in the
-    # DuckDB oracle; mmr_select (numpy) is the fast path for big pools,
-    # cross-checked against this one in tests/test_rerank.py.
-    # Rounding mirrors DuckDB round() (half AWAY from zero) — Python's
+    # DuckDB oracle. Rounding mirrors DuckDB round() (half AWAY from zero) — Python's
     # banker's round() could diverge on an exact 6th-decimal midpoint.
     rows = [
         (i, rank, _round6(rel), _round6(m))

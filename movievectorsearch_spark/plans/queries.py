@@ -56,7 +56,7 @@ from movievectorsearch_spark.functions.vector import (
     norm_expr,
     py_l2_norm,
 )
-from movievectorsearch_spark.operators.knn import knn_batch_literal
+from movievectorsearch_spark.operators.knn import knn_batch_literal, knn_topk
 from movievectorsearch_spark.operators import dedup as D
 from movievectorsearch_spark.operators import textanalysis as TA
 from movievectorsearch_spark.operators.upsert import upsert_latest_wins
@@ -1074,6 +1074,22 @@ WHERE i.inter / (sa.nsh + sb.nsh - i.inter) >= {_NGRAM_THRESHOLD}"""
 
 _NGRAM_SQL = f"WITH {_NGRAM_CTES}\n{_NGRAM_SELECT}"
 
+# components of the jaccard-pair graph via recursive CTE (the query
+# that uses it opens WITH RECURSIVE): seed every node with its own id,
+# propagate ids along edges to a fixpoint (UNION dedupes), take the min
+# reachable id = canonical representative
+_NGRAM_CC_CTES = f"""{_NGRAM_CTES},
+pairs AS ({_NGRAM_SELECT}),
+edges AS (SELECT a_id AS src, b_id AS dst FROM pairs
+          UNION ALL SELECT b_id, a_id FROM pairs),
+nodes AS (SELECT DISTINCT src AS id FROM edges),
+reach(id, lab) AS (
+  SELECT id, id FROM nodes
+  UNION
+  SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.id
+),
+cc AS (SELECT id AS doc_id, min(lab) AS cluster_id FROM reach GROUP BY id)"""
+
 
 @q("dedup_ngram_jaccard", _NGRAM_SQL)
 def dedup_ngram_jaccard(spark, sf_dir):
@@ -1088,21 +1104,8 @@ def dedup_ngram_jaccard(spark, sf_dir):
     )
 
 
-# components of the jaccard-pair graph via recursive CTE: seed every
-# node with its own id, propagate ids along edges to a fixpoint (UNION
-# dedupes), take the min reachable id = canonical representative
 _CLUSTER_SQL = f"""
-WITH RECURSIVE {_NGRAM_CTES},
-pairs AS ({_NGRAM_SELECT}),
-edges AS (SELECT a_id AS src, b_id AS dst FROM pairs
-          UNION ALL SELECT b_id, a_id FROM pairs),
-nodes AS (SELECT DISTINCT src AS id FROM edges),
-reach(id, lab) AS (
-  SELECT id, id FROM nodes
-  UNION
-  SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.id
-),
-cc AS (SELECT id AS doc_id, min(lab) AS cluster_id FROM reach GROUP BY id)
+WITH RECURSIVE {_NGRAM_CC_CTES}
 SELECT c.doc_id, c.cluster_id, s.cluster_size, c.doc_id = c.cluster_id AS keep
 FROM cc c JOIN (SELECT cluster_id, count(*) AS cluster_size
                 FROM cc GROUP BY cluster_id) s USING (cluster_id)
@@ -1202,10 +1205,9 @@ def dedup_embedding_cosine(spark, sf_dir):
     (operators/dedup.embedding_neardup_pairs_srp): n_tables independent
     sign-random-projection tables → bounded (table, bucket) blocks →
     per-block GEMM candidates → exact-fold re-score. Block size is
-    N / 2^n_planes per table — a tuning knob, not a data property (the
-    earlier label blocking made blocks scale with the corpus: ~10 TB a
-    block at 100 TB). The oracle mirrors the identical literal
-    hyperplanes, so the pair set is bit-reproducible."""
+    N / 2^n_planes per table — a tuning knob, not a data property. The
+    oracle mirrors the identical literal hyperplanes, so the pair set
+    is bit-reproducible."""
     e = load_table(spark, sf_dir, "embeddings")
     pairs = D.embedding_neardup_pairs_srp(
         e,
@@ -5224,7 +5226,6 @@ def mllib_embed_knn(spark, sf_dir):
     violated invariant flips a bit and fails the hash compare. Value-
     level parity for the featurize→KNN path lives in the portable
     twin `hashed_tfidf_knn` (exact fixed-point TF-IDF, full oracle)."""
-    from movievectorsearch_spark.operators.knn import knn_topk
     from movievectorsearch_spark.pipeline.mllib_embed import (
         embed_documents_mllib,
         fit_embedder,
@@ -6335,17 +6336,7 @@ def decayed_popularity(spark, sf_dir):
 
 
 _DEDUP_E2E_SQL = f"""
-WITH RECURSIVE {_NGRAM_CTES},
-pairs AS ({_NGRAM_SELECT}),
-edges AS (SELECT a_id AS src, b_id AS dst FROM pairs
-          UNION ALL SELECT b_id, a_id FROM pairs),
-nodes AS (SELECT DISTINCT src AS id FROM edges),
-reach(id, lab) AS (
-  SELECT id, id FROM nodes
-  UNION
-  SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.id
-),
-cc AS (SELECT id AS doc_id, min(lab) AS cluster_id FROM reach GROUP BY id),
+WITH RECURSIVE {_NGRAM_CC_CTES},
 tok AS (SELECT doc_id, len({tokens_sql('text')})::BIGINT AS n_tok FROM documents),
 dropped AS (SELECT doc_id FROM cc WHERE doc_id <> cluster_id)
 SELECT count(*)::BIGINT AS n_docs_before,
@@ -7527,12 +7518,7 @@ def matryoshka_knn_recall(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull() & (F.size("embedding") > 0)
     )
-    full_top = (
-        e.select("vec_id", cosine_to_query(QUERY_VEC, "embedding").alias("c"))
-        .orderBy(F.desc("c"), F.asc("vec_id"))
-        .limit(_MAT_K)
-        .select("vec_id")
-    )
+    full_top = knn_topk(e, QUERY_VEC, _MAT_K).select("vec_id")
     trunc_top = (
         e.select(
             "vec_id",
@@ -7661,12 +7647,7 @@ def int8_knn_recall(spark, sf_dir):
         .limit(_MAT_K)
         .select("vec_id")
     )
-    full_top = (
-        e.select("vec_id", cosine_to_query(QUERY_VEC, "embedding").alias("c"))
-        .orderBy(F.desc("c"), F.asc("vec_id"))
-        .limit(_MAT_K)
-        .select("vec_id")
-    )
+    full_top = knn_topk(e, QUERY_VEC, _MAT_K).select("vec_id")
     return full_top.join(int8_top, "vec_id").agg(
         F.lit(_MAT_K).alias("k"),
         F.count("*").cast("bigint").alias("n_overlap"),
@@ -7944,15 +7925,8 @@ def ann_recall_at_k(spark, sf_dir):
     heap + a 10-row join. Registered with its oracle at import time via
     the same literal-hyperplane mirror as ann_srp_topk."""
     ann = ann_srp_topk(spark, sf_dir).select("vec_id")
-    e = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("embedding").isNotNull() & (F.size("embedding") > 0)
-    )
-    exact = (
-        e.select("vec_id", cosine_to_query(QUERY_VEC, "embedding").alias("c"))
-        .orderBy(F.desc("c"), F.asc("vec_id"))
-        .limit(10)
-        .select("vec_id")
-    )
+    e = load_table(spark, sf_dir, "embeddings")
+    exact = knn_topk(e, QUERY_VEC, 10).select("vec_id")
     return exact.join(ann, "vec_id").agg(
         F.lit(10).alias("k"),
         F.count("*").cast("bigint").alias("n_overlap"),
@@ -9085,17 +9059,7 @@ def cross_source_dup_matrix(spark, sf_dir):
 _QUAR_FLAG_MOD = 20
 
 _QUARANTINE_SQL = f"""
-WITH RECURSIVE {_NGRAM_CTES},
-pairs AS ({_NGRAM_SELECT}),
-edges AS (SELECT a_id AS src, b_id AS dst FROM pairs
-          UNION ALL SELECT b_id, a_id FROM pairs),
-nodes AS (SELECT DISTINCT src AS id FROM edges),
-reach(id, lab) AS (
-  SELECT id, id FROM nodes
-  UNION
-  SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.id
-),
-cc AS (SELECT id AS doc_id, min(lab) AS cluster_id FROM reach GROUP BY id),
+WITH RECURSIVE {_NGRAM_CC_CTES},
 allc AS (
   SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) AS cluster_id,
          ({poly_hash_sql('CAST(d.doc_id AS VARCHAR)')} % {_QUAR_FLAG_MOD}) = 0
@@ -9334,17 +9298,7 @@ def global_shuffle_positions(spark, sf_dir):
 
 
 _SURVIVORS_SQL = f"""
-WITH RECURSIVE {_NGRAM_CTES},
-pairs AS ({_NGRAM_SELECT}),
-edges AS (SELECT a_id AS src, b_id AS dst FROM pairs
-          UNION ALL SELECT b_id, a_id FROM pairs),
-nodes AS (SELECT DISTINCT src AS id FROM edges),
-reach(id, lab) AS (
-  SELECT id, id FROM nodes
-  UNION
-  SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.id
-),
-cc AS (SELECT id AS doc_id, min(lab) AS cluster_id FROM reach GROUP BY id)
+WITH RECURSIVE {_NGRAM_CC_CTES}
 SELECT d.doc_id, d.lang, d.source, d.n_chars
 FROM documents d LEFT JOIN cc ON d.doc_id = cc.doc_id
 WHERE cc.doc_id IS NULL OR cc.cluster_id = d.doc_id
@@ -9858,17 +9812,7 @@ def _split_case_sql(key_expr: str) -> str:
 
 
 _LEAKAGE_SPLIT_SQL = f"""
-WITH RECURSIVE {_NGRAM_CTES},
-pairs AS ({_NGRAM_SELECT}),
-edges AS (SELECT a_id AS src, b_id AS dst FROM pairs
-          UNION ALL SELECT b_id, a_id FROM pairs),
-nodes AS (SELECT DISTINCT src AS id FROM edges),
-reach(id, lab) AS (
-  SELECT id, id FROM nodes
-  UNION
-  SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.id
-),
-cc AS (SELECT id AS doc_id, min(lab) AS cluster_id FROM reach GROUP BY id),
+WITH RECURSIVE {_NGRAM_CC_CTES},
 allc AS (
   SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) AS cluster_id,
          len({tokens_sql('d.text')})::BIGINT AS n_tokens
@@ -10265,17 +10209,7 @@ def events_changepoint_cusum(spark, sf_dir):
 
 
 _RELEASE_SQL = f"""
-WITH RECURSIVE {_NGRAM_CTES},
-pairs AS ({_NGRAM_SELECT}),
-edges AS (SELECT a_id AS src, b_id AS dst FROM pairs
-          UNION ALL SELECT b_id, a_id FROM pairs),
-nodes AS (SELECT DISTINCT src AS id FROM edges),
-reach(id, lab) AS (
-  SELECT id, id FROM nodes
-  UNION
-  SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.id
-),
-cc AS (SELECT id AS doc_id, min(lab) AS cluster_id FROM reach GROUP BY id),
+WITH RECURSIVE {_NGRAM_CC_CTES},
 ft AS (SELECT doc_id, lang, text, {tokens_sql('text')} AS toks FROM documents),
 fb AS (
   SELECT doc_id, toks,
@@ -10569,17 +10503,7 @@ def partition_skew_report(spark, sf_dir):
 
 
 _GRAPHSTAT_SQL = f"""
-WITH RECURSIVE {_NGRAM_CTES},
-pairs AS ({_NGRAM_SELECT}),
-edges AS (SELECT a_id AS src, b_id AS dst FROM pairs
-          UNION ALL SELECT b_id, a_id FROM pairs),
-nodes AS (SELECT DISTINCT src AS id FROM edges),
-reach(id, lab) AS (
-  SELECT id, id FROM nodes
-  UNION
-  SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.id
-),
-cc AS (SELECT id AS doc_id, min(lab) AS cluster_id FROM reach GROUP BY id),
+WITH RECURSIVE {_NGRAM_CC_CTES},
 csize AS (SELECT cluster_id, count(*)::BIGINT AS n_nodes
           FROM cc GROUP BY cluster_id),
 cedge AS (
@@ -11392,24 +11316,15 @@ def ann_probe_recall_curve(spark, sf_dir):
     the curve read off the base table is the curve the index serves.
     Recall is monotone in the radius by construction (probe sets are
     nested). Hash-checked via the literal-hyperplane oracle mirror."""
-    from movievectorsearch_spark.operators.ann import srp_search
-
-    e = load_table(spark, sf_dir, "embeddings")
-    exact = (
-        e.filter(F.col("embedding").isNotNull() & (F.size("embedding") > 0))
-        .select(
-            "vec_id",
-            cosine_to_query(QUERY_VEC, "embedding").alias("c"),
-        )
-        .orderBy(F.desc("c"), F.asc("vec_id"))
-        .limit(10)
-        .select("vec_id")
-    )
     from movievectorsearch_spark.operators.ann import (
         _bucket_of,
         _probe_buckets,
         random_hyperplanes,
+        srp_search,
     )
+
+    e = load_table(spark, sf_dir, "embeddings")
+    exact = knn_topk(e, QUERY_VEC, 10).select("vec_id")
 
     planes = random_hyperplanes(8, len(QUERY_VEC), 42)
     qb = _bucket_of(QUERY_VEC, planes)
@@ -11594,16 +11509,7 @@ def ivf_probe_recall_curve(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     cents = seeded_centroids(e, n_cells=8)
     assigned = _persist(ivf_assign(e, cents))
-    exact = (
-        e.filter(F.col("embedding").isNotNull() & (F.size("embedding") > 0))
-        .select(
-            "vec_id",
-            cosine_to_query(QUERY_VEC, "embedding").alias("c"),
-        )
-        .orderBy(F.desc("c"), F.asc("vec_id"))
-        .limit(10)
-        .select("vec_id")
-    )
+    exact = knn_topk(e, QUERY_VEC, 10).select("vec_id")
     # lazy checkpoint: share the exact-top-10 result across the three
     # curve points instead of re-planning its scan+heap per part (same
     # fix as ann_probe_recall_curve, round 11)
@@ -11701,17 +11607,7 @@ def parallel_text_mining(spark, sf_dir):
 
 
 _KEEP_BEST_SQL = f"""
-WITH RECURSIVE {_NGRAM_CTES},
-pairs AS ({_NGRAM_SELECT}),
-edges AS (SELECT a_id AS src, b_id AS dst FROM pairs
-          UNION ALL SELECT b_id, a_id FROM pairs),
-nodes AS (SELECT DISTINCT src AS id FROM edges),
-reach(id, lab) AS (
-  SELECT id, id FROM nodes
-  UNION
-  SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.id
-),
-cc AS (SELECT id AS doc_id, min(lab) AS cluster_id FROM reach GROUP BY id),
+WITH RECURSIVE {_NGRAM_CC_CTES},
 ql AS (
   SELECT doc_id, toks, text,
          CAST(round(({_funnel_quality_sql()}) * 1000000, 0) AS BIGINT)
@@ -14204,24 +14100,10 @@ def pq_adc_knn_recall(spark, sf_dir):
         .limit(_MAT_K)
         .select("vec_id")
     )
-    rerank_top = (
-        F.broadcast(cand.select("vec_id"))
-        .join(e, "vec_id")
-        .select(
-            "vec_id", cosine_to_query(QUERY_VEC, "embedding").alias("c")
-        )
-        .orderBy(F.desc("c"), F.asc("vec_id"))
-        .limit(_MAT_K)
-        .select("vec_id")
-    )
-    full_top = (
-        e.select(
-            "vec_id", cosine_to_query(QUERY_VEC, "embedding").alias("c")
-        )
-        .orderBy(F.desc("c"), F.asc("vec_id"))
-        .limit(_MAT_K)
-        .select("vec_id")
-    )
+    rerank_top = knn_topk(
+        F.broadcast(cand.select("vec_id")).join(e, "vec_id"), QUERY_VEC, _MAT_K
+    ).select("vec_id")
+    full_top = knn_topk(e, QUERY_VEC, _MAT_K).select("vec_id")
     # union-tag the two 20-row candidate sets so the exact top-20
     # subtree runs ONCE and both overlaps come out of a single join
     tagged = pq_top.select(
@@ -14315,14 +14197,7 @@ def binary_hamming_knn_recall(spark, sf_dir):
         .limit(_MAT_K)
         .select("vec_id")
     )
-    full_top = (
-        e.select(
-            "vec_id", cosine_to_query(QUERY_VEC, "embedding").alias("c")
-        )
-        .orderBy(F.desc("c"), F.asc("vec_id"))
-        .limit(_MAT_K)
-        .select("vec_id")
-    )
+    full_top = knn_topk(e, QUERY_VEC, _MAT_K).select("vec_id")
     return full_top.join(bin_top, "vec_id").agg(
         F.lit(_MAT_K).alias("k"),
         F.count("*").cast("bigint").alias("n_overlap"),

@@ -85,6 +85,11 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/mvs_spark_warehouse"),
         )
         .config("spark.driver.maxResultSize", "2g")
+        # PySpark records every Column/functions call's Python call site
+        # for error messages, at several py4j round trips per call: most
+        # of a Column-API plan build. PySpark reads this once per
+        # process, at the first Column call, so it must be set here.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

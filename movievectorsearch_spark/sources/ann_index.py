@@ -29,14 +29,15 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from movievectorsearch_spark.functions.vector import cosine_to_query
 from movievectorsearch_spark.operators.ann import (
     _bucket_of,
     _probe_buckets,
+    _probe_cells,
     ivf_cell,
     random_hyperplanes,
     srp_bucket,
 )
+from movievectorsearch_spark.operators.knn import knn_topk
 
 BUCKET_COL = "bucket"
 CELL_COL = "cell"
@@ -90,10 +91,7 @@ def srp_search_indexed(
     planes = random_hyperplanes(n_planes, dim, seed)
     probes = _probe_buckets(_bucket_of(query_vec, planes), n_planes, max_hamming)
     cand = spark.read.parquet(path).filter(F.col(BUCKET_COL).isin(probes))
-    scored = cand.withColumn("score", cosine_to_query(query_vec, vec_col))
-    return (
-        scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k).drop(BUCKET_COL)
-    )
+    return knn_topk(cand, query_vec, k, vec_col=vec_col, id_col=id_col).drop(BUCKET_COL)
 
 
 # ---------------------------------------------------------------------------
@@ -143,26 +141,12 @@ def ivf_search_indexed(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Probe the persisted IVF index: rank cells by centroid cosine on
-    the driver (K tiny vectors), partition-prune to the nprobe nearest
-    inverted lists, exact rescore, top-k. Row-identical to
-    operators/ann.ivf_search over the same corpus; probe ranking uses
-    the sequential-fold cosine so the probed cell set is
-    bit-reproducible in the DuckDB oracle."""
-    from movievectorsearch_spark.functions.vector import py_cosine_to_query
-
-    centroids = read_ivf_centroids(spark, path)
-
-    def cos(c):
-        v = py_cosine_to_query(query_vec, c)
-        return v if v is not None else -1.0
-
-    order = sorted(range(len(centroids)), key=lambda i: (-cos(centroids[i]), i))
-    cells = order[:nprobe]
+    the driver (K tiny vectors, :func:`_probe_cells`), partition-prune
+    to the nprobe nearest inverted lists, exact rescore, top-k.
+    Row-identical to operators/ann.ivf_search over the same corpus."""
+    cells = _probe_cells(read_ivf_centroids(spark, path), query_vec, nprobe)
     cand = spark.read.parquet(path).filter(F.col(CELL_COL).isin(cells))
-    scored = cand.withColumn("score", cosine_to_query(query_vec, vec_col))
-    return (
-        scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k).drop(CELL_COL)
-    )
+    return knn_topk(cand, query_vec, k, vec_col=vec_col, id_col=id_col).drop(CELL_COL)
 
 
 # ---------------------------------------------------------------------------

@@ -136,48 +136,15 @@ def test_ngram_jaccard_exact_values(spark):
     assert (1, 3) not in got and (2, 3) not in got
 
 
-def test_embedding_neardup_blocked(spark):
-    df = spark.createDataFrame(
-        [
-            (1, 0, [1.0, 0.0]),
-            (2, 0, [0.999, 0.01]),
-            (3, 0, [0.0, 1.0]),
-            (4, 1, [1.0, 0.0]),  # other block — never paired with 1
-        ],
-        "vec_id INT, label INT, embedding ARRAY<DOUBLE>",
-    )
-    out = D.embedding_neardup_pairs(df, "vec_id", "embedding", "label", 0.95).collect()
-    assert {(r["a_id"], r["b_id"]) for r in out} == {(1, 2)}
-
-
 def test_embedding_neardup_all_paths_skip_zero_vector(spark):
-    """An all-zero embedding has no cosine: every path drops it instead
-    of failing on it (the GEMM path once stacked its NULL unit vector)."""
+    """An all-zero embedding has no cosine: the operator drops it
+    instead of failing on it (a GEMM once stacked its NULL unit vector)."""
     df = spark.createDataFrame(
         [(1, [1.0, 0.0], 0), (2, [1.0, 0.0], 0), (3, [0.0, 0.0], 0), (4, [0.0, 1.0], 1)],
         "vec_id INT, embedding ARRAY<DOUBLE>, label INT",
     )
-    runs = [
-        D.embedding_neardup_pairs(df, "vec_id", "embedding", "label", 0.9),
-        D.embedding_neardup_pairs(
-            df, "vec_id", "embedding", "label", 0.9, gemm_candidates=False
-        ),
-        D.embedding_neardup_pairs_srp(df, dim=2, threshold=0.9),
-    ]
-    for out in runs:
-        assert [(r.a_id, r.b_id, r.cos) for r in out.collect()] == [(1, 2, 1.0)]
-
-
-def test_embedding_neardup_gemm_path_matches_expression_path(spark, sf_dir):
-    from movievectorsearch_spark.catalog import load_table
-
-    e = load_table(spark, sf_dir, "embeddings")
-    fast = D.embedding_neardup_pairs(e, "vec_id", "embedding", "label", 0.3)
-    slow = D.embedding_neardup_pairs(
-        e, "vec_id", "embedding", "label", 0.3, gemm_candidates=False
-    )
-    to_set = lambda df: {(r["a_id"], r["b_id"], r["cos"]) for r in df.collect()}
-    assert to_set(fast) == to_set(slow) and fast.count() > 0
+    out = D.embedding_neardup_pairs_srp(df, dim=2, threshold=0.9)
+    assert [(r.a_id, r.b_id, r.cos) for r in out.collect()] == [(1, 2, 1.0)]
 
 
 def test_embedding_neardup_srp_matches_numpy_model(spark, sf_dir):
@@ -529,24 +496,6 @@ def test_containment_between_two_signature_stores(spark):
     }
     assert out[1] > 700_000   # true containment of doc 1 in doc 100 is 1.0
     assert out[2] == 0        # disjoint text shares no signature components
-
-
-def test_embedding_neardup_unblocked_requires_explicit_opt_in(spark):
-    """block_col=None is an all-pairs cross join — it must raise unless
-    the caller opts in explicitly (round-3 judge item #5)."""
-    import pytest as _pytest
-
-    df = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.999, 0.01])],
-        "vec_id INT, embedding ARRAY<DOUBLE>",
-    )
-    with _pytest.raises(ValueError, match="all-pairs"):
-        D.embedding_neardup_pairs(df, "vec_id", "embedding", None, 0.95)
-    # explicit opt-in still works (toy corpora / tests)
-    out = D.embedding_neardup_pairs(
-        df, "vec_id", "embedding", None, 0.95, allow_all_pairs=True
-    ).collect()
-    assert {(r["a_id"], r["b_id"]) for r in out} == {(1, 2)}
 
 
 def test_minhash_signature_null_text_has_no_shingles(spark):

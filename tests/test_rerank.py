@@ -8,13 +8,40 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from movievectorsearch_spark.catalog import load_table
-from movievectorsearch_spark.operators.rerank import mmr_rerank, mmr_select
+from movievectorsearch_spark.operators.rerank import mmr_rerank, mmr_select_exact
 from movievectorsearch_spark.plans.queries import QUERY_VEC
+
+
+def _mmr_select_numpy(ids, scores, vecs, k, lam=0.7):
+    """Greedy MMR over a candidate pool with NumPy matrix ops: the
+    reference for the sequential-fold selector on the query path.
+    Returns [(id, rank, rel_score, mmr_score), ...]."""
+    n = len(ids)
+    k = min(k, n)
+    norms = np.linalg.norm(vecs, axis=1)
+    norms[norms == 0] = 1.0
+    unit = vecs / norms[:, None]
+    selected: list[int] = []
+    out: list[tuple] = []
+    remaining = list(range(n))
+    for rank in range(k):
+        if not selected:
+            mmr = lam * scores[remaining]
+        else:
+            red = unit[remaining] @ unit[selected].T  # cosine to selected
+            mmr = lam * scores[remaining] - (1.0 - lam) * red.max(axis=1)
+        # argmax with id tie-break: stable because remaining is id-sorted
+        # within equal scores (pool pre-sorted by score desc, id asc)
+        best_pos = int(np.argmax(mmr))
+        best = remaining.pop(best_pos)
+        selected.append(best)
+        out.append((ids[best], rank + 1, float(scores[best]), float(mmr[best_pos])))
+    return out
 
 
 def _numpy_mmr(q, ids, vecs, k, lam, fetch_order):
     # independent reference implementation (different code path from
-    # mmr_select: explicit loops, no matrix ops)
+    # _mmr_select_numpy: explicit loops, no matrix ops)
     qv = np.asarray(q, float)
     sims = {
         i: float(np.dot(qv, v) / (np.linalg.norm(qv) * np.linalg.norm(v)))
@@ -105,28 +132,21 @@ def test_mmr_select_prefers_diverse_over_redundant():
     # synthetic: two near-identical high scorers + one orthogonal mid
     # scorer — plain top-2 takes the twins, MMR must take the diverse one
     ids = [1, 2, 3]
-    vecs = np.array([[1.0, 0.0], [0.999, 0.01], [0.0, 1.0]])
-    scores = np.array([0.99, 0.989, 0.6])
-    picks = [r[0] for r in mmr_select(ids, scores, vecs, k=2, lam=0.5)]
+    vecs = [[1.0, 0.0], [0.999, 0.01], [0.0, 1.0]]
+    scores = [0.99, 0.989, 0.6]
+    picks = [r[0] for r in mmr_select_exact(ids, scores, vecs, k=2, lam=0.5)]
     assert picks == [1, 3]
 
 
 def test_exact_selector_matches_numpy_selector():
-    """mmr_select (numpy fast path) and mmr_select_exact (the
-    bit-reproducible oracle twin now on the query path) must pick the
-    same documents in the same order on a spread-out pool."""
-    import numpy as np
-
-    from movievectorsearch_spark.operators.rerank import (
-        mmr_select,
-        mmr_select_exact,
-    )
-
+    """The NumPy selector and mmr_select_exact (the bit-reproducible
+    selector on the query path) must pick the same documents in the
+    same order on a spread-out pool."""
     rng = [(i * 29) % 17 for i in range(40)]
     vecs = [[float((i * 13 + j * 7) % 11 - 5) for j in range(8)] for i in rng]
     scores = [float((i * 31) % 23) / 23.0 for i in range(40)]
     ids = list(range(40))
-    a = mmr_select(ids, np.array(scores), np.array(vecs), 10)
+    a = _mmr_select_numpy(ids, np.array(scores), np.array(vecs), 10)
     b = mmr_select_exact(ids, scores, vecs, 10)
     assert [t[0] for t in a] == [t[0] for t in b]
     for (ia, ra, rela, ma), (ib, rb, relb, mb) in zip(a, b):

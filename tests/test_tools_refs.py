@@ -1,6 +1,7 @@
 """Every name a tools/ script takes from bench.py, every name the
-scripts, perfbench and bench.py import from the package, and every
-``tools/<name>.py`` the docs mention, still exists.
+scripts, perfbench and bench.py import from the package, every
+``tools/<name>.py`` the docs mention, and every Sphinx cross-reference
+in a package docstring, still exists.
 
 The tools and perfbench have no tests of their own, so a deleted name
 would only surface when someone next runs the script. This reads each
@@ -141,3 +142,76 @@ def test_docs_name_only_existing_tools():
         f"{doc}: {ref}" for doc, ref in refs if not (ROOT / ref).is_file()
     )
     assert missing == []
+
+
+_SPHINX_REF = re.compile(r":(func|data|class|mod):`~?\.?([\w.]+)`")
+
+
+def _package_index(root: Path) -> tuple[set[str], set[tuple[str, str]], dict]:
+    """Dotted module names, (module, name) for every def/class at any
+    depth and every top-level assignment, and each module's docstring
+    references, all read with ``ast`` (nothing is imported)."""
+    modules, defined, refs = set(), set(), {}
+    for path in sorted(root.rglob("*.py")):
+        parts = path.relative_to(root.parent).with_suffix("").parts
+        module = ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+        modules.add(module)
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defined.add((module, node.name))
+        for node in tree.body:
+            targets = (
+                node.targets if isinstance(node, ast.Assign)
+                else [node.target] if isinstance(node, ast.AnnAssign) else []
+            )
+            defined.update((module, t.id) for t in targets if isinstance(t, ast.Name))
+        refs[module] = {
+            (role, name)
+            for node in [tree, *ast.walk(tree)]
+            if isinstance(node, (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+            and (doc := ast.get_docstring(node))
+            for role, name in _SPHINX_REF.findall(doc)
+        }
+    return modules, defined, refs
+
+
+def _ref_exists(role: str, name: str, modules: set, defined: set) -> bool:
+    """A reference resolves when its dotted path ends a module name
+    (``:mod:``) or names a definition in a module whose dotted name ends
+    with the reference's prefix (bare names: any package module)."""
+    def ends(module: str, suffix: str) -> bool:
+        return module == suffix or module.endswith("." + suffix)
+
+    if role == "mod":
+        return any(ends(m, name) for m in modules)
+    prefix, _, attr = name.rpartition(".")
+    return any((not prefix or ends(m, prefix)) and a == attr for m, a in defined)
+
+
+def _dangling_doc_refs(root: Path) -> list[str]:
+    modules, defined, refs = _package_index(root)
+    return sorted(
+        f"{module}: :{role}:`{name}`"
+        for module, found in refs.items()
+        for role, name in found
+        if not _ref_exists(role, name, modules, defined)
+    )
+
+
+def test_package_docstrings_cite_only_existing_objects():
+    assert _dangling_doc_refs(ROOT / PKG) == []
+
+
+def test_doc_ref_scan_finds_a_dangling_reference(tmp_path):
+    pkg = tmp_path / "pkg"
+    (pkg / "ops").mkdir(parents=True)
+    (pkg / "__init__.py").write_text("")
+    (pkg / "ops" / "__init__.py").write_text("")
+    (pkg / "ops" / "a.py").write_text(
+        '"""See :mod:`ops.a` and :data:`LIMIT`."""\n'
+        "LIMIT = 3\n"
+        "def kept():\n"
+        '    """Like :func:`gone`, unlike :func:`ops.a.kept` or :func:`~pkg.ops.a.kept`."""\n'
+    )
+    assert _dangling_doc_refs(pkg) == ["pkg.ops.a: :func:`gone`"]

@@ -20,6 +20,8 @@ from __future__ import annotations
 
 import os
 import weakref
+from collections.abc import Callable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,13 +53,25 @@ def table_path(sf_dir: str, name: str) -> str:
 
 # Per-session memo: every registry builder re-resolved its scans through
 # `spark.read.parquet` — DataSource lookup + footer schema read + file
-# listing, ~20-50 ms of driver/py4j work per call. A DataFrame is an
-# immutable logical plan, so the reader result for a given (session,
-# sf_dir, table) is reusable verbatim. The memo holds plans, plus the one
-# cached films view per sf_dir; nothing crosses processes (the dict dies
-# with the session/process). The sf-dir paths in this corpus are
-# write-once (driver fixtures and per-test tmp dirs); code that rewrites
-# one inside a live session calls `invalidate` first. Keyed weakly on the
+# listing, ~20-50 ms of driver/py4j work per call, plus a listing job
+# when a layout has more than 32 partition directories. A DataFrame is
+# an immutable logical plan, so the reader result for a given (session,
+# path) is reusable verbatim. The memo holds, each under a key whose
+# second element is the sf_dir or path it was read from:
+# - ("table", sf_dir, name): the testdata tables (`load_table`);
+# - ("films", sf_dir): the one cached films view (`films_view`);
+# - ("index", path) and ("centroids", path): a persisted ANN index's
+#   reader and its IVF centroids (sources/ann_index.py);
+# - ("index_dir", sf_dir, kind): where the registry's ANN entries wrote
+#   the index they serve over sf_dir (plans/queries.py).
+# Nothing crosses processes (the dict dies with the session/process).
+# A path is memoized on the promise that nothing rewrites it behind the
+# session's back: the sf-dir paths are write-once (testdata fixtures and
+# per-test tmp dirs), and code that rewrites one inside a live session
+# calls `invalidate` first — `write_srp_index` and `write_ivf_index` do
+# so for their index path. An index path that a streaming file sink
+# appends to is never served from the memo: `ann_index.index_reader`
+# resolves it afresh while the sink's log exists. Keyed weakly on the
 # session so a stopped session's plans are not resurrected.
 _PLAN_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
@@ -72,15 +86,28 @@ def _session_cache(spark: SparkSession) -> dict:
     return cache
 
 
-def invalidate(spark: SparkSession, sf_dir: str) -> None:
-    """Forget every memoized table and the films view of ``sf_dir`` in
-    this session, and free the cached films rows. The next
-    :func:`load_table` / :func:`films_view` re-reads the files."""
+def memoized(spark: SparkSession, key: tuple, build: Callable[[], Any]) -> Any:
+    """The session memo's value for ``key``, from ``build()`` on a miss.
+    ``key[1]`` is the sf_dir or path that :func:`invalidate` matches."""
     cache = _session_cache(spark)
-    for key in [k for k in cache if k[1] == sf_dir]:
-        df = cache.pop(key)
+    if key not in cache:
+        cache[key] = build()
+    return cache[key]
+
+
+def invalidate(spark: SparkSession, path: str) -> None:
+    """Forget everything this session memoized from ``path`` (an sf_dir
+    or an index path), and free the cached films rows. The next
+    :func:`load_table` / :func:`films_view` re-reads the files; an ANN
+    index that the registry built from ``path`` is forgotten with its
+    reader and centroids, so the next registry call builds it afresh."""
+    cache = _session_cache(spark)
+    for key in [k for k in cache if k[1] == path]:
+        value = cache.pop(key)
         if key[0] == "films":
-            df.unpersist()
+            value.unpersist()
+        elif key[0] == "index_dir":
+            invalidate(spark, value)
 
 
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -98,12 +125,9 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    cache = _session_cache(spark)
-    key = ("table", sf_dir, name)
-    df = cache.get(key)
-    if df is None:
-        df = cache[key] = _read_table(spark, sf_dir, name)
-    return df
+    return memoized(
+        spark, ("table", sf_dir, name), lambda: _read_table(spark, sf_dir, name)
+    )
 
 
 def load_tables(
@@ -170,11 +194,9 @@ def films_view(
     The temp-view registration still happens on EVERY register=True call
     (callers — and the hermetic oracle gate, which drops views between
     queries — rely on it)."""
-    cache = _session_cache(spark)
-    key = ("films", sf_dir)
-    films = cache.get(key)
-    if films is None:
-        films = cache[key] = _build_films(spark, sf_dir).cache()
+    films = memoized(
+        spark, ("films", sf_dir), lambda: _build_films(spark, sf_dir).cache()
+    )
     if register:
         films.createOrReplaceTempView("films")
     return films

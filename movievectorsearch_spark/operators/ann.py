@@ -165,7 +165,7 @@ def ivf_assign(
 
 
 def _probe_cells(
-    centroids: list[list[float]], query_vec: Sequence[float], nprobe: int
+    centroids: Sequence[Sequence[float]], query_vec: Sequence[float], nprobe: int
 ) -> list[int]:
     """The nprobe cells whose centroids are nearest the query, ties to
     the lowest cell. Ranked with the sequential-fold cosine

@@ -350,28 +350,20 @@ def ngram_jaccard_pairs(
 # Embedding cosine near-dup
 # ---------------------------------------------------------------------------
 
-def _unit_vectors(
-    emb: DataFrame, id_col: str, vec_col: str, block_col: str | None = None
-) -> DataFrame:
-    """``(id, nv[, blk])``: each non-empty vector divided by its norm.
+def _unit_vectors(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """``(id, nv)``: each non-empty vector divided by its norm.
     The norm is its own column, folded once per row; vectors with norm
     0 have no cosine and are dropped here, so no caller sees a NULL
     ``nv``."""
-    blk = [F.col(block_col).alias("blk")] if block_col else []
     return (
         emb.filter(F.col(vec_col).isNotNull() & (F.size(vec_col) > 0))
         .select(
             F.col(id_col).alias("id"),
             F.col(vec_col).cast("array<double>").alias("v"),
             F.expr(norm_expr(vec_col)).alias("nrm"),
-            *blk,
         )
         .filter(F.col("nrm") != 0.0)
-        .select(
-            "id",
-            F.expr("transform(v, x -> x / nrm)").alias("nv"),
-            *(["blk"] if block_col else []),
-        )
+        .select("id", F.expr("transform(v, x -> x / nrm)").alias("nv"))
     )
 
 

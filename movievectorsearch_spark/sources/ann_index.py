@@ -16,10 +16,23 @@ becomes the physical PARTITION KEY of a parquet layout:
   partition pruning turns that into "read only the probed directories"
   — the scan-metrics analog of an index probe. No bucket computation,
   no full scan, at any corpus size.
+- resolve once per session: the index's reader (``spark.read.parquet``,
+  whose partition discovery lists every bucket directory, as a Spark
+  job once there are more than 32) and the IVF centroids (a ``collect``)
+  are memoized in the catalog's per-session memo, keyed on the index
+  path, so a warm probe builds its plan without starting a Spark job.
+  ``write_srp_index`` and ``write_ivf_index`` call
+  ``catalog.invalidate(spark, path)`` before they write, so a rewrite
+  in the same session is served from the new files. A path that
+  ``srp_index_stream_sink`` maintains holds the file sink's
+  ``_spark_metadata`` log and is never served from the memo: every
+  probe of it resolves the sink's manifest afresh, so it sees every
+  committed batch, whichever process runs the sink.
 
 tests/test_ann_index.py proves probed-bucket-only reads with scan
-metrics (same observable as tests/test_zorder.py) and that the served
-results equal the in-memory ANN operators row-for-row.
+metrics (same observable as tests/test_zorder.py), that the served
+results equal the in-memory ANN operators row-for-row, and the memo's
+identity and invalidation.
 """
 
 from __future__ import annotations
@@ -29,6 +42,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from movievectorsearch_spark.catalog import invalidate, memoized
 from movievectorsearch_spark.operators.ann import (
     _bucket_of,
     _probe_buckets,
@@ -41,11 +55,37 @@ from movievectorsearch_spark.operators.knn import knn_topk
 
 BUCKET_COL = "bucket"
 CELL_COL = "cell"
-_CENTROID_SUBDIR = "_centroids"  # leading underscore: invisible to scans
 
 
 def _has_vec(df: DataFrame, vec_col: str) -> DataFrame:
     return df.filter(F.col(vec_col).isNotNull() & (F.size(vec_col) > 0))
+
+
+def _centroid_path(path: str) -> str:
+    """A sibling of the index directory: inside it, the centroid rows
+    would either break partition discovery or sit under a name Spark
+    treats as hidden."""
+    return f"{path}.centroids"
+
+
+def index_reader(spark: SparkSession, path: str) -> DataFrame:
+    """The index at ``path`` as a DataFrame, resolved once per session
+    (see the module docstring). The memo also keeps a handle on the
+    path's streaming-file-sink log, the same test Spark's reader makes
+    to serve a sink's manifest instead of a listing; while that log
+    exists, every call resolves the path afresh."""
+
+    def resolve():
+        log = spark._jvm.org.apache.hadoop.fs.Path(path, "_spark_metadata")
+        fs = log.getFileSystem(spark._jsc.hadoopConfiguration())
+        return spark.read.parquet(path), fs, log
+
+    reader, fs, log = memoized(spark, ("index", path), resolve)
+    return spark.read.parquet(path) if fs.exists(log) else reader
+
+
+def _in(col: str, values: Sequence[int]) -> str:
+    return f"{col} IN ({', '.join(map(str, values))})"
 
 
 # ---------------------------------------------------------------------------
@@ -69,6 +109,7 @@ def write_srp_index(
     bucketed = _has_vec(corpus, vec_col).withColumn(
         BUCKET_COL, srp_bucket(vec_col, planes)
     )
+    invalidate(corpus.sparkSession, path)
     bucketed.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
 
 
@@ -90,7 +131,7 @@ def srp_search_indexed(
     dim = len(query_vec)
     planes = random_hyperplanes(n_planes, dim, seed)
     probes = _probe_buckets(_bucket_of(query_vec, planes), n_planes, max_hamming)
-    cand = spark.read.parquet(path).filter(F.col(BUCKET_COL).isin(probes))
+    cand = index_reader(spark, path).filter(_in(BUCKET_COL, probes))
     return knn_topk(cand, query_vec, k, vec_col=vec_col, id_col=id_col).drop(BUCKET_COL)
 
 
@@ -106,29 +147,31 @@ def write_ivf_index(
 ) -> None:
     """One-time build: cell = argmax-cosine over broadcast centroid
     literals; ``partitionBy(cell)`` lays each inverted list out as its
-    own directory. Centroids persist under ``_centroids`` (underscore
-    prefix → ignored by data scans) so serving needs no side channel."""
+    own directory. Centroids persist beside it, at ``<path>.centroids``,
+    so serving needs no side channel."""
     assigned = _has_vec(corpus, vec_col).withColumn(
         CELL_COL, ivf_cell(vec_col, centroids)
     )
-    assigned.write.mode("overwrite").partitionBy(CELL_COL).parquet(path)
     spark = corpus.sparkSession
+    invalidate(spark, path)
+    assigned.write.mode("overwrite").partitionBy(CELL_COL).parquet(path)
     cent_rows = [(i, list(map(float, c))) for i, c in enumerate(centroids)]
     (
         spark.createDataFrame(cent_rows, "cell int, centroid array<double>")
         .coalesce(1)
         .write.mode("overwrite")
-        .parquet(f"{path}/{_CENTROID_SUBDIR}")
+        .parquet(_centroid_path(path))
     )
 
 
-def read_ivf_centroids(spark: SparkSession, path: str) -> list[list[float]]:
-    rows = (
-        spark.read.parquet(f"{path}/{_CENTROID_SUBDIR}")
-        .orderBy("cell")
-        .collect()
-    )
-    return [list(r.centroid) for r in rows]
+def read_ivf_centroids(spark: SparkSession, path: str) -> tuple[tuple[float, ...], ...]:
+    """The IVF index's centroids in cell order, read once per session."""
+
+    def read():
+        rows = spark.read.parquet(_centroid_path(path)).orderBy("cell").collect()
+        return tuple(tuple(r.centroid) for r in rows)
+
+    return memoized(spark, ("centroids", path), read)
 
 
 def ivf_search_indexed(
@@ -145,7 +188,7 @@ def ivf_search_indexed(
     to the nprobe nearest inverted lists, exact rescore, top-k.
     Row-identical to operators/ann.ivf_search over the same corpus."""
     cells = _probe_cells(read_ivf_centroids(spark, path), query_vec, nprobe)
-    cand = spark.read.parquet(path).filter(F.col(CELL_COL).isin(cells))
+    cand = index_reader(spark, path).filter(_in(CELL_COL, cells))
     return knn_topk(cand, query_vec, k, vec_col=vec_col, id_col=id_col).drop(CELL_COL)
 
 
@@ -171,7 +214,11 @@ def srp_index_stream_sink(
     makes every micro-batch exactly-once across restarts (no
     foreachBatch, no manual idempotence). ``srp_search_indexed`` serves
     the growing index unchanged: batch reads honor the sink's manifest
-    and partition pruning still reads only probed buckets. This is the
+    and partition pruning still reads only probed buckets. The sink's
+    log marks the path as stream-maintained, so :func:`index_reader`
+    resolves it afresh on every probe, bypassing the memo (until the
+    sink creates its log it has committed nothing, so a reader memoized
+    before then serves the files Spark would). This is the
     streaming half of the reference's always-fresh served index
     (Atlas keeps its vector index current as documents insert —
     reference backend/database.py:49-75 upserts straight into the

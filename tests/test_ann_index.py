@@ -20,6 +20,7 @@ from movievectorsearch_spark.operators.ann import (
 )
 from movievectorsearch_spark.plans.queries import QUERY_VEC
 from movievectorsearch_spark.sources.ann_index import (
+    index_reader,
     ivf_search_indexed,
     read_ivf_centroids,
     srp_search_indexed,
@@ -134,10 +135,68 @@ def test_ivf_index_probe_reads_only_probed_cells(spark, ivf_index):
     assert rows_read == expected, (rows_read, expected)
 
 
+def _jobs_started(spark, build) -> list[int]:
+    """Spark jobs that ``build()`` starts, from the status tracker's job
+    ids for a job group set around it."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup("ann-index-build"))
+    sc.setJobGroup("ann-index-build", "index probe build")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sorted(set(tracker.getJobIdsForGroup("ann-index-build")) - before)
+
+
+def test_index_reader_is_resolved_once_per_session(spark, srp_index, ivf_index):
+    """Two probes of one path share one reader, and a warm build of
+    either probe starts no Spark job: no partition-discovery listing
+    (the SRP index has more than 32 bucket directories) and no centroid
+    collect."""
+    srp_path, _ = srp_index
+    ivf_path, _, _ = ivf_index
+    srp_search_indexed(spark, srp_path, QUERY_VEC, k=10)
+    reader = index_reader(spark, srp_path)
+    srp_search_indexed(spark, srp_path, QUERY_VEC[::-1], k=5)
+    assert index_reader(spark, srp_path) is reader
+    ivf_search_indexed(spark, ivf_path, QUERY_VEC, k=10)
+    assert read_ivf_centroids(spark, ivf_path) is read_ivf_centroids(spark, ivf_path)
+    assert _jobs_started(
+        spark, lambda: srp_search_indexed(spark, srp_path, QUERY_VEC, k=10)
+    ) == []
+    assert _jobs_started(
+        spark, lambda: ivf_search_indexed(spark, ivf_path, QUERY_VEC, k=10)
+    ) == []
+
+
+def test_index_rewritten_in_session_serves_new_rows(spark, sf_dir, tmp_path):
+    """write_srp_index / write_ivf_index over a path this session has
+    already probed: the next probe reads the new files."""
+    e = load_table(spark, sf_dir, "embeddings")
+    cents = seeded_centroids(e, n_cells=8)
+    srp_path, ivf_path = str(tmp_path / "srp"), str(tmp_path / "ivf")
+    ids = lambda df: {r.vec_id for r in df.collect()}  # noqa: E731
+    # disjoint subsets: a stale reader would serve the other parity
+    for parity in (0, 1):
+        subset = e.filter(f"vec_id % 2 = {parity}")
+        write_srp_index(subset, srp_path, dim=64)
+        write_ivf_index(subset, ivf_path, cents)
+        got_srp = ids(srp_search_indexed(spark, srp_path, QUERY_VEC, k=10))
+        got_ivf = ids(ivf_search_indexed(spark, ivf_path, QUERY_VEC, k=10))
+        assert got_srp == ids(srp_search(subset, QUERY_VEC, k=10)) != set()
+        assert got_ivf == ids(
+            ivf_search(ivf_assign(subset, cents), cents, QUERY_VEC, k=10)
+        ) != set()
+        assert {i % 2 for i in got_srp | got_ivf} == {parity}
+
+
 def test_srp_index_streamed_equals_batch_built(spark, sf_dir, tmp_path):
     """The file-sink-maintained index serves the same results as a
-    one-shot batch build over the same corpus, and a restart appends
-    only new vectors (exactly-once via the sink's commit log)."""
+    one-shot batch build over the same corpus, after each sink run (a
+    probe between runs must not pin the first run's files), and a
+    restart appends only new vectors (exactly-once via the sink's
+    commit log)."""
     from pyspark.sql import functions as F
 
     from movievectorsearch_spark.catalog import load_table
@@ -161,6 +220,15 @@ def test_srp_index_streamed_equals_batch_built(spark, sf_dir, tmp_path):
     q = srp_index_stream_sink(stream, streamed, ckpt, dim)
     assert q.awaitTermination(120)
 
+    qv = [float((i * 37) % 19 - 9) / 10 for i in range(dim)]
+    probe = lambda idx: [  # noqa: E731
+        (r.vec_id, round(r.score, 9))
+        for r in srp_search_indexed(spark, idx, qv, k=10).collect()
+    ]
+    first_idx = str(tmp_path / "first_idx")
+    write_srp_index(halves[0], first_idx, dim)
+    assert probe(streamed) == probe(first_idx)
+
     # restart folds in the second half only
     halves[1].write.mode("append").parquet(src)
     stream2 = spark.readStream.schema(e.schema).option(
@@ -172,15 +240,10 @@ def test_srp_index_streamed_equals_batch_built(spark, sf_dir, tmp_path):
     batch_idx = str(tmp_path / "batch_idx")
     write_srp_index(e, batch_idx, dim)
 
-    qv = [float((i * 37) % 19 - 9) / 10 for i in range(dim)]
-    got = [
-        (r.vec_id, round(r.score, 9))
-        for r in srp_search_indexed(spark, streamed, qv, k=10).collect()
-    ]
-    want = [
-        (r.vec_id, round(r.score, 9))
-        for r in srp_search_indexed(spark, batch_idx, qv, k=10).collect()
-    ]
+    # the probe after the second run sees its batches (never a reader
+    # resolved before them)
+    got = probe(streamed)
+    want = probe(batch_idx)
     assert got == want and len(got) == 10
     # no duplicate vectors leaked in by the restart
     n_stream = spark.read.parquet(streamed).count()

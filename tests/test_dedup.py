@@ -191,7 +191,7 @@ def test_embedding_neardup_srp_block_sizes_bounded(spark, sf_dir):
 
     e = load_table(spark, sf_dir, "embeddings")
     n = e.count()
-    base = D._unit_vectors(e, "vec_id", "embedding", "label")
+    base = D._unit_vectors(e, "vec_id", "embedding")
     sizes = []
     for t in range(4):
         planes = random_hyperplanes(8, 64, 42 + t)
@@ -201,8 +201,11 @@ def test_embedding_neardup_srp_block_sizes_bounded(spark, sf_dir):
             .count()
         )
         sizes.append(counts.agg(F.max("count")).first()[0])
+    # label blocks over the same unit-vector rows
+    labels = e.select(F.col("vec_id").alias("id"), "label")
     max_label_block = (
-        base.groupBy("blk").count().agg(F.max("count")).first()[0]
+        base.join(labels, "id").groupBy("label").count()
+        .agg(F.max("count")).first()[0]
     )
     # each SRP block well under the label blocks and a small corpus frac
     assert max(sizes) < max_label_block / 2, (sizes, max_label_block)

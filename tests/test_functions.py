@@ -339,21 +339,27 @@ def _py4j_calls(spark, build) -> int:
     return n
 
 
-def test_vector_folds_build_in_a_few_planner_calls(spark, sf_dir):
+def test_vector_folds_build_in_a_few_planner_calls(spark, sf_dir, tmp_path):
     """Each fold is one parsed SQL expression, so its build cost does not
     grow with vector width or with the number of planes, centroids or
     queries; a Column-API fold costs one call per expression node
     (thousands here). A Column-API builder such as ``knn_topk`` or
     ``vector_search`` stays in the tens only because the session turns
     off PySpark's per-call call-site bookkeeping (71 and 127 calls with
-    it on). No Spark job runs."""
+    it on). A warm persisted-index probe reuses the session's index
+    reader (39 calls); re-resolving the reader costs 45 and, over the
+    index's 100+ bucket directories, a partition-listing job, which
+    tests/test_ann_index.py rules out. No other Spark job runs."""
     from movievectorsearch_spark.catalog import films_view
     from movievectorsearch_spark.operators.ann import ivf_cell, random_hyperplanes, srp_bucket
     from movievectorsearch_spark.operators.knn import knn_batch_literal, knn_topk
     from movievectorsearch_spark.operators.search import vector_search
+    from movievectorsearch_spark.sources.ann_index import srp_search_indexed, write_srp_index
 
     emb = load_table(spark, sf_dir, "embeddings")
     films = films_view(spark, sf_dir)
+    index = str(tmp_path / "srp")
+    write_srp_index(emb, index, dim=64)
     rng = np.random.RandomState(5)
     planes = random_hyperplanes(8, 64)
     cents = rng.uniform(-1, 1, (8, 64)).tolist()
@@ -364,12 +370,15 @@ def test_vector_folds_build_in_a_few_planner_calls(spark, sf_dir):
         "knn_batch_literal": _py4j_calls(spark, lambda: knn_batch_literal(emb, queries)),
         "knn_topk": _py4j_calls(spark, lambda: knn_topk(emb, queries[0])),
         "vector_search": _py4j_calls(spark, lambda: vector_search(films, queries[0], 20)),
+        "srp_search_indexed": _py4j_calls(
+            spark, lambda: srp_search_indexed(spark, index, queries[0])),
     }
     assert counts["srp_bucket"] <= 10, counts
     assert counts["ivf_cell"] <= 10, counts
     assert counts["knn_batch_literal"] <= 120, counts
     assert counts["knn_topk"] <= 45, counts
     assert counts["vector_search"] <= 80, counts
+    assert counts["srp_search_indexed"] <= 42, counts
 
 
 def test_split_sentences_udtf(spark):

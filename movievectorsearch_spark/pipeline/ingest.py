@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from movievectorsearch_spark.functions.text import clean_text, normalize_key, slug_id
-from movievectorsearch_spark.operators.dedup import anti_join_new_keys, fuzzy_pairs
+from movievectorsearch_spark.operators.dedup import anti_join_new_keys, levenshtein_ratio
 from movievectorsearch_spark.pipeline.featurizer import hash_embed_arrow
 
 FIELDS = ("TITLE", "YEAR", "DIRECTOR", "CAST", "GENRES", "PLOT")
@@ -83,48 +83,36 @@ def dedup_against(
     fuzzy_threshold: float = 0.85,
     year_band: int = 1,
 ) -> DataFrame:
-    """J2 then J1: drop exact key matches, then fuzzy near-matches
-    against the existing corpus (movie_generator.py:199-212)."""
+    """J2 then J1 (movie_generator.py:83-94, 199-212): two anti-joins of
+    one candidate branch against the corpus's distinct
+    ``(normalize_key(title), year)`` keys.
+
+    - exact: drop a candidate whose key and year are in the corpus;
+    - fuzzy: drop a survivor with ``levenshtein_ratio(new, old) >=
+      fuzzy_threshold`` against a corpus key at most ``year_band`` years
+      away. Each corpus key is exploded into the years it can match, so
+      the join is an equi-join on the year with the ratio as its
+      residual condition.
+
+    Candidates meet the corpus only, never each other, and both
+    conditions read only a row's key and year, so rows sharing both are
+    dropped or kept together. The corpus side carries no broadcast
+    hint: at scale it is the big side, so the planner chooses."""
     cand = candidates.withColumn("__key", normalize_key(F.col("title")))
     seen = existing.select(
         normalize_key(F.col("title")).alias("__key"), F.col("year")
     ).distinct()
     survivors = anti_join_new_keys(cand, seen, ["__key", "year"])
-
-    # fuzzy: candidates vs existing, year-band blocked (broadcast the
-    # candidate side — incoming batches are small vs the corpus)
-    both = survivors.select(
-        F.concat(F.lit("new:"), F.col("__key"), F.lit("_"), F.col("year")).alias("uid"),
-        F.col("title"),
-        F.col("year"),
-    ).unionByName(
-        existing.select(
-            F.concat(F.lit("old:"), normalize_key(F.col("title")), F.lit("_"), F.col("year")).alias("uid"),
-            F.col("title"),
-            F.col("year"),
-        )
+    near = seen.select(
+        F.col("__key").alias("__old_key"),
+        F.explode(
+            F.sequence(F.col("year") - year_band, F.col("year") + year_band)
+        ).alias("__bucket"),
     )
-    dupes = (
-        fuzzy_pairs(both, "uid", "title", "year", fuzzy_threshold, year_band)
-        .filter(
-            (F.col("a_id").startswith("new:") & F.col("b_id").startswith("old:"))
-            | (F.col("b_id").startswith("new:") & F.col("a_id").startswith("old:"))
-        )
-        .select(
-            F.when(F.col("a_id").startswith("new:"), F.col("a_id"))
-            .otherwise(F.col("b_id"))
-            .alias("dupe_uid")
-        )
-        .distinct()
+    similar = (F.col("year") == F.col("__bucket")) & (
+        levenshtein_ratio(F.col("__key"), F.col("__old_key")) >= fuzzy_threshold
     )
-    survivors = survivors.withColumn(
-        "uid", F.concat(F.lit("new:"), F.col("__key"), F.lit("_"), F.col("year"))
-    )
-    return (
-        survivors.join(
-            F.broadcast(dupes), survivors.uid == dupes.dupe_uid, "left_anti"
-        ).drop("uid", "__key")
-    )
+    return survivors.join(near, similar, "left_anti").drop("__key")
 
 
 def ingest_batch(

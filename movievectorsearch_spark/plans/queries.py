@@ -19,6 +19,10 @@ Reference-parity queries cite reference file:line in their docstrings.
 
 from __future__ import annotations
 
+import atexit
+import functools
+import shutil
+import tempfile
 from collections.abc import Callable
 
 import numpy as np
@@ -60,6 +64,25 @@ from movievectorsearch_spark.operators.knn import knn_batch_literal, knn_topk
 from movievectorsearch_spark.operators import dedup as D
 from movievectorsearch_spark.operators import textanalysis as TA
 from movievectorsearch_spark.operators.upsert import upsert_latest_wins
+
+# ---------------------------------------------------------------------------
+# scratch directories for the entries that write before they read
+# ---------------------------------------------------------------------------
+
+@functools.cache
+def _scratch_root() -> str:
+    """This process's one root for entries' written data, removed at exit."""
+    root = tempfile.mkdtemp(prefix="spark_graft_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A new directory under :func:`_scratch_root` for one entry call:
+    unique per call, so concurrent runs never share a path (an overwrite
+    would delete files another run's lazy read still needs)."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root())
+
 
 # ---------------------------------------------------------------------------
 # deterministic query vectors (the test stand-in for create_embedding,
@@ -1729,8 +1752,6 @@ def partitioned_sink_scan(spark, sf_dir):
     before any row-group I/O (PartitionFilters — asserted in
     tests/test_partitioned.py). Oracle = the same filter+aggregate on
     the unpartitioned view, proving pruning changes I/O, not results."""
-    import tempfile
-
     from movievectorsearch_spark.sources.partitioned import (
         read_partitioned,
         write_partitioned,
@@ -1739,7 +1760,7 @@ def partitioned_sink_scan(spark, sf_dir):
     # unique dir per invocation: a fixed shared path would race with a
     # concurrent bench/check run (overwrite deletes while the other's
     # lazy read is in flight)
-    path = tempfile.mkdtemp(prefix="spark_graft_partitioned_") + "/events"
+    path = _scratch_dir("partitioned_") + "/events"
     e = load_table(spark, sf_dir, "events")
     write_partitioned(e, path, ["event_type"])
     back = read_partitioned(spark, path).filter(F.col("event_type") == "purchase")
@@ -3955,12 +3976,10 @@ def csv_roundtrip_agg(spark, sf_dir):
     aggregated. The oracle runs on the original parquet, so a PASS
     proves the round trip is lossless including doubles (shortest
     round-trip serialization) and microsecond timestamps."""
-    import tempfile
-
     from movievectorsearch_spark.sources.csvio import read_csv, write_csv
 
     o = load_table(spark, sf_dir, "orders")
-    path = tempfile.mkdtemp(prefix="spark_graft_csv_") + "/orders"
+    path = _scratch_dir("csv_") + "/orders"
     write_csv(o, path)
     back = read_csv(spark, path, o.schema)
     return (
@@ -3992,12 +4011,10 @@ def orc_roundtrip_agg(spark, sf_dir):
     aggregated. DuckDB cannot read ORC, so the oracle runs on the
     ORIGINAL parquet — a PASS proves the columnar round trip is
     lossless (doubles, timestamps)."""
-    import tempfile
-
     from movievectorsearch_spark.sources.orcio import read_orc, write_orc
 
     li = load_table(spark, sf_dir, "lineitem")
-    path = tempfile.mkdtemp(prefix="spark_graft_orc_") + "/lineitem"
+    path = _scratch_dir("orc_") + "/lineitem"
     write_orc(li, path)
     back = read_orc(spark, path, li.schema)
     return (
@@ -4033,12 +4050,10 @@ def jsonl_roundtrip_agg(spark, sf_dir):
     microsecond precision, so a PASS proves the round trip is lossless
     for doubles (shortest round-trip serialization) and timestamps
     (explicit micros format, not the truncating default)."""
-    import tempfile
-
     from movievectorsearch_spark.sources.jsonio import read_jsonl, write_jsonl
 
     e = load_table(spark, sf_dir, "events")
-    path = tempfile.mkdtemp(prefix="spark_graft_jsonl_") + "/events"
+    path = _scratch_dir("jsonl_") + "/events"
     write_jsonl(e, path)
     back = read_jsonl(spark, path, e.schema)
     return (
@@ -4529,12 +4544,10 @@ def clustered_scan_agg(spark, sf_dir):
     skipping the layout exists for is asserted with scan metrics in
     tests/test_layout.py (clustered scan reads a fraction of the rows,
     random layout reads all of them)."""
-    import tempfile
-
     from movievectorsearch_spark.sources.layout import write_sort_clustered
 
     e = load_table(spark, sf_dir, "events")
-    path = tempfile.mkdtemp(prefix="spark_graft_cluster_") + "/events"
+    path = _scratch_dir("cluster_") + "/events"
     write_sort_clustered(e, path, "value")
     return (
         spark.read.parquet(path)
@@ -4569,14 +4582,12 @@ def zorder_scan_agg(spark, sf_dir):
     asserted with scan metrics in tests/test_zorder.py (the single-sort
     layout reads 100% on its unsorted dimension, the Z layout prunes
     both)."""
-    import tempfile
-
     from movievectorsearch_spark.sources.layout import write_zorder_clustered
 
     e = load_table(spark, sf_dir, "events").withColumn(
         "cents", _cents("value").cast("bigint")
     )
-    path = tempfile.mkdtemp(prefix="spark_graft_zorder_") + "/events"
+    path = _scratch_dir("zorder_") + "/events"
     write_zorder_clustered(e, path, "user_id", "cents")
     return (
         spark.read.parquet(path)
@@ -4793,10 +4804,8 @@ def _ann_index_dir(spark, sf_dir: str, kind: str, write) -> str:
     path is memoized in the catalog memo under ("index_dir", sf_dir,
     kind), so ``catalog.invalidate(spark, sf_dir)`` makes the next call
     rebuild it."""
-    import tempfile
-
     def build() -> str:
-        path = tempfile.mkdtemp(prefix=f"spark_graft_{kind}_") + "/index"
+        path = _scratch_dir(f"{kind}_") + "/index"
         write(load_table(spark, sf_dir, "embeddings"), path)
         return path
 
@@ -5454,7 +5463,6 @@ def profile_json_lookup(spark, sf_dir):
     schema + point lookup round-trip it exactly."""
     import json
     import os
-    import tempfile
 
     from movievectorsearch_spark.sources.registry import (
         get_profile,
@@ -5997,12 +6005,11 @@ def curate_stream_corpus(spark, sf_dir):
     batch-by-batch in SQL. Any drift in batch boundaries, restart
     semantics, dedup-vs-current-corpus ordering, or the merge rewrite
     hash-fails. Runtime is sf-invariant (fixed 600-record stream)."""
-    import tempfile
     import time as _time
 
     from movievectorsearch_spark.pipeline.curator import curate_stream
 
-    workdir = tempfile.mkdtemp(prefix="mvs_curate_stream_")
+    workdir = _scratch_dir("curate_stream_")
     corpus = f"{workdir}/films"
     sq = curate_stream(
         spark,
@@ -6800,13 +6807,11 @@ def incremental_dedup_store(spark, sf_dir):
     is ever re-read as text, and the probe is an equi-join ~linear in
     batch + store. The store build is cached per sf_dir so repeated
     invocations measure the serve path, like the persisted ANN index."""
-    import tempfile
-
     d = load_table(spark, sf_dir, "documents")
     store_docs = d.filter(F.col("doc_id") % 5 != 0)
     batch_docs = d.filter(F.col("doc_id") % 5 == 0)
     if sf_dir not in _DEDUP_STORE_CACHE:
-        path = tempfile.mkdtemp(prefix="spark_graft_sigstore_") + "/sig"
+        path = _scratch_dir("sigstore_") + "/sig"
         D.minhash_signature(
             store_docs, "doc_id", "text", _MH_N, _SHINGLE_N
         ).write.parquet(path)
@@ -6850,15 +6855,13 @@ def text_roundtrip_agg(spark, sf_dir):
     round trip preserves every doc, key field, and token count (tabs in
     payloads fold to spaces, which whitespace tokenization is invariant
     to)."""
-    import tempfile
-
     from movievectorsearch_spark.sources.textio import (
         read_doc_lines,
         write_doc_lines,
     )
 
     d = load_table(spark, sf_dir, "documents")
-    path = tempfile.mkdtemp(prefix="spark_graft_text_") + "/docs"
+    path = _scratch_dir("text_") + "/docs"
     write_doc_lines(d, path)
     back = read_doc_lines(spark, path)
     return (

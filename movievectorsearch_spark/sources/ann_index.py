@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from movievectorsearch_spark.catalog import invalidate, memoized
+from movievectorsearch_spark.functions.vector import array_expr
 from movievectorsearch_spark.operators.ann import (
     _bucket_of,
     _probe_buckets,
@@ -155,9 +156,14 @@ def write_ivf_index(
     spark = corpus.sparkSession
     invalidate(spark, path)
     assigned.write.mode("overwrite").partitionBy(CELL_COL).parquet(path)
-    cent_rows = [(i, list(map(float, c))) for i, c in enumerate(centroids)]
+    # SQL text of exact double literals, not createDataFrame over Python
+    # rows: the write then starts no Python worker
+    rows = ", ".join(
+        f"named_struct('cell', {i}, 'centroid', {array_expr(c)})"
+        for i, c in enumerate(centroids)
+    )
     (
-        spark.createDataFrame(cent_rows, "cell int, centroid array<double>")
+        spark.sql(f"SELECT inline(array({rows}))")
         .coalesce(1)
         .write.mode("overwrite")
         .parquet(_centroid_path(path))

@@ -4,6 +4,9 @@ and row-parity with the in-memory ANN operators."""
 
 from __future__ import annotations
 
+import struct
+
+import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
@@ -107,6 +110,21 @@ def test_ivf_centroids_roundtrip(spark, ivf_index):
     assert len(got) == len(cents)
     for a, b in zip(got, cents):
         assert a == pytest.approx(b, abs=0)  # doubles round-trip exactly
+
+
+def test_ivf_centroids_roundtrip_bit_exact(spark, sf_dir, tmp_path):
+    """Centroids written as SQL double literals read back with the
+    same bits, including values with no short decimal form, -0.0,
+    a subnormal and the largest finite double."""
+    rng = np.random.default_rng(11)
+    cents = [list(rng.standard_normal(64)) for _ in range(3)]
+    cents[0][:6] = [0.1, 1 / 3, -0.0, 5e-324, -1.7976931348623157e308, 2.0**-1022]
+    path = str(tmp_path / "ivf")
+    e = load_table(spark, sf_dir, "embeddings").filter("vec_id < 20")
+    write_ivf_index(e, path, cents)
+    bits = lambda v: struct.pack(f"<{len(v)}d", *v)  # noqa: E731
+    got = read_ivf_centroids(spark, path)
+    assert [bits(c) for c in got] == [bits(c) for c in cents]
 
 
 def test_ivf_index_probe_reads_only_probed_cells(spark, ivf_index):

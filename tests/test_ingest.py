@@ -3,6 +3,7 @@ upsert (reference curator loop, movie_generator.py:182-238)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from movievectorsearch_spark.pipeline.featurizer import embed_documents, hash_embed
@@ -72,6 +73,74 @@ def test_dedup_against(spark):
     )
     out = [r["title"] for r in dedup_against(cands, existing).collect()]
     assert out == ["Solaris"]
+
+
+def _lev(a: str, b: str) -> int:
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
+def _model_dedup(cands, existing, threshold=0.85, band=1):
+    """The dedup rules in plain Python: drop an exact (key, year) hit,
+    then any candidate whose key has Levenshtein ratio >= threshold with
+    a corpus key at most ``band`` years away. Candidates never meet
+    each other."""
+
+    def key(t):  # normalize_key: Spark's trim strips spaces only
+        return t.strip(" ").lower()
+
+    def ratio(a, b):  # levenshtein_ratio
+        denom = max(len(a), len(b))
+        return 1.0 if denom == 0 else 1.0 - _lev(a, b) / denom
+
+    seen = {(key(t), y) for t, y in existing}
+    return [
+        (t, y) for t, y in cands
+        if (key(t), y) not in seen
+        and not any(abs(y - oy) <= band and ratio(key(t), ok) >= threshold for ok, oy in seen)
+    ]
+
+
+_EDGE_CORPUS = [("Blade Runner", 1982), ("abcdefghijklmnopqrst", 2000)]
+_EDGE_CANDS = [
+    ("blade runner ", 1982),  # exact key after normalization
+    ("Blade Runnr", 1983),  # near title at +1 year: dropped
+    ("Blade Runnr", 1981),  # near title at -1 year: dropped
+    ("Blade Runnr", 1984),  # +2 years: kept
+    ("Blade Runnr", 1980),  # -2 years: kept
+    ("Blade Runner!", 1982),  # one key sent twice near an old title:
+    ("Blade Runner!", 1982),  # both copies dropped
+    ("Solaris", 1972),  # near each other, absent from the corpus:
+    ("Solariss", 1972),  # both kept
+    ("Stalker", 1979),  # one fresh key sent twice: both kept
+    ("Stalker", 1979),
+    ("abcdefghijklmnopqXYZ", 2000),  # ratio exactly 0.85: a duplicate
+    ("abcdefghijklmnopWXYZ", 2000),  # ratio 0.80: kept
+]
+
+
+@pytest.mark.parametrize("corpus", [_EDGE_CORPUS, []], ids=["corpus", "empty_corpus"])
+def test_dedup_against_edge_cases(spark, corpus):
+    schema = "title STRING, year INT"
+    cands = spark.createDataFrame(_EDGE_CANDS, schema)
+    existing = spark.createDataFrame(corpus, schema)
+    got = sorted((r.title, r.year) for r in dedup_against(cands, existing).collect())
+    want = sorted(_model_dedup(_EDGE_CANDS, corpus))
+    assert got == want
+    if corpus:
+        assert 1.0 - _lev("abcdefghijklmnopqxyz", "abcdefghijklmnopqrst") / 20 == 0.85
+        assert want == sorted([
+            ("Blade Runnr", 1984), ("Blade Runnr", 1980), ("Solaris", 1972),
+            ("Solariss", 1972), ("Stalker", 1979), ("Stalker", 1979),
+            ("abcdefghijklmnopWXYZ", 2000),
+        ])
+    else:
+        assert want == sorted(_EDGE_CANDS)
 
 
 def test_ingest_batch_end_to_end(spark):

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -90,6 +91,16 @@ def test_anti_join_broadcasts(spark, sf_dir):
     p = plan_of(spark, sf_dir, "anti_join_new_keys")
     assert "LeftAnti" in p
     assert "CartesianProduct" not in p
+
+
+def test_ingest_pipeline_reads_batch_once(spark, sf_dir):
+    """The exact and fuzzy dedup anti-joins hang off one candidate
+    branch, so the raw batch (built from documents) is scanned once, not
+    once per join side."""
+    p = plan_of(spark, sf_dir, "ingest_pipeline")
+    assert len(re.findall(r"Location: .*documents\.parquet", p)) == 1
+    assert "CartesianProduct" not in p
+    assert "BroadcastNestedLoopJoin" not in p
 
 
 def test_q4_semi_join_not_nested_loop(spark, sf_dir):

@@ -901,3 +901,31 @@ def test_hermetic_reset_restores_first_use_state(spark):
     ]
     # restore the session factory's own value for subsequent tests
     _restore_conf(spark, initial)
+
+
+def test_entry_scratch_dirs_removed_at_exit(tmp_path):
+    """Entries that write before they read get a new directory per
+    call, all under one per-process root that is gone once the process
+    exits."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = (
+        "from movievectorsearch_spark.plans import queries as Q\n"
+        "print(Q._scratch_root())\n"
+        "for _ in range(2):\n"
+        "    print(Q._scratch_dir('x_'))\n"
+    )
+    env = {**os.environ, "TMPDIR": str(tmp_path)}
+    repo = Path(Q.__file__).resolve().parents[2]
+    out = subprocess.run(
+        [sys.executable, "-c", code], env=env, cwd=repo,
+        capture_output=True, text=True, timeout=120, check=True,
+    ).stdout.split()
+    root, a, b = out
+    assert a != b
+    assert os.path.dirname(a) == os.path.dirname(b) == root
+    assert os.path.dirname(root) == str(tmp_path)
+    assert not os.path.exists(root)
